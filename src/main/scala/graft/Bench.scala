@@ -1,11 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.spark.{ExtractConf, ExtractPipeline, PageRow}
+import graft.spark.{ExtractConf, ExtractPipeline, LakehouseIO, PageRow}
 
 /** Driver-run benchmark: times every SparkEntry query, then measures
   * sustained extraction throughput (docs/sec) on a replicated corpus —
-  * the headline metric from BASELINE.md. One JSON line on stdout.
+  * the headline metric from BASELINE.md. One JSON line on stdout:
+  * `queries` times the queries that ran, `failed` names the ones that
+  * threw, and `total` sums `queries` only.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -48,20 +50,26 @@ object Bench {
     // charge a query 5-10x for landing in a slow window. The min of two
     // passes taken minutes apart is a far tighter estimator of the code's
     // cost, and also stops charging pass 1 for cold codegen.
-    def sweep(): Map[String, Double] = SparkEntry.queries.map { case (name, fn) =>
+    // A query that throws is recorded as failed, never as a time: a
+    // failure that returned early would otherwise count as a fast query.
+    def sweep(): Map[String, Option[Double]] = SparkEntry.queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val ok =
+        try { fn(spark, sfDir).count(); true }
+        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); false }
       val dt = (System.nanoTime() - t0) / 1e9
       graft.spark.Caches.drain()
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      name -> dt
+      name -> Option.when(ok)(dt)
     }
     val (s1, s2) = (sweep(), sweep())
-    val results = s1.map { case (k, v) => k -> math.min(v, s2(k)) }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    // failed in either pass = failed
+    val results = s1.map { case (k, v) => k -> v.zip(s2(k)).map { case (a, b) => math.min(a, b) } }
+    val timed = results.collect { case (k, Some(v)) => k -> v }
+    val failed = results.collect { case (k, None) => k }.toSeq.sorted
+    val qs = timed.map { case (k, v) => s"${LakehouseIO.q(k)}:$v" }.mkString("{", ",", "}")
+    val total = timed.values.sum
 
     // sustained-throughput measure: replicated corpus, kernel-dominated,
     // one warm-up pass then one timed pass
@@ -90,7 +98,8 @@ object Bench {
     val (docs, sec) = if (t1 <= t2) (d1, t1) else (d2, t2)
     val tput = docs / sec
 
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s""""failed":${failed.map(LakehouseIO.q).mkString("[", ",", "]")},"sf":${LakehouseIO.q(sfDir)},""" +
       s""""throughput_docs":$docs,"throughput_sec":$sec,"docs_per_sec":$tput,""" +
       s""""docs_per_sec_per_core":${tput / cpus.toInt},"cores":$cpus}"""
     println(json)

@@ -8,6 +8,12 @@ import graft.spark._
   * build session → resolve resume point from the ledger → extract →
   * per-bucket atomic commits with lineage + throughput snapshot → metrics.
   *
+  * The extraction shuffle takes its width from `spark.sql.shuffle.partitions`
+  * plus AQE coalescing (see [[graft.spark.ExtractPipeline]]). The metrics
+  * are the whole table's (engine, status) counts, summed from the bucket
+  * ledgers the commit just wrote: O(#buckets) per run, never a rescan of
+  * `data/`.
+  *
   * This replaces the reference's service lifecycle
   * (/root/reference/src/main.py:78-122: discover engines → register
   * routes → serve → graceful shutdown) with a resumable batch job: a
@@ -89,9 +95,7 @@ object ExtractMain {
     val todo = LakehouseIO.resumeFilter(ExtractPipeline.prepared(pages, conf), a.table)
     val results = ExtractPipeline.extractFrom(todo, conf)
     val ledgers = LakehouseIO.writeCommitted(results, a.table, a.runId, a.input, a.failAfterBuckets)
-    MetricsStage.write(
-      LakehouseIO.readResults(a.table).as[ResultRow](org.apache.spark.sql.Encoders.product[ResultRow]),
-      a.table, a.runId)
+    MetricsStage.writeFromLedgers(a.table, a.runId)
     (ledgers, ledgers.map(_.rows).sum)
   }
 
@@ -116,7 +120,7 @@ object ExtractMain {
       val sec = (System.nanoTime() - t0) / 1e9
       // run summary — the health-endpoint analog (SURVEY.md par 2.7 item 37)
       println(
-        s"""{"event":"run_summary","run_id":"${a.runId}","buckets_committed":${ledgers.size},""" +
+        s"""{"event":"run_summary","run_id":${LakehouseIO.q(a.runId)},"buckets_committed":${ledgers.size},""" +
           s""""rows":$rows,"wall_sec":$sec,"docs_per_sec":${if (sec > 0) rows / sec else 0.0}}""")
     } finally spark.stop()
   }

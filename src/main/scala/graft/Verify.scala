@@ -35,18 +35,9 @@ object Verify {
       graft.spark.Caches.drain()
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // q escapes ALL control chars: a tab or CR in an oracle's SQL would
+    // otherwise make the oracle compare's json.load fail
+    import graft.spark.LakehouseIO.q
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => nameFilter.forall(_.findFirstIn(k).isDefined) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

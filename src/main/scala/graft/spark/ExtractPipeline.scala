@@ -1,13 +1,13 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 
 /** The extraction job spine (SURVEY.md par 3.1 "Spark equivalent"):
   *
   *   pages --size gate--> mapPartitions(kernel)   [map-only, in the scan stage]
-  *     --repartition(buckets*salt, salted url-hash)--> partition-local dedup
+  *     --repartition(salted url-hash)--> partition-local dedup
   *     --> bucketed write
   *
   * One shuffle total, and it carries EXTRACTED RESULTS (text + spans,
@@ -20,6 +20,16 @@ import graft.core._
   * Latest warc_ts wins (deterministic; re-crawled pages keep the newest
   * capture), via a spill-aware sortWithinPartitions rather than a
   * hash-map, so a hot partition cannot OOM.
+  *
+  * The exchange has no partition count of its own: its width is the
+  * session's `spark.sql.shuffle.partitions`, and AQE may coalesce it like
+  * any other exchange. Coalescing merges whole hash partitions, so every
+  * re-crawl of a url still meets in one reduce task. A width computed
+  * from the table shape (`max(buckets, cores) * salt`, 128 tasks at the
+  * defaults) costs more than it buys: a reduce task spends ~30 ms
+  * deserializing itself whatever its input (a map task ~3 ms), so on a
+  * 4-core host 128 small reduce tasks took 2.5-3.0 s of wall time for
+  * ~3 s of CPU.
   *
   * The kernel is a per-executor object (JVM lazy singleton = the
   * reference's double-checked-lock engine cache,
@@ -47,9 +57,8 @@ object ExtractPipeline {
     * bucket-level commit atomicity is preserved by the partitioned write
     * (north_rule: "salted repartition for skewed hosts").
     */
-  def saltedKey(conf: ExtractConf) =
-    concat_ws("#", col("bucket"),
-      pmod(xxhash64(col("url"), lit(0x5a17)), lit(conf.salt)))
+  def saltedKey(bucket: Column, url: Column, salt: Int): Column =
+    concat_ws("#", bucket, pmod(xxhash64(url, lit(0x5a17)), lit(salt)))
 
   /** Ingest prep: derive the commit bucket and apply the cheap Catalyst
     * size gate first (fail-fast ordering — the reference checks size
@@ -67,12 +76,12 @@ object ExtractPipeline {
     * shuffle of the much smaller results on the salted url-hash key,
     * then partition-local dedup (latest warc_ts wins; co-location is
     * guaranteed because the shuffle key is a pure function of url).
-    * Oversized rows skip the kernel but still reach the results table as
-    * answers (error-as-data).
+    * The shuffle's width comes from the session plus AQE (see the object
+    * doc). Oversized rows skip the kernel but still reach the results
+    * table as answers (error-as-data).
     */
   def extractFrom(bucketed: DataFrame, conf: ExtractConf)(implicit spark: SparkSession): Dataset[ResultRow] = {
     import spark.implicits._
-    val numParts = math.max(conf.buckets, spark.sparkContext.defaultParallelism)
     val kernelOut = bucketed
       // warc_ts as raw epoch micros: decoding to java.sql.Timestamp costs
       // an allocation + calendar math per row for a value only compared
@@ -93,9 +102,7 @@ object ExtractPipeline {
         }
       }
     kernelOut
-      .repartition(numParts * conf.salt,
-        concat_ws("#", col("r.bucket"),
-          pmod(xxhash64(col("r.url"), lit(0x5a17)), lit(conf.salt))))
+      .repartition(saltedKey(col("r.bucket"), col("r.url"), conf.salt))
       // spill-aware clustering of re-crawls; ties broken by text so the
       // survivor is deterministic even for same-ts crawls
       .sortWithinPartitions(col("r.url"), col("ts").desc, col("r.text"))

@@ -1,6 +1,8 @@
 package graft.spark
 
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -38,15 +40,48 @@ import org.apache.spark.util.AccumulatorV2
   */
 object LakehouseIO {
 
+  /** One committed bucket's lineage record. `statusCounts` holds the
+    * bucket's rows by (engine, status); `rows` and `okRows` derive from it.
+    */
   final case class BucketLedger(
       bucket: Int,
       runId: String,
-      rows: Long,
-      okRows: Long,
       committedAtMs: Long,
-  )
+      statusCounts: Map[(String, String), Long],
+  ) {
+    def rows: Long = statusCounts.values.sum
+    def okRows: Long = statusCounts.collect { case ((_, graft.core.Status.Ok), n) => n }.sum
+  }
 
-  private def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+  private val Json = new ObjectMapper()
+
+  /** JSON string literal, or `null`. Jackson escapes `\`, `"` and every
+    * control character U+0000-U+001F (RFC 8259 par 7), so any string
+    * reads back exactly.
+    */
+  private[graft] def q(s: String): String = Json.writeValueAsString(s)
+
+  /** The charset the JVM maps local file names through (US-ASCII under a
+    * POSIX locale, where a non-ASCII name cannot be created at all).
+    */
+  private val fileNameCharset =
+    java.nio.charset.Charset.forName(sys.props.getOrElse("sun.jnu.encoding", "UTF-8"))
+
+  /** Whether `runId` can name this layer's files (`_snapshots/<runId>.json`,
+    * `_staging/<runId>/`): a single path component — non-empty, not `.` or
+    * `..`, no `/`, `:` or NUL, encodable in the file-name charset — of at
+    * most 200 UTF-8 bytes, so the receipt's name plus its temp and
+    * checksum suffixes fits a 255-byte file name. Any other character,
+    * control characters included, is stored and read back exactly.
+    */
+  def validRunId(runId: String): Boolean =
+    runId.nonEmpty && runId != "." && runId != ".." &&
+      !runId.exists(c => c == '/' || c == ':' || c == '\u0000') &&
+      fileNameCharset.newEncoder().canEncode(runId) &&
+      runId.getBytes(StandardCharsets.UTF_8).length <= 200
+
+  private def requireRunId(runId: String): Unit =
+    require(validRunId(runId), s"run id ${q(runId)} cannot name a table file")
 
   def ledgerDir(root: String): Path = new Path(root, "_ledger")
   def dataDir(root: String): Path = new Path(root, "data")
@@ -87,32 +122,46 @@ object LakehouseIO {
     else bucketed.filter(!org.apache.spark.sql.functions.col("bucket").isin(done.toSeq: _*))
   }
 
-  /** Per-bucket (rows, okRows) tallied DURING the result write — replaces
-    * the round-1 second scan of the staged parquet. Merge is a map union;
-    * the value is informational lineage (ledger stats), where Spark's
-    * at-least-once accumulator semantics under task retry are acceptable —
-    * commit atomicity never depends on it.
+  /** Per-bucket row counts by (engine, status), tallied DURING the result
+    * write — no second scan of the staged parquet. The adds run in the
+    * write job's result tasks, whose accumulator updates Spark applies
+    * once per partition even when a task is retried, so the counts are
+    * exact: they are the ledger's lineage AND the run's status metrics.
     */
   private final class BucketStatsAcc
-      extends AccumulatorV2[(Int, Boolean), Map[Int, (Long, Long)]] {
-    private val m = scala.collection.mutable.HashMap.empty[Int, (Long, Long)]
+      extends AccumulatorV2[ResultRow, Map[Int, Map[(String, String), Long]]] {
+    private val m = scala.collection.mutable.HashMap.empty[(Int, String, String), Long]
+    private def bump(k: (Int, String, String), n: Long): Unit = m.update(k, m.getOrElse(k, 0L) + n)
     def isZero: Boolean = m.isEmpty
     def copy(): BucketStatsAcc = {
       val c = new BucketStatsAcc
-      m.foreach { case (k, v) => c.m.update(k, v) }
+      c.m ++= m
       c
     }
     def reset(): Unit = m.clear()
-    def add(v: (Int, Boolean)): Unit = {
-      val (rows, ok) = m.getOrElse(v._1, (0L, 0L))
-      m.update(v._1, (rows + 1, if (v._2) ok + 1 else ok))
-    }
-    def merge(other: AccumulatorV2[(Int, Boolean), Map[Int, (Long, Long)]]): Unit =
-      other.value.foreach { case (k, (r, o)) =>
-        val (rows, ok) = m.getOrElse(k, (0L, 0L))
-        m.update(k, (rows + r, ok + o))
+    def add(r: ResultRow): Unit = bump((r.bucket, r.engine, r.status), 1L)
+    def merge(other: AccumulatorV2[ResultRow, Map[Int, Map[(String, String), Long]]]): Unit =
+      other.value.foreach { case (b, counts) =>
+        counts.foreach { case ((engine, status), n) => bump((b, engine, status), n) }
       }
-    def value: Map[Int, (Long, Long)] = m.toMap
+    def value: Map[Int, Map[(String, String), Long]] =
+      m.toSeq.groupMap(_._1._1) { case ((_, engine, status), n) => (engine, status) -> n }
+        .view.mapValues(_.toMap).toMap
+  }
+
+  private def ledgerPath(root: String, bucket: Int): Path =
+    new Path(ledgerDir(root), s"bucket-$bucket.json")
+
+  /** A ledger record; `status_counts` is a sorted list of
+    * `[engine, status, n]` triples.
+    */
+  private def ledgerJson(lg: BucketLedger): String = {
+    val counts = lg.statusCounts.toSeq
+      .sortBy { case ((engine, status), _) => (Option(engine), Option(status)) }
+      .map { case ((engine, status), n) => s"[${q(engine)},${q(status)},$n]" }
+    s"""{"bucket":${lg.bucket},"run_id":${q(lg.runId)},"rows":${lg.rows},""" +
+      s""""ok_rows":${lg.okRows},"committed_at_ms":${lg.committedAtMs},""" +
+      s""""status_counts":[${counts.mkString(",")}]}"""
   }
 
   /** Write results with per-bucket atomic commits; returns committed
@@ -127,6 +176,7 @@ object LakehouseIO {
       failAfterBuckets: Option[Int] = None,
   )(implicit spark: SparkSession): Seq[BucketLedger] = {
     import spark.implicits._
+    requireRunId(runId)
     val t0 = System.currentTimeMillis()
     val staging = stagingDir(root, runId)
     val fs = fsOf(new Path(root))
@@ -139,9 +189,9 @@ object LakehouseIO {
     // par 2.4 item 18), tallied in the same pass that writes the parquet
     val acc = new BucketStatsAcc
     spark.sparkContext.register(acc, s"bucketStats-$runId")
-    val instrumented = results.map { r => acc.add((r.bucket, r.status == graft.core.Status.Ok)); r }
+    val instrumented = results.map { r => acc.add(r); r }
     instrumented.write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-    val stats: Map[Int, (Long, Long)] = acc.value
+    val stats = acc.value
 
     val bucketDirs =
       (if (fs.isDirectory(staging)) fs.listStatus(staging).toSeq else Seq.empty)
@@ -163,12 +213,8 @@ object LakehouseIO {
         if (fs.exists(dst)) fs.delete(dst, true) // stale partial from a dead run
         if (!fs.rename(src, dst))
           throw new java.io.IOException(s"commit rename failed: $src -> $dst")
-        val (rows, ok) = stats.getOrElse(b, (0L, 0L))
-        val lg = BucketLedger(b, runId, rows, ok, System.currentTimeMillis())
-        val json =
-          s"""{"bucket":${lg.bucket},"run_id":${q(lg.runId)},"rows":${lg.rows},""" +
-            s""""ok_rows":${lg.okRows},"committed_at_ms":${lg.committedAtMs}}"""
-        atomicWrite(new Path(ledgerDir(root), s"bucket-$b.json"), json)
+        val lg = BucketLedger(b, runId, System.currentTimeMillis(), stats.getOrElse(b, Map.empty))
+        atomicWrite(ledgerPath(root, b), ledgerJson(lg))
         ledgers += lg
         committed += 1
       }
@@ -217,39 +263,63 @@ object LakehouseIO {
       .option("basePath", dataDir(root).toString)
       .parquet(dataDir(root).toString)
 
-  /** Parsed ledger records of all committed buckets (the table's commit
-    * history — one record per bucket, fields as written by
-    * [[writeCommitted]]).
+  /** The JSON metadata files in `dir` whose names pass `keep`, parsed. A
+    * file that is not a JSON object throws.
     */
-  def bucketLedgers(root: String): Seq[BucketLedger] = {
-    val dir = ledgerDir(root)
+  private def readMetaFiles(dir: Path, keep: String => Boolean): Seq[(Path, JsonNode)] = {
     val fs = fsOf(dir)
     if (!fs.isDirectory(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        n.startsWith("bucket-") && n.endsWith(".json")
-      }
-      .map { st =>
-        val in = fs.open(st.getPath)
-        val content =
-          try {
-            val buf = new Array[Byte](st.getLen.toInt)
-            in.readFully(0, buf)
-            new String(buf, StandardCharsets.UTF_8)
-          } finally in.close()
-        def num(k: String): Long =
-          ("\"" + k + "\":(\\d+)").r.findFirstMatchIn(content)
-            .getOrElse(throw new java.io.IOException(s"ledger ${st.getPath}: missing $k"))
-            .group(1).toLong
-        val runId = "\"run_id\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(content)
-          .getOrElse(throw new java.io.IOException(s"ledger ${st.getPath}: missing run_id"))
-          .group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-        BucketLedger(num("bucket").toInt, runId, num("rows"), num("ok_rows"),
-          num("committed_at_ms"))
-      }
-      .sortBy(_.bucket)
+    fs.listStatus(dir).toSeq.filter(st => keep(st.getPath.getName)).map { st =>
+      val in = fs.open(st.getPath)
+      val j = try Json.readTree(in) finally in.close()
+      if (j == null || !j.isObject) throw new java.io.IOException(s"${st.getPath}: not a JSON object")
+      st.getPath -> j
+    }
   }
+
+  private def field(j: JsonNode, k: String, p: Path): JsonNode =
+    Option(j.get(k)).getOrElse(throw new java.io.IOException(s"$p: missing $k"))
+
+  private def num(j: JsonNode, k: String, p: Path): Long = {
+    val v = field(j, k, p)
+    if (!v.isIntegralNumber) throw new java.io.IOException(s"$p: $k is not an integer")
+    v.asLong
+  }
+
+  private def str(j: JsonNode, k: String, p: Path): String = {
+    val v = field(j, k, p)
+    if (!v.isTextual) throw new java.io.IOException(s"$p: $k is not a string")
+    v.textValue
+  }
+
+  /** Parsed ledger records of all committed buckets (the table's commit
+    * history — one record per bucket, fields as written by
+    * [[writeCommitted]]). A record without its status counts, or whose
+    * counts do not sum to its rows, throws.
+    */
+  def bucketLedgers(root: String): Seq[BucketLedger] =
+    readMetaFiles(ledgerDir(root), n => n.startsWith("bucket-") && n.endsWith(".json")).map { case (p, j) =>
+      val counts = field(j, "status_counts", p).elements.asScala.map { e =>
+        def text(v: JsonNode): String =
+          if (v.isNull) null
+          else if (v.isTextual) v.textValue
+          else throw new java.io.IOException(s"$p: malformed status_counts entry $e")
+        if (!e.isArray || e.size != 3 || !e.get(2).isIntegralNumber)
+          throw new java.io.IOException(s"$p: malformed status_counts entry $e")
+        (text(e.get(0)), text(e.get(1))) -> e.get(2).asLong
+      }.toMap
+      val lg = BucketLedger(num(j, "bucket", p).toInt, str(j, "run_id", p),
+        num(j, "committed_at_ms", p), counts)
+      if (lg.rows != num(j, "rows", p))
+        throw new java.io.IOException(s"$p: status_counts sum to ${lg.rows}, rows says ${num(j, "rows", p)}")
+      lg
+    }.sortBy(_.bucket)
+
+  /** Whole-table row counts by (engine, status), summed from the bucket
+    * ledgers: O(#buckets), and no file under `data/` is read.
+    */
+  def statusCounts(root: String): Map[(String, String), Long] =
+    bucketLedgers(root).flatMap(_.statusCounts).groupMapReduce(_._1)(_._2)(_ + _)
 
   /** Time-travel read: the table as of a past instant — only buckets whose
     * ledger commit time is <= `asOfMs` (the stand-in for Iceberg's
@@ -332,7 +402,8 @@ object LakehouseIO {
       deleteUrls: DataFrame, runId: String,
       failDuringSwapOf: Option[Int] = None)
       (implicit spark: SparkSession): Seq[Int] = {
-    import org.apache.spark.sql.functions.{col, count, lit, sum, when}
+    import org.apache.spark.sql.functions.col
+    requireRunId(runId)
     val t0 = System.currentTimeMillis()
     val fs = fsOf(new Path(root))
     repairCompaction(root) // self-heal a crashed swap before reading
@@ -355,12 +426,12 @@ object LakehouseIO {
       .unionByName(up.select(current.columns.map(col).toIndexedSeq: _*))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     next.write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
-    val stats: Map[Int, (Long, Long)] = next.groupBy("bucket")
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("status") === graft.core.Status.Ok, 1L).otherwise(0L)).as("ok"))
-      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val stats: Map[Int, Map[(String, String), Long]] = next.groupBy("bucket", "engine", "status")
+      .count().collect().toSeq
+      .groupMap(_.getInt(0))(r => (r.getString(1), r.getString(2)) -> r.getLong(3))
+      .view.mapValues(_.toMap).toMap
     next.unpersist(blocking = false)
-    affected.foreach { b =>
+    val ledgers = affected.map { b =>
       val src = new Path(staging, s"bucket=$b")
       val dst = new Path(dataDir(root), s"bucket=$b")
       val trash = new Path(maintenanceDir(root), s"trash-$b")
@@ -382,18 +453,16 @@ object LakehouseIO {
         }
       } // else: every row of the bucket died — directory stays absent
       fs.delete(trash, true)
-      val (rows, ok) = stats.getOrElse(b, (0L, 0L))
-      atomicWrite(new Path(ledgerDir(root), s"bucket-$b.json"),
-        s"""{"bucket":$b,"run_id":${q(runId)},"rows":$rows,""" +
-          s""""ok_rows":$ok,"committed_at_ms":${System.currentTimeMillis()}}""")
+      val lg = BucketLedger(b, runId, System.currentTimeMillis(), stats.getOrElse(b, Map.empty))
+      atomicWrite(ledgerPath(root, b), ledgerJson(lg))
+      lg
     }
     val seqNum = (snapshotHistory(root).map(_.seq) :+ 0L).max + 1
-    val rows = stats.values.map(_._1).sum
     val tableRows = bucketLedgers(root).map(_.rows).sum
     atomicWrite(new Path(snapshotsDir(root), s"$runId.json"),
       s"""{"run_id":${q(runId)},"input":${q("applyChanges")},"seq":$seqNum,"op":"overwrite",""" +
         s""""committed_buckets":[${affected.mkString(",")}],""" +
-        s""""rows":$rows,"ok_rows":${stats.values.map(_._2).sum},""" +
+        s""""rows":${ledgers.map(_.rows).sum},"ok_rows":${ledgers.map(_.okRows).sum},""" +
         s""""table_rows":$tableRows,""" +
         s""""wall_ms":${System.currentTimeMillis() - t0},"docs_per_sec":0.0,""" +
         s""""committed_at_ms":${System.currentTimeMillis()}}""")
@@ -623,38 +692,17 @@ object LakehouseIO {
       tsMs: Long, buckets: Seq[Int], seq: Long, op: String, tableRows: Long)
 
   /** Committed-run history, parsed from the `_snapshots/` receipts the
-    * commit protocol writes (the same minimal-extractor style as
-    * [[bucketLedgers]]). Ordered by commit time.
+    * commit protocol writes. Ordered by commit time.
     */
   private def snapshotHistory(root: String): Seq[SnapRec] = {
-    val dir = snapshotsDir(root)
-    val fs = fsOf(dir)
-    if (!fs.isDirectory(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".json")).map { st =>
-      val in = fs.open(st.getPath)
-      val content = try {
-        val buf = new Array[Byte](st.getLen.toInt)
-        in.readFully(0, buf)
-        new String(buf, StandardCharsets.UTF_8)
-      } finally in.close()
-      def num(k: String): Long =
-        ("\"" + k + "\":(\\d+)").r.findFirstMatchIn(content)
-          .getOrElse(throw new java.io.IOException(s"snapshot ${st.getPath}: missing $k"))
-          .group(1).toLong
-      val runId = "\"run_id\":\"((?:[^\"\\\\]|\\\\.)*)\"".r.findFirstMatchIn(content)
-        .getOrElse(throw new java.io.IOException(s"snapshot ${st.getPath}: missing run_id"))
-        .group(1).replace("\\\"", "\"").replace("\\\\", "\\")
-      val buckets = "\"committed_buckets\":\\[([0-9,]*)\\]".r
-        .findFirstMatchIn(content).map(_.group(1)).getOrElse("")
-      val seq = "\"seq\":(\\d+)".r.findFirstMatchIn(content)
-        .map(_.group(1).toLong).getOrElse(-1L)
-      val op = "\"op\":\"(\\w+)\"".r.findFirstMatchIn(content)
-        .map(_.group(1)).getOrElse("append")
-      val tableRows = "\"table_rows\":(\\d+)".r.findFirstMatchIn(content)
-        .map(_.group(1).toLong).getOrElse(-1L) // pre-r5 receipts: unknown
-      SnapRec(runId, num("rows"), num("ok_rows"), num("committed_at_ms"),
-        if (buckets.isEmpty) Seq.empty else buckets.split(",").map(_.trim.toInt).toSeq,
-        seq, op, tableRows)
+    readMetaFiles(snapshotsDir(root), _.endsWith(".json")).map { case (p, j) =>
+      def optNum(k: String): Long = if (j.has(k)) num(j, k, p) else -1L
+      val buckets = Option(j.get("committed_buckets")).toSeq.flatMap(_.elements.asScala.map(_.asInt))
+      SnapRec(str(j, "run_id", p), num(j, "rows", p), num(j, "ok_rows", p),
+        num(j, "committed_at_ms", p), buckets,
+        optNum("seq"), // pre-seq receipts: numbered below
+        if (j.has("op")) str(j, "op", p) else "append",
+        optNum("table_rows")) // pre-r5 receipts: unknown
     }.sortBy(r => (r.tsMs, r.runId)) match {
       // receipts written before the seq field (or hand-placed) get
       // positional numbers filled monotonically AFTER the persisted ones
@@ -752,7 +800,7 @@ object LakehouseIO {
       s"""{"snapshot-id":$sid,"sequence-number":${sn.seq},""" +
         s""""timestamp-ms":${sn.tsMs},"schema-id":0,""" +
         s""""manifest-list":${q(new Path(mdir, s"snap-$sid-manifest-list.json").toString)},""" +
-        s""""summary":{"operation":"${sn.op}",""" +
+        s""""summary":{"operation":${q(sn.op)},""" +
         s""""added-data-files":${q(sn.buckets.length.toString)},""" +
         s""""added-records":${q(sn.rows.toString)},""" +
         (if (emitDeleted) s""""deleted-records":${q(deleted.toString)},""" else "") +

@@ -78,8 +78,20 @@ object MetricsStage {
       .agg(count(lit(1)).as("n"), grouping_id().as("lvl"))
 
   /** Persist the run's metrics next to the table (parity with /metrics). */
-  def write(results: Dataset[ResultRow], root: String, runId: String)(implicit spark: SparkSession): Unit = {
-    statusCounts(results).withColumn("run_id", lit(runId))
-      .write.mode("append").parquet(s"$root/_metrics/status_counts")
+  def write(results: Dataset[ResultRow], root: String, runId: String)(implicit spark: SparkSession): Unit =
+    append(statusCounts(results), root, runId)
+
+  /** What `write(readResults(root), root, runId)` persists — whole-table
+    * (engine, status) counts — summed from the bucket ledgers instead:
+    * O(#buckets), and no file under `data/` is read.
+    */
+  def writeFromLedgers(root: String, runId: String)(implicit spark: SparkSession): Unit = {
+    import spark.implicits._
+    val counts = LakehouseIO.statusCounts(root).toSeq.map { case ((engine, status), n) => (engine, status, n) }
+    append(counts.toDF("engine", "status", "n").coalesce(1), root, runId) // one file per run
   }
+
+  private def append(counts: DataFrame, root: String, runId: String): Unit =
+    counts.withColumn("run_id", lit(runId))
+      .write.mode("append").parquet(s"$root/_metrics/status_counts")
 }

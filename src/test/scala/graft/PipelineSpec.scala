@@ -180,11 +180,16 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("salted repartition balances partitions despite the skewed host") {
     implicit val s: SparkSession = spark
     import s.implicits._
-    val bucketed = ExtractPipeline.prepared(PagesGen.fromDocuments(spark, sfDir), conf)
-    val parts = bucketed
-      .repartition(conf.buckets * conf.salt, ExtractPipeline.saltedKey(conf))
-      .mapPartitions(it => Iterator.single(it.size))
-      .collect()
+    // the spine's own exchange, uncoalesced so every reduce task shows:
+    // its width is the session's shuffle-partition count
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    val parts =
+      try ExtractPipeline.run(PagesGen.fromDocuments(spark, sfDir), conf)
+        .mapPartitions(it => Iterator.single(it.size))
+        .collect()
+      finally spark.conf.unset(coalesce)
+    assert(parts.length == spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val nonEmpty = parts.filter(_ > 0)
     val mean = nonEmpty.sum.toDouble / nonEmpty.length
     assert(nonEmpty.max <= mean * 3 + 8,
@@ -205,6 +210,118 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val hist = MetricsStage.sizeHistogram(
       PagesGen.fromDocuments(spark, sfDir).toDF()).collect()
     assert(hist.map(_.getLong(1)).sum == 525) // pre-dedup rows incl. re-crawls
+  }
+
+  /** `_metrics/status_counts` as one run wrote it. */
+  private def metricsOf(root: String, runId: String): Map[(String, String), Long] =
+    spark.read.parquet(s"$root/_metrics/status_counts").filter(col("run_id") === runId)
+      .select("engine", "status", "n").collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+
+  /** Whole-table status counts by rescanning `data/`. */
+  private def rescanCounts(root: String): Map[(String, String), Long] = {
+    implicit val s: SparkSession = spark
+    MetricsStage.statusCounts(
+      LakehouseIO.readResults(root).as[ResultRow](org.apache.spark.sql.Encoders.product[ResultRow]))
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+  }
+
+  private def job(table: String, runId: String, failAfterBuckets: Option[Int] = None) =
+    ExtractMain.runJob(spark, ExtractMain.Args(input = sfDir, table = table, runId = runId,
+      buckets = conf.buckets, salt = conf.salt, maxBytes = conf.maxBytes,
+      failAfterBuckets = failAfterBuckets))
+
+  test("metrics from the ledgers equal a rescan: fresh run, crash + resume, applyChanges + no-op run") {
+    implicit val s: SparkSession = spark
+    val sq = spark; import sq.implicits._
+    val fresh = tmpDir("metrics-fresh")
+    job(fresh, "m1")
+    val whole = rescanCounts(fresh)
+    assert(whole.values.sum == results.length)
+    assert(metricsOf(fresh, "m1") == whole)
+
+    val crashed = tmpDir("metrics-crash")
+    intercept[RuntimeException](job(crashed, "c1", failAfterBuckets = Some(3)))
+    job(crashed, "c2")
+    assert(metricsOf(crashed, "c2") == whole, "a resumed run reports the whole table")
+
+    // flip one ok row to an error and delete another: the rewritten
+    // ledgers carry the new counts, and a no-op run publishes them
+    val enc = org.apache.spark.sql.Encoders.product[ResultRow]
+    val Array(flip, gone) = results.filter(_.status == core.Status.Ok).take(2)
+    LakehouseIO.applyChanges(fresh,
+      spark.createDataset(Seq(flip.copy(status = core.Status.Error, error_code = "x")))(enc),
+      Seq((gone.url, gone.bucket)).toDF("url", "bucket"), "chg")
+    val (noop, _) = job(fresh, "m2")
+    assert(noop.isEmpty)
+    val changed = rescanCounts(fresh)
+    assert(changed != whole)
+    assert(metricsOf(fresh, "m2") == changed)
+  }
+
+  test("the metrics write reads no file under data/") {
+    implicit val s: SparkSession = spark
+    val root = tmpDir("metrics-no-data")
+    job(root, "d1")
+    val want = rescanCounts(root)
+    val data = Paths.get(LakehouseIO.dataDir(root).toUri.getPath)
+    val aside = data.resolveSibling("data-aside")
+    Files.move(data, aside)
+    try MetricsStage.writeFromLedgers(root, "d2")
+    finally Files.move(aside, data)
+    assert(metricsOf(root, "d2") == want)
+  }
+
+  test("a ledger without status counts fails loudly") {
+    implicit val s: SparkSession = spark
+    val root = tmpDir("ledger-old")
+    job(root, "o1")
+    val b = LakehouseIO.committedBuckets(root).min
+    LakehouseIO.atomicWrite(new org.apache.hadoop.fs.Path(LakehouseIO.ledgerDir(root), s"bucket-$b.json"),
+      s"""{"bucket":$b,"run_id":"o1","rows":3,"ok_rows":3,"committed_at_ms":1}""")
+    val e = intercept[java.io.IOException](MetricsStage.writeFromLedgers(root, "o2"))
+    assert(e.getMessage.contains("missing status_counts"))
+  }
+
+  test("run ids round-trip through writeCommitted -> bucketLedgers (ScalaCheck)") {
+    implicit val s: SparkSession = spark
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import com.fasterxml.jackson.databind.ObjectMapper
+    val enc = org.apache.spark.sql.Encoders.product[ResultRow]
+    val rows = results.take(6).toSeq
+    val ds = spark.createDataset(rows)(enc).cache()
+    // control characters, JSON metacharacters and non-ASCII, with a
+    // sprinkling of characters no file name may hold (those must be
+    // refused up front, never half-written)
+    val piece = Gen.frequency(
+      20 -> Gen.choose('\u0000', '\u001f').map(_.toString),
+      10 -> Gen.oneOf("\"", "\\", " ", ".", "\u007f"),
+      10 -> Gen.alphaNumChar.map(_.toString),
+      1 -> Gen.oneOf("é", "中", "😀"), // refused where file names are ASCII
+      1 -> Gen.oneOf("/", ":"),
+      1 -> org.scalacheck.Arbitrary.arbChar.arbitrary.map(_.toString))
+    val runIds = Gen.choose(0, 16).flatMap(n => Gen.listOfN(n, piece)).map(_.mkString)
+    val m = new ObjectMapper()
+    var accepted = 0
+    val prop = Prop.forAll(runIds) { runId =>
+      val root = tmpDir("runid")
+      val ok =
+        try {
+          LakehouseIO.writeCommitted(ds, root, runId, runId)
+          accepted += 1
+          val md = m.readTree(Files.readString(Paths.get(root, "metadata", "v1.metadata.json")))
+          LakehouseIO.bucketLedgers(root).map(_.runId).toSet == Set(runId) &&
+            md.get("snapshots").size == 1
+        } catch {
+          case _: IllegalArgumentException => !LakehouseIO.validRunId(runId)
+        }
+      ok
+    }
+    val res = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(60).withInitialSeed(org.scalacheck.rng.Seed(7L)), prop)
+    ds.unpersist()
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    assert(accepted >= 15, s"only $accepted of the generated run ids were accepted")
   }
 
   test("lakehouse commit protocol works against an explicit file:// URI root") {

@@ -72,6 +72,21 @@ class PlanCheckSpec extends AnyFunSuite with BeforeAndAfterAll {
       "control: the global-window plan should contain an unpartitioned WindowExec")
   }
 
+  test("extraction spine: ONE exchange, repartition-by-column so AQE may size it") {
+    // The salted exchange carries no partition count of its own: a
+    // REPARTITION_BY_NUM origin (a computed width) is one AQE may not
+    // coalesce, and a second exchange would move the results twice.
+    import org.apache.spark.sql.execution.exchange.REPARTITION_BY_COL
+    implicit val s: SparkSession = spark
+    val p = graft.spark.ExtractPipeline.run(
+      graft.gen.PagesGen.fromDocuments(spark, sfDir), graft.spark.ExtractConf())
+      .queryExecution.executedPlan
+    val ex = shuffles(p)
+    assert(ex.length == 1, s"spine: expected exactly one exchange, got ${ex.length}:\n$p")
+    assert(ex.head.shuffleOrigin == REPARTITION_BY_COL,
+      s"spine: exchange origin is ${ex.head.shuffleOrigin}, not REPARTITION_BY_COL:\n$p")
+  }
+
   test("map-only family: ZERO exchange, zero joins of any kind") {
     // Per-row transform queries — parse/normalize/classify work that at
     // 10^12 docs must stay embarrassingly parallel. A shuffle appearing
