@@ -72,25 +72,13 @@ object ScalingBench {
     s
   }
 
-  /** One timed pass: scan -> pipeline -> consume every text byte.
-    * SPARK_GRAFT_MAPONLY=1 skips the dedup shuffle (dev diagnostic for
-    * attributing cost between the map stage and the exchange).
-    */
+  /** One timed pass: scan -> pipeline -> consume every text byte. */
   def timedRun(spark: SparkSession, corpus: String, conf: ExtractConf): (Long, Double) = {
     implicit val s: SparkSession = spark
     import s.implicits._
     val pages = spark.read.parquet(corpus).as[PageRow]
-    val mapOnly = sys.env.get("SPARK_GRAFT_MAPONLY").contains("1")
     val t0 = System.nanoTime()
-    val results =
-      if (mapOnly) {
-        val bucketed = ExtractPipeline.prepared(pages, conf)
-        bucketed.select(col("url"), col("warc_ts"), col("html"), col("status_pre"), col("bucket"))
-          .as[(String, java.sql.Timestamp, Array[Byte], String, Int)]
-          .mapPartitions(_.map { case (url, ts, html, pre, b) =>
-            ExtractPipeline.Kernel.process(url, html, pre, b, conf)
-          }).toDF()
-      } else ExtractPipeline.run(pages, conf).toDF()
+    val results = ExtractPipeline.run(pages, conf).toDF()
     val agg = results
       .agg(count(lit(1)), sum(length(col("text"))), sum(col("pages")))
       .collect()(0)

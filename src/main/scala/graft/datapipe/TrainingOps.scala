@@ -7250,8 +7250,9 @@ object TrainingOps extends Serializable {
     * hand parsers miss: exactly one comma between members, no trailing
     * commas, ASCII digits only with no leading zeros, ASCII hex in
     * `\\uXXXX`) > bad_schema (grammar-valid but
-    * semantically wrong: unknown dtype, missing / duplicate / unknown
-    * tensor key, offsets arity ≠ 2 or begin > end, end−begin ≠
+    * semantically wrong: an unsigned integer past int64, unknown
+    * dtype, missing / duplicate / unknown tensor key, offsets arity ≠ 2
+    * or begin > end, end−begin ≠
     * prod(shape)·itemsize with multiplyExact overflow armor, duplicate
     * tensor name, or a non-contiguous / overlapping offset cover — the
     * spec requires tensors to tile the buffer from 0 gap-free) >
@@ -7333,14 +7334,23 @@ object TrainingOps extends Serializable {
                 if (bad || p >= nn) None else { p += 1; Some(sb.toString) }
               }
             }
+            // parse: collect (name, dtype, shape, offsets) per tensor;
+            // grammar failure → bad_json, semantic failure → bad_schema
+            var fail: String = null
+            def failJson(): Unit = if (fail == null) fail = "bad_json"
+            def failSchema(): Unit = if (fail == null) fail = "bad_schema"
             def uint(): Option[Long] = {
               // ASCII digits only (isDigit admits Unicode numerals) and
-              // no leading zeros — the JSON number grammar
+              // no leading zeros — the JSON number grammar; a valid
+              // number past Long.MaxValue is the overflow rung
               val s0 = p
               while (p < nn && s(p) >= '0' && s(p) <= '9') p += 1
-              if (p == s0 || p - s0 > 18 ||
-                (p - s0 > 1 && s(s0) == '0')) None
-              else Some(s.substring(s0, p).toLong)
+              if (p == s0 || (p - s0 > 1 && s(s0) == '0')) None
+              else {
+                val v = s.substring(s0, p).toLongOption
+                if (v.isEmpty) failSchema()
+                Some(v.getOrElse(Long.MaxValue))
+              }
             }
             def uintArray(): Option[Seq[Long]] = {
               if (p >= nn || s(p) != '[') None
@@ -7363,14 +7373,9 @@ object TrainingOps extends Serializable {
                 if (bad) None else Some(out.toSeq)
               }
             }
-            // parse: collect (name, dtype, shape, offsets) per tensor;
-            // grammar failure → bad_json, semantic failure → bad_schema
             final case class T(name: String, dtype: String, shape: Seq[Long],
               b0: Long, b1: Long)
             val tensors = scala.collection.mutable.ArrayBuffer.empty[T]
-            var fail: String = null
-            def failJson(): Unit = if (fail == null) fail = "bad_json"
-            def failSchema(): Unit = if (fail == null) fail = "bad_schema"
             ws()
             if (p >= nn || s(p) != '{') failJson()
             else {

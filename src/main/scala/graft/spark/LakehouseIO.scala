@@ -19,9 +19,14 @@ import org.apache.spark.util.AccumulatorV2
   * Hadoop-compatible store (rename-atomicity caveat: object stores
   * without atomic rename — raw S3A — need the Iceberg swap or an
   * S3-committer underneath, exactly as they do for Spark's own output
-  * committers). Local paths resolve through RawLocalFileSystem, where
-  * rename is the same atomic rename(2) the earlier java.nio
-  * implementation used.
+  * committers). `file:` paths resolve to the layer's own local FS,
+  * [[NioLocalFileSystem]], on the driver (ledgers, receipts, Iceberg
+  * metadata, renames, mkdirs) and in every Spark write of the table
+  * ([[writeParquet]]). Hadoop's default local FS, lacking libhadoop,
+  * starts one `chmod` process per file, `.crc` file and directory it
+  * creates — hundreds per commit; this one sets the same mode bits
+  * in-process and writes the same files. Rename is still the atomic
+  * rename(2) underneath. Other schemes are untouched.
   *
   * Layout under the table root:
   *   data/bucket=N/ (parquet)  committed results (rename = commit point)
@@ -88,14 +93,47 @@ object LakehouseIO {
   def snapshotsDir(root: String): Path = new Path(root, "_snapshots")
   def stagingDir(root: String, runId: String): Path = new Path(new Path(root, "_staging"), runId)
 
-  /** FileSystem for a path: the Spark session's Hadoop conf when one is
-    * active (cluster credentials, fs.defaultFS), a vanilla conf otherwise.
-    */
-  private def fsOf(p: Path): FileSystem = {
-    val conf = SparkSession.getActiveSession
+  private def hadoopConf: Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
-    p.getFileSystem(conf)
+
+  /** Hadoop settings that resolve `file:` to [[NioLocalFileSystem]],
+    * uncached so Hadoop's cached default local FS does not answer
+    * instead. They build [[localFs]], and every Spark write of the table
+    * takes them as writer options ([[writeParquet]]): Spark merges writer
+    * options into that write's Hadoop conf, which the task-side writers
+    * and the commit protocol both use.
+    */
+  private val localFsSettings = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** The one [[NioLocalFileSystem]] behind every driver-side `file:` touch,
+    * configured from the Hadoop conf in force at its first use (as
+    * Hadoop's own FileSystem cache is).
+    */
+  private lazy val localFs: FileSystem = {
+    val conf = new Configuration(hadoopConf)
+    localFsSettings.foreach { case (k, v) => conf.set(k, v) }
+    FileSystem.get(java.net.URI.create("file:///"), conf)
+  }
+
+  /** FileSystem for a path: [[localFs]] for the `file` scheme; otherwise
+    * Hadoop's resolution through the Spark session's Hadoop conf when one
+    * exists (cluster credentials, fs.defaultFS), a vanilla conf if not.
+    */
+  private[graft] def fsOf(p: Path): FileSystem = {
+    val conf = hadoopConf
+    val scheme = Option(p.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    if (scheme == "file") localFs else p.getFileSystem(conf)
+  }
+
+  /** The table layer's one Spark write: `df` as parquet at `path`. */
+  private[graft] def writeParquet(df: Dataset[_], path: Path, mode: String,
+      partitionCols: String*): Unit = {
+    val w = df.write.options(localFsSettings).mode(mode)
+    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(path.toString)
   }
 
   /** Buckets already committed (ledger record exists). */
@@ -190,7 +228,7 @@ object LakehouseIO {
     val acc = new BucketStatsAcc
     spark.sparkContext.register(acc, s"bucketStats-$runId")
     val instrumented = results.map { r => acc.add(r); r }
-    instrumented.write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
+    writeParquet(instrumented, staging, "overwrite", "bucket")
     val stats = acc.value
 
     val bucketDirs =
@@ -425,7 +463,7 @@ object LakehouseIO {
     val next = current.join(changeKeys, Seq("url"), "left_anti")
       .unionByName(up.select(current.columns.map(col).toIndexedSeq: _*))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    next.write.mode("overwrite").partitionBy("bucket").parquet(staging.toString)
+    writeParquet(next, staging, "overwrite", "bucket")
     val stats: Map[Int, Map[(String, String), Long]] = next.groupBy("bucket", "engine", "status")
       .count().collect().toSeq
       .groupMap(_.getInt(0))(r => (r.getString(1), r.getString(2)) -> r.getLong(3))
@@ -562,9 +600,8 @@ object LakehouseIO {
         val tmp = new Path(maintenanceDir(root), s"compact-$b")
         val trash = new Path(maintenanceDir(root), s"trash-$b")
         Seq(tmp, trash).foreach(p => if (fs.exists(p)) fs.delete(p, true))
-        spark.read.parquet(st.getPath.toString)
-          .coalesce(maxFilesPerBucket)
-          .write.mode("overwrite").parquet(tmp.toString)
+        writeParquet(spark.read.parquet(st.getPath.toString).coalesce(maxFilesPerBucket),
+          tmp, "overwrite")
         if (!fs.rename(st.getPath, trash))
           throw new java.io.IOException(s"compact: move-aside failed for bucket $b")
         if (!fs.rename(tmp, st.getPath)) {
@@ -618,11 +655,6 @@ object LakehouseIO {
     n
   }
 
-  /** Write-temp-then-rename through the Hadoop FS. Ledger and snapshot
-    * names are unique per (bucket | runId), so the delete-before-rename
-    * replace path only ever runs for idempotent re-writes of the same
-    * content.
-    */
   // ---- Iceberg-spec metadata projection --------------------------------
   // The custom ledger/_snapshots machinery above is this layer's commit
   // TRUTH; the files below are the same history re-expressed as Iceberg
@@ -832,6 +864,16 @@ object LakehouseIO {
     out
   }
 
+  /** Write-temp-then-rename through the Hadoop FS. `rename` will not
+    * replace an existing file, so an existing `path` is deleted first, and
+    * that replace path is not atomic: between the delete and the rename,
+    * `path` is absent, and a crash there leaves only `<name>.tmp`. It
+    * runs whenever a file is rewritten, not only for identical content:
+    * [[applyChanges]] rewrites `_ledger/bucket-N.json` with a new run id
+    * and new counts, and every commit rewrites
+    * `metadata/version-hint.text`. While a ledger is absent its bucket
+    * reads as uncommitted.
+    */
   def atomicWrite(path: Path, content: String): Unit = {
     val fs = fsOf(path)
     val tmp = new Path(path.getParent, path.getName + ".tmp")

@@ -92,6 +92,6 @@ object MetricsStage {
   }
 
   private def append(counts: DataFrame, root: String, runId: String): Unit =
-    counts.withColumn("run_id", lit(runId))
-      .write.mode("append").parquet(s"$root/_metrics/status_counts")
+    LakehouseIO.writeParquet(counts.withColumn("run_id", lit(runId)),
+      new org.apache.hadoop.fs.Path(s"$root/_metrics/status_counts"), "append")
 }

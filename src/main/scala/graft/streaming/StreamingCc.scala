@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
+import graft.spark.LakehouseIO
 
 /** Streaming Common-Crawl ingest: the m10 gzip→WARC→HTTP segment walker
   * ([[graft.datapipe.TrainingOps.ccReader]]) driven by Structured
@@ -48,7 +49,7 @@ object StreamingCc {
     // dir-exists idempotence check CANNOT tell that id collision from a
     // legitimate replay — new data would be silently skipped while the
     // fresh checkpoint marks it processed. Refuse the combination loudly.
-    requireCheckpointMatchesTable(spark, tableRoot)
+    requireCheckpointMatchesTable(tableRoot)
     val reader = spark.readStream.schema(segmentSchema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
     reader.parquet(inputDir)
@@ -57,12 +58,12 @@ object StreamingCc {
       .option("checkpointLocation", s"$tableRoot/_stream_checkpoint")
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val out = batchDir(tableRoot, batchId)
-        val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val fs = LakehouseIO.fsOf(out)
         if (!fs.exists(out)) { // replayed batch: already committed → no-op
           val staging = new Path(s"$tableRoot/_staging", s"batch=$batchId")
           if (fs.exists(staging)) fs.delete(staging, true)
-          graft.datapipe.TrainingOps.ccReader(spark, batch)
-            .write.mode("overwrite").parquet(staging.toString)
+          LakehouseIO.writeParquet(graft.datapipe.TrainingOps.ccReader(spark, batch),
+            staging, "overwrite")
           fs.mkdirs(out.getParent)
           if (!fs.rename(staging, out))
             throw new java.io.IOException(s"cc batch commit failed: $staging -> $out")
@@ -77,11 +78,10 @@ object StreamingCc {
     * per-batch idempotence check would misread the collision as a replay
     * (shared by [[StreamingExtract]] — same commit convention).
     */
-  private[streaming] def requireCheckpointMatchesTable(
-      spark: SparkSession, tableRoot: String): Unit = {
+  private[streaming] def requireCheckpointMatchesTable(tableRoot: String): Unit = {
     val batches = new Path(tableRoot, "batches")
     val ckpt = new Path(tableRoot, "_stream_checkpoint")
-    val fs = batches.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LakehouseIO.fsOf(batches)
     val haveBatches = fs.isDirectory(batches) &&
       fs.listStatus(batches).exists(_.getPath.getName.startsWith("batch="))
     require(!haveBatches || fs.isDirectory(ckpt),
@@ -95,7 +95,7 @@ object StreamingCc {
     */
   def readAll(spark: SparkSession, tableRoot: String): DataFrame = {
     val base = new Path(tableRoot, "batches")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = LakehouseIO.fsOf(base)
     val dirs =
       if (!fs.isDirectory(base)) Seq.empty
       else fs.listStatus(base).toSeq.map(_.getPath)

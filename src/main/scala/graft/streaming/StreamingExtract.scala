@@ -88,7 +88,7 @@ object StreamingExtract {
     implicit val s: SparkSession = spark
     // lost-checkpoint guard (see StreamingCc): batch renumbering from 0
     // would make the per-batch ledgers misread new data as replays
-    StreamingCc.requireCheckpointMatchesTable(spark, tableRoot)
+    StreamingCc.requireCheckpointMatchesTable(tableRoot)
     val reader = spark.readStream
       .schema(Encoders.product[PageRow].schema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))

@@ -5227,7 +5227,13 @@ class DataPipeSpec extends AnyFunSuite with BeforeAndAfterAll {
       (115L, hand("""{"a":{"dtype":"U8","shape":[07],"data_offsets":[0,7]}}""", 7)),
       // a zero-size tensor sharing its begin with a non-zero tensor is
       // a spec-valid gap-free cover regardless of tensor names
-      (116L, hand("""{"a":{"dtype":"U8","shape":[4],"data_offsets":[0,4]},"z":{"dtype":"U8","shape":[0],"data_offsets":[4,4]},"b":{"dtype":"U8","shape":[4],"data_offsets":[4,8]}}""", 8)))
+      (116L, hand("""{"a":{"dtype":"U8","shape":[4],"data_offsets":[0,4]},"z":{"dtype":"U8","shape":[0],"data_offsets":[4,4]},"b":{"dtype":"U8","shape":[4],"data_offsets":[4,8]}}""", 8)),
+      // 19 digits that fit an int64 (Long.MaxValue): a valid number, and
+      // a zero-size tensor, so ok
+      (117L, hand("""{"a":{"dtype":"U8","shape":[9223372036854775807,0],"data_offsets":[0,0]}}""", 0)),
+      // u64 max: grammar-valid, past int64 — the overflow rung
+      (118L, hand("""{"a":{"dtype":"U8","shape":[18446744073709551615,0],"data_offsets":[0,0]}}""", 0)),
+      (119L, hand("""{"a":{"dtype":"U8","shape":[1],"data_offsets":[0,9223372036854775808]}}""", 1)))
       .toDF("doc_id", "payload")
     val er = TrainingOps.safetensorsHeaders(spark, extra).collect()
       .groupBy(_.getLong(0)).map { case (k, v) => k -> v }
@@ -5250,6 +5256,10 @@ class DataPipeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(er(114L).head.getString(1) == "bad_json")
     assert(er(115L).head.getString(1) == "bad_json")
     assert(er(116L).length == 3 && er(116L).forall(_.getString(1) == "ok"))
+    assert(er(117L).head.getString(1) == "ok" && er(117L).head.getInt(4) == 2 &&
+      er(117L).head.getLong(5) == 0L)
+    assert(er(118L).head.getString(1) == "bad_schema")
+    assert(er(119L).head.getString(1) == "bad_schema")
   }
 
   test("safetensors headers: totality on random / length-prefixed / bit-flipped payloads, taxonomy closed") {

@@ -9,6 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.gen.PagesGen
 import graft.spark._
+import graft.streaming.StreamingExtract
 
 /** Spark integration layer (SURVEY.md par 5.2): status taxonomy, dedup,
   * golden byte-equality (the north_rule gate), resume-after-kill,
@@ -340,6 +341,114 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(LakehouseIO.writeCommitted(
       LakehouseIO.resumeFilter(ds.toDF(), root).as[ResultRow](org.apache.spark.sql.Encoders.product[ResultRow]),
       root, "uri-run-2", sfDir).isEmpty)
+  }
+
+  // ---------------------------------------------- table writes, no process
+
+  /** Mode bits (permissions, set-id and sticky) of a local file. */
+  private def modeBits(p: java.nio.file.Path): Int =
+    Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+
+  /** Command lines naming `under` of the processes started while `body`
+    * runs, read back from a JFR recording of `jdk.ProcessStart`.
+    */
+  private def processStartsNaming(under: String)(body: => Unit): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    val dump = Files.createTempFile("graft-procs", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(dump)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command"))
+        .filter(_.contains(under))
+    } finally {
+      rec.close()
+      Files.deleteIfExists(dump)
+    }
+  }
+
+  test("table writes start no process: run, crash + resume, applyChanges, compact, a stream micro-batch") {
+    implicit val s: SparkSession = spark
+    val sq = spark; import sq.implicits._
+    val enc = org.apache.spark.sql.Encoders.product[ResultRow]
+    val in = tmpDir("no-fork-in")
+    PagesGen.fromDocuments(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(in)
+    val baseDir = Paths.get(tmpDir("no-fork")).toRealPath()
+    // a set-gid base: every directory made under it inherits set-gid
+    Files.setAttribute(baseDir, "unix:mode", Integer.valueOf(Integer.parseInt("2755", 8)))
+    val base = baseDir.toString
+    val Seq(table, crashed, small, stream) = Seq("table", "crashed", "small", "stream").map(n => s"$base/$n")
+    Files.createDirectory(Paths.get(stream))
+    val control = Seq("ls", base)
+    // the stream's offset and commit logs are Spark's own checkpoint
+    // files, written through Hadoop's FileContext, not the table layer
+    val checkpoint = s"$stream/_stream_checkpoint"
+    val seen = processStartsNaming(base) {
+      job(table, "f1")
+      intercept[RuntimeException](job(crashed, "c1", failAfterBuckets = Some(3)))
+      job(crashed, "c2")
+      val Array(flip, gone) = results.filter(_.status == core.Status.Ok).take(2)
+      LakehouseIO.applyChanges(table,
+        spark.createDataset(Seq(flip.copy(status = core.Status.Error, error_code = "x")))(enc),
+        Seq((gone.url, gone.bucket)).toDF("url", "bucket"), "chg")
+      LakehouseIO.writeCommitted(spark.createDataset(results.toSeq)(enc).repartition(24), small, "s1", sfDir)
+      assert(LakehouseIO.compact(small) > 0)
+      StreamingExtract.start(spark, in, stream, conf).awaitTermination()
+      // the recording does see a process that names the table root
+      assert(new ProcessBuilder(control: _*).start().waitFor() == 0)
+    }
+    assert(LakehouseIO.committedBuckets(crashed) == LakehouseIO.committedBuckets(table))
+    assert(StreamingExtract.readAll(spark, stream).count() == results.length)
+    val forks = seen.filterNot(_.contains(checkpoint))
+    assert(forks == Seq(control.mkString(" ")), s"${forks.size} processes named the table roots: ${forks.take(5)}")
+  }
+
+  test("committed files, .crc files, ledgers and directories carry Hadoop's default permissions") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.permission.FsPermission
+    val root = Paths.get(tmpDir("perms"))
+    job(root.toString, "p1")
+    val umask = FsPermission.getUMask(spark.sparkContext.hadoopConfiguration)
+    val fileMode = FsPermission.getFileDefault.applyUMask(umask).toShort.toInt
+    val dirMode = FsPermission.getDirDefault.applyUMask(umask).toShort.toInt
+    val walk = Files.walk(root)
+    val entries = try walk.iterator.asScala.filter(_ != root).toSeq finally walk.close()
+    val names = entries.map(root.relativize(_).toString)
+    assert(names.exists(n => n.startsWith("data/bucket=") && n.endsWith(".parquet")))
+    assert(names.exists(n => n.startsWith("data/bucket=") && n.endsWith(".parquet.crc")))
+    assert(names.exists(n => n.startsWith("_ledger/bucket-") && n.endsWith(".json")))
+    assert(names.exists(n => n.startsWith("_ledger/.bucket-") && n.endsWith(".json.crc")))
+    assert(names.contains("metadata/version-hint.text"))
+    entries.foreach { p =>
+      val want = if (Files.isDirectory(p)) dirMode else fileMode
+      assert(modeBits(p) == want, f"${root.relativize(p)}: ${modeBits(p)}%o, want $want%o")
+    }
+  }
+
+  test("NioRawLocalFileSystem sets the mode bits Hadoop's RawLocalFileSystem sets") {
+    import org.apache.hadoop.fs.permission.FsPermission
+    val base = Paths.get(tmpDir("modes"))
+    val fss = Seq(new org.apache.hadoop.fs.RawLocalFileSystem, new NioRawLocalFileSystem)
+    fss.foreach(_.initialize(java.net.URI.create("file:///"), new org.apache.hadoop.conf.Configuration()))
+    val setIdMode = Integer.parseInt("6755", 8)
+    for {
+      mode <- Seq("644", "600", "755", "700", "1777").map(Integer.parseInt(_, 8))
+      kind <- Seq("file", "dir", "setid-file", "setid-dir")
+    } {
+      val got = fss.zipWithIndex.map { case (fs, j) =>
+        val p = base.resolve(s"$kind-${mode.toOctalString}-$j")
+        if (kind.endsWith("file")) Files.createFile(p) else Files.createDirectory(p)
+        if (kind.startsWith("setid")) Files.setAttribute(p, "unix:mode", Integer.valueOf(setIdMode))
+        fs.setPermission(new org.apache.hadoop.fs.Path(p.toUri), new FsPermission(mode.toShort))
+        modeBits(p)
+      }
+      assert(got(0) == got(1), f"$kind ${mode}%o: hadoop ${got(0)}%o, nio ${got(1)}%o")
+      if (kind.endsWith("file")) assert(got(1) == mode)
+    }
   }
 
   test("compaction: many small files per bucket collapse to one, rows and ledger intact") {
