@@ -1,7 +1,5 @@
 package graft.core
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Text block with density features, built from the token stream with a
   * tag-path stack (SURVEY.md par 7.2 items 2-3; north_star: "text-density +
   * link-density block classification with a tag-path stack").
@@ -27,135 +25,14 @@ final case class Block(
 }
 
 object BlockBuilder {
+  import Html.Role
 
-  /** Elements that delimit text blocks. */
-  val blockTags: Set[String] = Set(
-    "p", "div", "article", "section", "main", "aside", "nav", "header",
-    "footer", "h1", "h2", "h3", "h4", "h5", "h6", "li", "ul", "ol", "dl",
-    "dt", "dd", "td", "th", "tr", "table", "thead", "tbody", "tfoot",
-    "blockquote", "pre", "br", "hr", "form", "figure", "figcaption",
-    "fieldset", "legend", "address", "details", "summary", "body",
-  )
-
-  /** Void elements: never pushed on the stack. */
-  val voidTags: Set[String] = Set(
-    "br", "hr", "img", "meta", "link", "input", "area", "base", "col",
-    "embed", "source", "track", "wbr",
-  )
-
-  /** Structural boilerplate containers: their text is never main content. */
-  val boilerTags: Set[String] = Set(
-    "nav", "header", "footer", "aside", "form", "button", "select",
-    "option", "label", "figure", "head", "title",
-  )
-
-  /** Explicit content containers. */
-  val contentTags: Set[String] = Set("article", "main")
-
-  private def countWords(s: String): Int = {
-    var c = 0; var in = false; var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == ' ') in = false
-      else if (!in) { c += 1; in = true }
-      i += 1
-    }
-    c
-  }
-
-  /** Word count over raw (un-canonicalized) text: non-whitespace runs,
-    * using the same whitespace set the Canonicalizer collapses — identical
-    * count, no allocation (NFC never alters whitespace-ness).
-    */
-  private def countWordsRaw(s: String): Int = {
-    var c = 0; var in = false; var i = 0
-    while (i < s.length) {
-      if (Canonicalizer.isSpace(s.charAt(i))) in = false
-      else if (!in) { c += 1; in = true }
-      i += 1
-    }
-    c
-  }
-
-  /** Consume the token stream into classified-ready blocks. */
-  def build(toks: Iterator[Html.Tok]): Vector[Block] = {
-    val out = Vector.newBuilder[Block]
-    val stack = ArrayBuffer.empty[String]
-    var anchorDepth = 0
-    var boilerDepth = 0
-    var contentDepth = 0
-    val buf = new java.lang.StringBuilder
-    var blockPath = "" // path snapshot at first text of the current block
-    var pendingLinkWords = 0 // words seen inside <a> in the current block
-    var blockBoiler = false
-    var blockContent = false
-
-    def currentPath(): String = stack.mkString("/")
-
-    def flush(): Unit = {
-      if (buf.length == 0) { pendingLinkWords = 0; return }
-      val raw = buf.toString
-      buf.setLength(0)
-      val canon = Canonicalizer.block(raw)
-      val lw = pendingLinkWords
-      pendingLinkWords = 0
-      if (canon.nonEmpty) {
-        out += Block(
-          text = canon,
-          tagPath = blockPath,
-          words = countWords(canon),
-          linkWords = lw,
-          inBoiler = blockBoiler,
-          inContent = blockContent,
-        )
-      }
-    }
-
-    toks.foreach {
-      case Html.StartTag(name, selfClosing) =>
-        if (blockTags.contains(name)) flush()
-        if (!voidTags.contains(name) && !selfClosing) {
-          stack += name
-          if (name == "a") anchorDepth += 1
-          if (boilerTags.contains(name)) boilerDepth += 1
-          if (contentTags.contains(name)) contentDepth += 1
-        }
-      case Html.EndTag(name) =>
-        if (blockTags.contains(name)) flush()
-        // pop to the matching open tag (tolerates unclosed intermediates)
-        val idx = stack.lastIndexOf(name)
-        if (idx >= 0) {
-          var k = stack.length - 1
-          while (k >= idx) {
-            val t = stack.remove(k)
-            if (t == "a") anchorDepth -= 1
-            if (boilerTags.contains(t)) boilerDepth -= 1
-            if (contentTags.contains(t)) contentDepth -= 1
-            k -= 1
-          }
-        }
-      case Html.Text(t) =>
-        val hadText = buf.length > 0
-        if (!hadText) {
-          blockPath = currentPath()
-          blockBoiler = boilerDepth > 0
-          blockContent = contentDepth > 0
-        } else {
-          // a block spanning into/out of boiler scope stays conservative
-          blockBoiler = blockBoiler || boilerDepth > 0
-        }
-        if (anchorDepth > 0) pendingLinkWords += countWordsRaw(t)
-        buf.append(t)
-        buf.append(' ') // token boundary between text runs; collapsed later
-    }
-    flush()
-    out.result()
-  }
-
-  /** Streaming builder over [[Html.parse]] — byte-identical output to
-    * [[build]](tokenize) (pinned by KernelSpec) with near-zero transient
-    * allocation: text runs land in one buffer via bulk entity-aware
-    * appends, the tag path is a checkpointed StringBuilder instead of a
-    * per-block mkString, and no token objects exist at all.
+  /** Tokenize `html` with [[Html.parse]] and cut it into blocks. A block
+    * ends at every start or end tag with the [[Html.Role.Block]] role; its
+    * text is the canonical form ([[Canonicalizer.blockOf]]) of the text
+    * runs it gathered, one space between runs. Nothing is allocated per
+    * token: text runs land in one buffer via bulk entity-aware appends,
+    * and the tag path is a checkpointed StringBuilder.
     */
   def buildStreaming(html: String, deadline: Html.Deadline): Vector[Block] = {
     val sink = new StreamSink
@@ -163,15 +40,26 @@ object BlockBuilder {
     sink.finish()
   }
 
+  /** The block builder as an [[Html.Sink]]. Each tag costs one bit test
+    * per role question (block boundary, void, boilerplate, content,
+    * anchor) on the bits [[Html.parse]] resolved with the name. The open
+    * elements are arrays indexed by depth (name, role bits, tag-path
+    * length before the push); an end tag pops to the nearest open element
+    * of its name, tolerating unclosed intermediates, comparing names with
+    * `eq` first (known names are interned) and `equals` after.
+    */
   private final class StreamSink extends Html.Sink {
     private val out = Vector.newBuilder[Block]
-    private val stack = ArrayBuffer.empty[String]
+    private var names = new Array[String](32)
+    private var roles = new Array[Int](32)
+    private var pathLens = new Array[Int](32)
+    private var depth = 0
     private val pathSb = new java.lang.StringBuilder
-    private val pathLens = ArrayBuffer.empty[Int] // pathSb length before each push
     private var anchorDepth = 0
     private var boilerDepth = 0
     private var contentDepth = 0
     private val buf = new java.lang.StringBuilder
+    private val scratch = new Canonicalizer.Scratch
     private var blockPath = ""
     private var pendingLinkWords = 0
     private var blockBoiler = false
@@ -179,7 +67,7 @@ object BlockBuilder {
 
     private def flush(): Unit = {
       if (buf.length == 0) { pendingLinkWords = 0; return }
-      val canon = Canonicalizer.blockOf(buf)
+      val canon = Canonicalizer.blockOf(buf, scratch)
       buf.setLength(0)
       val lw = pendingLinkWords
       pendingLinkWords = 0
@@ -187,7 +75,7 @@ object BlockBuilder {
         out += Block(
           text = canon,
           tagPath = blockPath,
-          words = countWords(canon),
+          words = scratch.words,
           linkWords = lw,
           inBoiler = blockBoiler,
           inContent = blockContent,
@@ -195,32 +83,42 @@ object BlockBuilder {
       }
     }
 
-    def startTag(name: String, selfClosing: Boolean): Unit = {
-      if (blockTags.contains(name)) flush()
-      if (!voidTags.contains(name) && !selfClosing) {
-        stack += name
-        pathLens += pathSb.length
+    def startTag(name: String, selfClosing: Boolean): Unit = startTag(name, Html.rolesOf(name), selfClosing)
+    def endTag(name: String): Unit = endTag(name, Html.rolesOf(name))
+
+    override def startTag(name: String, r: Int, selfClosing: Boolean): Unit = {
+      if ((r & Role.Block) != 0) flush()
+      if ((r & Role.Void) == 0 && !selfClosing) {
+        if (depth == names.length) {
+          names = java.util.Arrays.copyOf(names, 2 * depth)
+          roles = java.util.Arrays.copyOf(roles, 2 * depth)
+          pathLens = java.util.Arrays.copyOf(pathLens, 2 * depth)
+        }
+        names(depth) = name
+        roles(depth) = r
+        pathLens(depth) = pathSb.length
+        depth += 1
         if (pathSb.length > 0) pathSb.append('/')
         pathSb.append(name)
-        if (name == "a") anchorDepth += 1
-        if (boilerTags.contains(name)) boilerDepth += 1
-        if (contentTags.contains(name)) contentDepth += 1
+        if ((r & Role.Anchor) != 0) anchorDepth += 1
+        if ((r & Role.Boiler) != 0) boilerDepth += 1
+        if ((r & Role.Content) != 0) contentDepth += 1
       }
     }
 
-    def endTag(name: String): Unit = {
-      if (blockTags.contains(name)) flush()
-      val idx = stack.lastIndexOf(name)
+    override def endTag(name: String, r: Int): Unit = {
+      if ((r & Role.Block) != 0) flush()
+      var idx = depth - 1
+      while (idx >= 0 && !(names(idx) eq name) && !names(idx).equals(name)) idx -= 1
       if (idx >= 0) {
-        var k = stack.length - 1
-        while (k >= idx) {
-          val t = stack.remove(k)
-          pathSb.setLength(pathLens.remove(k))
-          if (t == "a") anchorDepth -= 1
-          if (boilerTags.contains(t)) boilerDepth -= 1
-          if (contentTags.contains(t)) contentDepth -= 1
-          k -= 1
+        while (depth > idx) {
+          depth -= 1
+          val t = roles(depth)
+          if ((t & Role.Anchor) != 0) anchorDepth -= 1
+          if ((t & Role.Boiler) != 0) boilerDepth -= 1
+          if ((t & Role.Content) != 0) contentDepth -= 1
         }
+        pathSb.setLength(pathLens(idx))
       }
     }
 
@@ -230,10 +128,11 @@ object BlockBuilder {
       val b1 = buf.length
       if (b1 == b0) return // run decoded to nothing (e.g. only &shy;)
       if (b0 == 0) {
-        blockPath = pathSb.toString
+        if (!blockPath.contentEquals(pathSb)) blockPath = pathSb.toString // sibling blocks share it
         blockBoiler = boilerDepth > 0
         blockContent = contentDepth > 0
       } else {
+        // a block spanning into/out of boiler scope stays conservative
         blockBoiler = blockBoiler || boilerDepth > 0
       }
       if (anchorDepth > 0) pendingLinkWords += countWordsIn(buf, b0, b1)
@@ -243,7 +142,10 @@ object BlockBuilder {
     def finish(): Vector[Block] = { flush(); out.result() }
   }
 
-  /** [[countWordsRaw]] over a buffer range (same whitespace set). */
+  /** Words in sb[from,to): maximal runs outside the whitespace set the
+    * Canonicalizer collapses, so the count matches the canonical text's
+    * (NFC never alters whitespace-ness).
+    */
   private def countWordsIn(sb: java.lang.StringBuilder, from: Int, to: Int): Int = {
     var c = 0; var in = false; var i = from
     while (i < to) {

@@ -25,41 +25,80 @@ object Canonicalizer {
     */
   def isSpace(c: Char): Boolean = {
     val i = c.toInt
-    i == 0x20 || i == 0x09 || i == 0x0a || i == 0x0d || i == 0x0c ||
-    i == 0x0b || i == 0xa0 || i == 0x1680 ||
-    (i >= 0x2000 && i <= 0x200a) || i == 0x2028 || i == 0x2029 ||
-    i == 0x202f || i == 0x205f || i == 0x3000 || i == 0xfeff
+    if (i < 0x80) i == 0x20 || (i >= 0x09 && i <= 0x0d)
+    else i == 0xa0 || i == 0x1680 ||
+      (i >= 0x2000 && i <= 0x200a) || i == 0x2028 || i == 0x2029 ||
+      i == 0x202f || i == 0x205f || i == 0x3000 || i == 0xfeff
+  }
+
+  /** Reusable state for [[blockOf]]: the char[] a block is
+    * canonicalized in, and the word count of the last block.
+    */
+  final class Scratch {
+    private[Canonicalizer] var chars = Array.emptyCharArray
+    /** Words (maximal non-space runs) of the last [[blockOf]] result. */
+    var words = 0
+    private[Canonicalizer] def charsFor(n: Int): Array[Char] = {
+      if (chars.length < n) chars = new Array[Char](math.max(n, 2 * chars.length))
+      chars
+    }
+  }
+
+  /** [[block]] of a buffer's contents, plus its word count in
+    * `scratch.words`, built in `scratch`'s reused char[] so that only the
+    * result String is allocated. An ASCII block (the common case) takes
+    * one pass: whitespace runs collapse in place while words are counted,
+    * bailing out at the first char >= 0x80. A non-ASCII block takes
+    * today's exact path, NFC then collapse: NFC runs first because
+    * composition must see the original character sequence, then the same
+    * in-place pass collapses and counts the normalized chars. NFC is the
+    * identity on ASCII, so both paths produce [[block]]'s bytes.
+    */
+  def blockOf(buf: java.lang.StringBuilder, scratch: Scratch): String = {
+    val n = buf.length
+    buf.getChars(0, n, scratch.charsFor(n), 0)
+    val w = collapseInPlace(scratch, n, asciiOnly = true)
+    if (w >= 0) return new String(scratch.chars, 0, w)
+    val nfc = Normalizer.normalize(buf, Normalizer.Form.NFC)
+    nfc.getChars(0, nfc.length, scratch.charsFor(nfc.length), 0)
+    new String(scratch.chars, 0, collapseInPlace(scratch, nfc.length, asciiOnly = false))
+  }
+
+  /** Collapse scratch.chars[0,n) in place and count its words into
+    * `scratch.words`; returns the collapsed length, or -1 at the first
+    * char >= 0x80 when `asciiOnly`.
+    */
+  private def collapseInPlace(scratch: Scratch, n: Int, asciiOnly: Boolean): Int = {
+    val a = scratch.chars
+    var w = 0 // write index; never passes the read index
+    var words = 0
+    var pendingSpace = false
+    var i = 0
+    while (i < n) {
+      val c = a(i)
+      if (c >= 0x80 && asciiOnly) return -1
+      if (isSpace(c)) pendingSpace = w > 0
+      else {
+        if (w == 0) words = 1
+        else if (pendingSpace) { a(w) = ' '; w += 1; words += 1; pendingSpace = false }
+        a(w) = c
+        w += 1
+      }
+      i += 1
+    }
+    scratch.words = words
+    w
   }
 
   /** Collapse whitespace runs to single spaces and trim. Pure, total. */
   def collapse(s: CharSequence): String = {
-    val sb = new java.lang.StringBuilder(s.length)
-    var pendingSpace = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (isSpace(c)) { if (sb.length > 0) pendingSpace = true }
-      else {
-        if (pendingSpace) { sb.append(' '); pendingSpace = false }
-        sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
+    val scratch = new Scratch
+    s.toString.getChars(0, s.length, scratch.charsFor(s.length), 0)
+    new String(scratch.chars, 0, collapseInPlace(scratch, s.length, asciiOnly = false))
   }
 
-  /** [[block]] over a reusable buffer: ASCII blocks (the common case)
-    * collapse straight out of the buffer with no intermediate String;
-    * non-ASCII blocks take the exact original path (toString -> NFC ->
-    * collapse) so bytes are identical either way. NFC runs BEFORE
-    * collapse in both paths — composition must see the original
-    * character sequence.
-    */
-  def blockOf(buf: java.lang.StringBuilder): String = {
-    var i = 0
-    while (i < buf.length && buf.charAt(i) < 0x80) i += 1
-    if (i == buf.length) collapse(buf) else block(buf.toString)
-  }
+  /** [[block]] of a buffer's contents. */
+  def blockOf(buf: java.lang.StringBuilder): String = blockOf(buf, new Scratch)
 
   /** NFC-normalize. Applied per block (NFC is preserved by our join
     * because '\n' is inert under composition). Pure-ASCII fast path:

@@ -16,16 +16,6 @@ import java.util.Locale
   */
 object Html {
 
-  sealed trait Tok
-  /** Attributes are scanned for tag-end correctness but not materialized:
-    * no downstream consumer reads them, and skipping the per-attribute
-    * tuple/list/entity-decode allocations measurably lifts 32-thread
-    * throughput (the kernel is allocation-bound at high core counts).
-    */
-  final case class StartTag(name: String, selfClosing: Boolean) extends Tok
-  final case class EndTag(name: String) extends Tok
-  final case class Text(s: String) extends Tok
-
   /** Per-document budget; 0 or negative => unlimited on that axis.
     *
     * Two axes: wall time (the reference's asyncio.wait_for analog) and
@@ -60,13 +50,21 @@ object Html {
     * idea of the reference's format sniffing
     * (/root/reference/src/utils/validators.py:31-56).
     */
-  def detectCharset(bytes: Array[Byte]): Charset = {
-    if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xef && (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf)
-      return StandardCharsets.UTF_8
-    if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xfe && (bytes(1) & 0xff) == 0xff)
-      return StandardCharsets.UTF_16BE
-    if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xfe)
-      return StandardCharsets.UTF_16LE
+  def detectCharset(bytes: Array[Byte]): Charset = bomOf(bytes) match {
+    case 3 => StandardCharsets.UTF_8
+    case 2 => if ((bytes(0) & 0xff) == 0xfe) StandardCharsets.UTF_16BE else StandardCharsets.UTF_16LE
+    case _ => metaCharset(bytes)
+  }
+
+  /** Length of a leading UTF-8 (3) or UTF-16BE/LE (2) byte-order mark; 0 if none. */
+  private def bomOf(bytes: Array[Byte]): Int =
+    if (bytes.length >= 3 && (bytes(0) & 0xff) == 0xef && (bytes(1) & 0xff) == 0xbb && (bytes(2) & 0xff) == 0xbf) 3
+    else if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xfe && (bytes(1) & 0xff) == 0xff) 2
+    else if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xfe) 2
+    else 0
+
+  /** The charset a meta declaration in the first 1024 bytes names, else UTF-8. */
+  private def metaCharset(bytes: Array[Byte]): Charset = {
     // byte-scan the first 1024 bytes for "charset=" (ASCII,
     // case-insensitive) — no probe String allocation per document
     val n = math.min(bytes.length, 1024)
@@ -118,10 +116,53 @@ object Html {
     * so document-sized copies are the scaling currency.
     */
   def decode(bytes: Array[Byte]): String = {
-    val cs = detectCharset(bytes)
-    val out = new String(bytes, cs)
-    // strip BOM if the decoder left it as U+FEFF
-    if (out.nonEmpty && out.charAt(0) == '﻿') out.substring(1) else out
+    val bom = bomOf(bytes)
+    // a byte-order mark decodes to exactly one U+FEFF, so skipping its
+    // bytes drops it without a second copy of the page
+    if (bom > 0) return decode(bytes, bom, detectCharset(bytes))
+    val out = decode(bytes, 0, metaCharset(bytes))
+    // a meta-declared charset (utf-32, gb18030, ...) can still decode to a
+    // leading U+FEFF; strip it as a BOM
+    if (out.nonEmpty && out.charAt(0) == '\ufeff') out.substring(1) else out
+  }
+
+  private def decode(bytes: Array[Byte], from: Int, cs: Charset): String = {
+    val latin1 = if (cs == StandardCharsets.UTF_8) latin1Utf8(bytes, from) else null
+    if (latin1 != null) latin1 else new String(bytes, from, bytes.length - from, cs)
+  }
+
+  private val longsLE = java.lang.invoke.MethodHandles.byteArrayViewVarHandle(
+    classOf[Array[Long]], java.nio.ByteOrder.LITTLE_ENDIAN)
+
+  /** UTF-8 `bytes[from..]` as a String when they hold only ASCII and the
+    * well-formed two-byte sequences of U+0080..U+00FF, the text of most
+    * Western pages; null otherwise, for the general decoder. The JDK
+    * decodes such a page one byte at a time and then copies it again to
+    * trim its buffer; here ASCII stretches are checked eight bytes a step
+    * and moved in bulk. Same chars either way.
+    */
+  private def latin1Utf8(bytes: Array[Byte], from: Int): String = {
+    val n = bytes.length
+    val dst = new Array[Byte](n - from)
+    var i = from
+    var d = 0
+    while (i < n) {
+      var j = i
+      while (j + 8 <= n && ((longsLE.get(bytes, j): Long) & 0x8080808080808080L) == 0L) j += 8
+      while (j < n && bytes(j) >= 0) j += 1
+      System.arraycopy(bytes, i, dst, d, j - i)
+      d += j - i
+      i = j
+      if (i < n) {
+        val b1 = bytes(i) & 0xff
+        if ((b1 == 0xc2 || b1 == 0xc3) && i + 1 < n && (bytes(i + 1) & 0xc0) == 0x80) {
+          dst(d) = (((b1 & 0x1f) << 6) | (bytes(i + 1) & 0x3f)).toByte
+          d += 1
+          i += 2
+        } else return null
+      }
+    }
+    new String(dst, 0, d, StandardCharsets.ISO_8859_1)
   }
 
   // ---------------------------------------------------------------- entities
@@ -140,24 +181,29 @@ object Html {
     "agrave" -> "à", "ccedil" -> "ç", "ntilde" -> "ñ",
   )
 
-  /** Decode character references in a text run. Unknown entities pass
-    * through verbatim (tolerant, like browsers).
-    */
   /** Case-insensitive indexOf — raw-text close tags match ASCII
     * case-insensitively in browsers (`</SCRIPT>` closes `<script>`);
     * shared by all scanners (tokenizer, Links, Meta) so the rule can
     * never diverge between them.
     */
   private[core] def indexOfIgnoreCase(s: String, needle: String, from: Int): Int = {
+    // no char case-folds to an ASCII non-letter (the '<' every needle
+    // starts with), so a match can only begin at one: jump between them
+    val first = needle.charAt(0)
+    val jump = first < 0x80 && !Character.isLetter(first)
     var i = math.max(0, from)
     val n = s.length - needle.length
     while (i <= n) {
+      if (jump) { i = s.indexOf(first, i); if (i < 0 || i > n) return -1 }
       if (s.regionMatches(true, i, needle, 0, needle.length)) return i
       i += 1
     }
     -1
   }
 
+  /** Decode character references in a text run. Unknown entities pass
+    * through verbatim (tolerant, like browsers).
+    */
   def decodeEntities(s: String): String = {
     if (s.indexOf('&') < 0) return s
     val sb = new java.lang.StringBuilder(s.length)
@@ -208,157 +254,97 @@ object Html {
     }
   }
 
+  // ---------------------------------------------------------------- tag names
+
+  /** Role bits of a known tag name: one bit test answers each question the
+    * block builder and the raw-text rule ask of a tag.
+    */
+  object Role {
+    final val Block = 1    // delimits text blocks
+    final val Void = 2     // never pushed on the open-element stack
+    final val Boiler = 4   // structural boilerplate container: its text is never main content
+    final val Content = 8  // explicit content container
+    final val Anchor = 16  // <a>: words inside it are link words
+    final val RawText = 32 // content skipped unparsed up to the matching close tag
+  }
+
+  private val roleNames: Seq[(Int, String)] = Seq(
+    Role.Block -> ("p div article section main aside nav header footer h1 h2 h3 h4 h5 h6 " +
+      "li ul ol dl dt dd td th tr table thead tbody tfoot blockquote pre br hr form figure " +
+      "figcaption fieldset legend address details summary body"),
+    Role.Void -> "br hr img meta link input area base col embed source track wbr",
+    Role.Boiler -> "nav header footer aside form button select option label figure head title",
+    Role.Content -> "article main",
+    Role.Anchor -> "a",
+    Role.RawText -> "script style textarea noscript",
+    // roleless names: known only so that resolving them allocates nothing
+    0 -> ("html span b i u s em strong small code sup sub abbr cite q time mark kbd samp var " +
+      "dfn del ins iframe svg path canvas video audio picture object param caption colgroup " +
+      "optgroup dialog menu template center font"),
+  )
+
+  /** Six-bit code of each tag-name char `[A-Za-z0-9:_-]`, ASCII case
+    * folded (so the fold is exactly `toLowerCase(Locale.ROOT)`); 0 for
+    * every other char.
+    */
+  private val nameCode: Array[Byte] = {
+    val a = new Array[Byte](128)
+    for (c <- 'a' to 'z') { a(c) = (c - 'a' + 1).toByte; a(c - 32) = a(c) }
+    for (c <- '0' to '9') a(c) = (c - '0' + 27).toByte
+    a(':') = 37; a('_') = 38; a('-') = 39
+    a
+  }
+
+  /** A name of up to ten chars packs into one Long key, six bits a char:
+    * the key IS the lowercased name, so a table hit needs no char compare.
+    * No known name is longer.
+    */
+  private final val MaxKeyLength = 10
+
+  /** Key of a name; -1 if it is longer than ten chars or not a tag name. */
+  private def keyOf(name: String): Long = {
+    var key = 0L
+    var i = 0
+    while (i < name.length) {
+      val c = name.charAt(i)
+      if (c >= 128 || nameCode(c) == 0 || i == MaxKeyLength) return -1L
+      key = (key << 6) | nameCode(c)
+      i += 1
+    }
+    key
+  }
+
+  // open-addressed table of the known names by key (0 = empty slot)
+  private final val TableMask = 511
+  private val tableKeys = new Array[Long](TableMask + 1)
+  private val tableNames = new Array[String](TableMask + 1)
+  private val tableRoles = new Array[Int](TableMask + 1)
+
+  /** The slot that holds `key`, or the empty slot where it would go. */
+  private def slotOf(key: Long): Int = {
+    var k = ((key * 0x9e3779b97f4a7c15L) >>> 55).toInt // top 9 bits
+    while (tableKeys(k) != 0L && tableKeys(k) != key) k = (k + 1) & TableMask
+    k
+  }
+
+  for ((role, names) <- roleNames; name <- names.split(' ')) {
+    val k = slotOf(keyOf(name))
+    tableKeys(k) = keyOf(name)
+    tableNames(k) = name
+    tableRoles(k) |= role
+  }
+
+  /** [[Role]] bits of a tag name; 0 for a name outside the table. */
+  def rolesOf(name: String): Int = {
+    val key = keyOf(name)
+    if (key <= 0L) 0 else tableRoles(slotOf(key))
+  }
+
   // ---------------------------------------------------------------- tokenizer
 
   private def isNameStart(c: Char) = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
   private def isNameChar(c: Char) =
     isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == ':' || c == '_'
-
-  /** Tokenize decoded HTML. Emits StartTag/EndTag/Text; script, style,
-    * comment, CDATA and doctype content never reach Text. Throws
-    * TimeoutException when the deadline expires.
-    */
-  def tokenize(html: String, deadline: Deadline = Deadline.unlimited): Iterator[Tok] =
-    new Iterator[Tok] {
-      private val s = html
-      private val n = s.length
-      private var i = 0
-      private var pending: Tok = null
-      private var pendingEnd: Tok = null
-      advance()
-
-      def hasNext: Boolean = pending != null
-      def next(): Tok = { val t = pending; advance(); t }
-
-      private def skipSpaceIn(j0: Int): Int = {
-        var j = j0
-        while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-        j
-      }
-
-      /** Token produced by the last parseTag call (null = none). Field
-        * instead of a (Tok, Int) tuple return: the tuple boxed the Int and
-        * allocated a Tuple2 per tag — measurable at 32 threads.
-        */
-      private var tagTok: Tok = null
-
-      /** Parse a start/end tag beginning at '<'; sets tagTok, returns the
-        * new position. A '<' that opens nothing valid is literal text.
-        */
-      private def parseTag(lt: Int): Int = {
-        tagTok = null
-        var j = lt + 1
-        if (j >= n) return lt + 1
-        val c = s.charAt(j)
-        if (c == '!') {
-          if (s.startsWith("<!--", lt)) {
-            val end = s.indexOf("-->", lt + 4)
-            return if (end < 0) n else end + 3
-          }
-          if (s.regionMatches(true, lt, "<![CDATA[", 0, 9)) {
-            val end = s.indexOf("]]>", lt + 9)
-            return if (end < 0) n else end + 3
-          }
-          // doctype or other declaration
-          val end = s.indexOf('>', lt + 1)
-          return if (end < 0) n else end + 1
-        }
-        if (c == '?') { // processing instruction
-          val end = s.indexOf('>', lt + 1)
-          return if (end < 0) n else end + 1
-        }
-        val closing = c == '/'
-        if (closing) j += 1
-        if (j >= n || !isNameStart(s.charAt(j))) return lt + 1 // literal '<'
-        val nameStart = j
-        while (j < n && isNameChar(s.charAt(j))) j += 1
-        val name = s.substring(nameStart, j).toLowerCase(Locale.ROOT)
-        if (closing) {
-          val end = s.indexOf('>', j)
-          tagTok = EndTag(name)
-          return if (end < 0) n else end + 1
-        }
-        // attributes: scan past them (quote-aware so a '>' inside a quoted
-        // value doesn't end the tag) without materializing anything
-        var selfClosing = false
-        var done = false
-        while (!done) {
-          j = skipSpaceIn(j)
-          if (j >= n) { done = true }
-          else {
-            val ch = s.charAt(j)
-            if (ch == '>') { j += 1; done = true }
-            else if (ch == '/' && j + 1 < n && s.charAt(j + 1) == '>') { selfClosing = true; j += 2; done = true }
-            else if (isNameStart(ch)) {
-              while (j < n && isNameChar(s.charAt(j))) j += 1
-              var k = skipSpaceIn(j)
-              if (k < n && s.charAt(k) == '=') {
-                k = skipSpaceIn(k + 1)
-                if (k < n && (s.charAt(k) == '"' || s.charAt(k) == '\'')) {
-                  val q = s.charAt(k)
-                  val vend = s.indexOf(q, k + 1)
-                  k = if (vend < 0) n else vend + 1
-                } else {
-                  while (k < n && !Character.isWhitespace(s.charAt(k)) && s.charAt(k) != '>' && s.charAt(k) != '/') k += 1
-                }
-                j = k
-              }
-            } else j += 1 // junk char inside tag; skip
-          }
-        }
-        tagTok = StartTag(name, selfClosing)
-        j
-      }
-
-      private def advance(): Unit = {
-        pending = null
-        if (pendingEnd != null) { pending = pendingEnd; pendingEnd = null; return }
-        while (pending == null && i < n) {
-          if (deadline.expired()) throw new TimeoutException
-          val c = s.charAt(i)
-          if (c == '<') {
-            val next = parseTag(i)
-            val tok = tagTok
-            if (tok == null && next == i + 1) {
-              // a '<' that opens no tag is literal text
-              i = next
-              pending = Text("<")
-            } else {
-            i = next
-            tok match {
-              case st @ StartTag(nm, false) if nm == "script" || nm == "style" || nm == "textarea" || nm == "noscript" =>
-                // raw-text element: skip to matching close tag
-                // (case-insensitive — browsers close on </SCRIPT> too)
-                val close = "</" + nm
-                var k = Html.indexOfIgnoreCase(s, close, i)
-                // tolerate missing close: consume to EOF
-                if (k < 0) { i = n }
-                else {
-                  val gt = s.indexOf('>', k + close.length)
-                  i = if (gt < 0) n else gt + 1
-                }
-                // emit the start tag now; the raw content is skipped entirely
-                // and the close tag we consumed is re-emitted on the next pull
-                pending = st
-                pendingEnd = EndTag(nm)
-              case t => pending = t
-            }
-            }
-          } else {
-            val lt0 = s.indexOf('<', i)
-            val end = if (lt0 < 0) n else lt0
-            val raw = s.substring(i, end)
-            i = end
-            val txt = decodeEntities(raw)
-            if (txt.nonEmpty) pending = Text(txt)
-          }
-        }
-      }
-
-      override def toString = s"HtmlTokenizer@$i/$n"
-    }
-
-  // ------------------------------------------------------------- streaming
 
   /** SAX-style event sink for [[parse]]. Text arrives as (s, from, to)
     * index ranges into the decoded document — no per-run substring — with
@@ -368,26 +354,46 @@ object Html {
     def startTag(name: String, selfClosing: Boolean): Unit
     def endTag(name: String): Unit
     def text(s: String, from: Int, to: Int): Unit
+
+    /** What [[parse]] calls: the tag name with its [[Role]] bits (0 for a
+      * name outside the table). By default they drop the roles; a sink
+      * that asks role questions overrides these instead of looking the
+      * name up again.
+      */
+    def startTag(name: String, roles: Int, selfClosing: Boolean): Unit = startTag(name, selfClosing)
+    def endTag(name: String, roles: Int): Unit = endTag(name)
   }
 
-  /** Streaming equivalent of [[tokenize]]: same token boundaries, same
-    * raw-text-element skipping, but zero per-token allocation (no Tok
-    * objects, no text substrings). [[tokenize]] remains the reference
-    * implementation; KernelSpec pins their equivalence. The kernel is
-    * allocation/bandwidth-bound at 32 threads, and tokenizer garbage was
-    * the largest remaining per-document source.
+  /** Tokenize decoded HTML into `sink` events: start tags, end tags and
+    * text runs; script, style, textarea and noscript content, comments,
+    * CDATA, doctypes and processing instructions never reach the sink as
+    * text, and a '<' that opens no tag is literal text. Attributes are
+    * scanned quote-aware for the tag's end but never materialized.
+    *
+    * Nothing is allocated per token: text is passed as index ranges, and a
+    * tag name is resolved against one static table of known lowercase
+    * names and handed over as the interned table string with its [[Role]]
+    * bits. While the name is scanned its chars are case folded (tag names
+    * are `[A-Za-z0-9:_-]`, so the ASCII fold is exactly
+    * `toLowerCase(Locale.ROOT)`) and packed six bits each into a Long key
+    * that is the name itself, so resolving it takes Long compares in one
+    * table probe sequence and no char compare. Only a name outside the table costs a `substring` +
+    * `toLowerCase`.
+    *
+    * One [[Deadline.expired]] step per scan-loop iteration (one tag or one
+    * text run); throws [[TimeoutException]] when the deadline expires.
     */
   def parse(html: String, sink: Sink, deadline: Deadline = Deadline.unlimited): Unit = {
     val s = html
     val n = s.length
     var i = 0
     var tagName: String = null   // null = no tag at this position
+    var tagRoles = 0
     var tagClosing = false
     var tagSelfClosing = false
 
-    // Scan one tag starting at '<'; set tagName/tagClosing/tagSelfClosing;
-    // return the position after the tag. Mirrors the Iterator tokenizer's
-    // parseTag exactly (KernelSpec pins the equivalence).
+    // Scan one tag starting at '<'; set tagName/tagRoles/tagClosing/
+    // tagSelfClosing; return the position after the tag.
     def parseTag(lt: Int): Int = {
       tagName = null
       tagClosing = false
@@ -415,11 +421,23 @@ object Html {
       if (closing) j += 1
       if (j >= n || !isNameStart(s.charAt(j))) return lt + 1 // literal '<'
       val nameStart = j
-      while (j < n && isNameChar(s.charAt(j))) j += 1
-      val name = s.substring(nameStart, j).toLowerCase(Locale.ROOT)
+      var key = 0L // the name's table key, packed while it is scanned
+      var code = 1
+      while (code != 0 && j < n) {
+        val ch = s.charAt(j)
+        code = if (ch < 128) nameCode(ch) else 0
+        if (code != 0) { key = (key << 6) | code; j += 1 }
+      }
+      val slot = if (j - nameStart <= MaxKeyLength) slotOf(key) else -1
+      if (slot >= 0 && tableKeys(slot) == key) {
+        tagName = tableNames(slot)
+        tagRoles = tableRoles(slot)
+      } else {
+        tagName = s.substring(nameStart, j).toLowerCase(Locale.ROOT)
+        tagRoles = 0
+      }
       if (closing) {
         val end = s.indexOf('>', j)
-        tagName = name
         tagClosing = true
         return if (end < 0) n else end + 1
       }
@@ -448,10 +466,9 @@ object Html {
               }
               j = k
             }
-          } else j += 1
+          } else j += 1 // junk char inside tag; skip
         }
       }
-      tagName = name
       tagSelfClosing = selfClosing
       j
     }
@@ -466,12 +483,14 @@ object Html {
           i = next
         } else {
           i = next
-          if (tagClosing) sink.endTag(tagName)
-          else if (!tagSelfClosing &&
-            (tagName == "script" || tagName == "style" || tagName == "textarea" || tagName == "noscript")) {
-            // raw-text element: emit start, skip content, emit end
+          if (tagClosing) sink.endTag(tagName, tagRoles)
+          else if (!tagSelfClosing && (tagRoles & Role.RawText) != 0) {
+            // raw-text element: emit start, skip content up to the close
+            // tag (matched case-insensitively, as browsers do), emit end;
+            // a missing close tag consumes the rest of the document
             val name = tagName
-            sink.startTag(name, selfClosing = false)
+            val roles = tagRoles
+            sink.startTag(name, roles, selfClosing = false)
             val close = "</" + name
             val k = Html.indexOfIgnoreCase(s, close, i)
             if (k < 0) i = n
@@ -479,8 +498,8 @@ object Html {
               val gt = s.indexOf('>', k + close.length)
               i = if (gt < 0) n else gt + 1
             }
-            sink.endTag(name)
-          } else sink.startTag(tagName, tagSelfClosing)
+            sink.endTag(name, roles)
+          } else sink.startTag(tagName, tagRoles, tagSelfClosing)
         }
       } else {
         val lt = s.indexOf('<', i)

@@ -27,9 +27,10 @@ import scala.collection.mutable.ArrayBuffer
   *     accumulating closes it implicitly (omitted-closer leniency,
   *     the [[Tables]] rule).
   *
-  * Title and body text are entity-decoded by the tokenizer and
-  * whitespace-normalized here; body text inside nested non-heading
-  * markup (b/a/span...) contributes its text, tags vanish.
+  * Built on the kernel's [[Html.parse]] events. Title and body text are
+  * entity-decoded ([[Html.appendDecoded]]) and whitespace-normalized
+  * here; body text inside nested non-heading markup (b/a/span...)
+  * contributes its text, tags vanish.
   */
 object Outline {
 
@@ -102,24 +103,22 @@ object Outline {
       curPath = crumbs.reverse.map(_._2).mkString(" > ")
       openHeading = 0
     }
-    try {
-      Html.tokenize(html, deadline).foreach {
-        case Html.StartTag(n, false) if headingLevel(n) > 0 =>
+    def buffer = if (openHeading > 0) titleBuf else body
+    val sink = new Html.Sink {
+      def startTag(n: String, selfClosing: Boolean): Unit =
+        if (!selfClosing && headingLevel(n) > 0) {
           closeHeading() // a heading inside a heading closes it implicitly
           if (sawSection || body.length > 0) emitCurrent()
           sawSection = true
           openHeading = headingLevel(n)
-        case Html.EndTag(n) if headingLevel(n) > 0 && openHeading > 0 =>
-          closeHeading()
-        case Html.Text(s) =>
-          if (openHeading > 0) titleBuf.append(s) else body.append(s)
-        case Html.StartTag(n, _) if blockTags(n) =>
-          if (openHeading > 0) titleBuf.append(' ') else body.append(' ')
-        case Html.EndTag(n) if blockTags(n) =>
-          if (openHeading > 0) titleBuf.append(' ') else body.append(' ')
-        case _ => ()
-      }
-    } catch { case _: Html.TimeoutException => () } // partial outline is data
+        } else if (blockTags(n)) buffer.append(' ')
+      def endTag(n: String): Unit =
+        if (headingLevel(n) > 0 && openHeading > 0) closeHeading()
+        else if (blockTags(n)) buffer.append(' ')
+      def text(s: String, from: Int, to: Int): Unit = Html.appendDecoded(buffer, s, from, to)
+    }
+    try Html.parse(html, sink, deadline)
+    catch { case _: Html.TimeoutException => () } // partial outline is data
     closeHeading() // unclosed heading at EOF keeps its title
     emitCurrent()
     out.toSeq

@@ -44,6 +44,46 @@ class FuzzSpec extends AnyFunSuite {
   private val soup: Gen[String] =
     Gen.chooseNum(0, 60).flatMap(n => Gen.listOfN(n, fragment).map(_.mkString))
 
+  // --- inputs aimed at the streaming builder's own machinery: tag names
+  // resolved against the interned table (mixed case, unknown look-alikes
+  // that share a length or first/last letter with known names), role
+  // bits on misnested and unclosed containers, a stack deeper than its
+  // initial capacity, and the non-ASCII whitespace the canonicalizer
+  // collapses, literal and as an entity.
+
+  private val mixedCaseTags = Gen.oneOf("DIV", "Div", "A", "Li", "LI", "P", "NAV", "Nav",
+    "ARTICLE", "Article", "BR", "Br", "SCRIPT", "Style", "TEXTAREA", "NoScript", "H1", "TD",
+    "MAIN", "Header", "FOOTER", "Img", "SPAN", "Aside", "FORM", "Figure", "BUTTON")
+
+  private val lookAlikeTags = Gen.oneOf("dav", "aa", "x-nav", "bx", "dv", "ab", "ax", "na",
+    "navs", "nav2", "a1", "h7", "h0", "hh", "li2", "ll", "pp", "p-", "br_", "d:iv",
+    "articles", "mains", "mian", "scripts", "scrip", "styles", "tt", "tdd", "body1", "Ä",
+    "pblockquote", "Pfigcaption", "xxblockquote")
+
+  private val spaceFragment = Gen.oneOf("\u00a0", "\u3000", "\u2028", "&nbsp;",
+    " \u00a0 ", "x\u3000y", "\u2028z\u2028", "a&nbsp;&nbsp;b", "&nbsp;\u00a0", "\u00a0w\u00a0")
+
+  private val builderFragment: Gen[String] = Gen.oneOf(
+    fragment,
+    mixedCaseTags.map(t => s"<$t>"),
+    mixedCaseTags.map(t => s"</$t>"),
+    mixedCaseTags.map(t => s"<$t/>"),
+    lookAlikeTags.map(t => s"<$t>"),
+    lookAlikeTags.map(t => s"</$t>"),
+    Gen.oneOf("<a href='x'>", "</a>", "<nav>", "</nav>", "<article>", "</article>",
+      "<a><nav>", "</a></nav>", "<article><a>", "</article></a>", "<nav><article>"),
+    spaceFragment,
+  )
+
+  /** Soup inside 100–300 open elements, some of them closed out of order. */
+  private val builderSoup: Gen[String] = for {
+    depth <- Gen.chooseNum(0, 300)
+    opens <- Gen.listOfN(depth, Gen.oneOf("div", "a", "nav", "article", "span", "DIV", "x-nav", "li", "b"))
+    n <- Gen.chooseNum(0, 60)
+    body <- Gen.listOfN(n, builderFragment)
+    closes <- Gen.chooseNum(0, depth)
+  } yield opens.map(t => s"<$t>").mkString + body.mkString + opens.take(closes).map(t => s"</$t>").mkString
+
   test("extraction is total and deterministic on arbitrary tag soup") {
     check(Prop.forAll(soup) { s =>
       val bytes = s.getBytes("UTF-8")
@@ -55,9 +95,51 @@ class FuzzSpec extends AnyFunSuite {
 
   test("streaming parser == iterator tokenizer on arbitrary tag soup") {
     check(Prop.forAll(soup) { s =>
-      val viaIterator = BlockBuilder.build(Html.tokenize(s))
+      val viaIterator = ReferenceKernel.build(ReferenceKernel.tokenize(s))
       val viaStream = BlockBuilder.buildStreaming(s, Html.Deadline.unlimited)
       viaIterator == viaStream
+    })
+  }
+
+  /** Parse events as reference tokens: entities decoded, runs that decode
+    * to nothing dropped, exactly as the reference tokenizer emits them.
+    */
+  private def events(s: String): Vector[ReferenceKernel.Tok] = {
+    val out = Vector.newBuilder[ReferenceKernel.Tok]
+    Html.parse(s, new Html.Sink {
+      def startTag(name: String, selfClosing: Boolean): Unit = out += ReferenceKernel.StartTag(name, selfClosing)
+      def endTag(name: String): Unit = out += ReferenceKernel.EndTag(name)
+      def text(s: String, from: Int, to: Int): Unit = {
+        val sb = new java.lang.StringBuilder
+        Html.appendDecoded(sb, s, from, to)
+        if (sb.length > 0) out += ReferenceKernel.Text(sb.toString)
+      }
+    })
+    out.result()
+  }
+
+  test("parse events == reference tokens, with names resolved to the table's lowercase strings") {
+    check(Prop.forAll(builderSoup) { s =>
+      val got = events(s)
+      (got == ReferenceKernel.tokenize(s).toVector) :| "event stream" &&
+        got.forall {
+          case ReferenceKernel.StartTag(n, _) => n == n.toLowerCase(java.util.Locale.ROOT)
+          case ReferenceKernel.EndTag(n) => n == n.toLowerCase(java.util.Locale.ROOT)
+          case _ => true
+        } :| "names lowercase"
+    })
+  }
+
+  test("streaming builder == reference on mixed-case, look-alike, deep, misnested and NBSP soup") {
+    check(Prop.forAll(builderSoup) { s =>
+      val want = ReferenceKernel.build(ReferenceKernel.tokenize(s))
+      val got = BlockBuilder.buildStreaming(s, Html.Deadline.unlimited)
+      (got.map(_.text) == want.map(_.text)) :| "text" &&
+        (got.map(_.tagPath) == want.map(_.tagPath)) :| "tagPath" &&
+        (got.map(_.words) == want.map(_.words)) :| "words" &&
+        (got.map(_.linkWords) == want.map(_.linkWords)) :| "linkWords" &&
+        (got.map(b => (b.inBoiler, b.inContent)) == want.map(b => (b.inBoiler, b.inContent))) :| "scopes" &&
+        (got == want) :| "blocks"
     })
   }
 
@@ -88,6 +170,54 @@ class FuzzSpec extends AnyFunSuite {
       Html.decode(bytes)        // must not throw
       true
     })
+  }
+
+  /** Byte arrays that are mostly ASCII HTML with UTF-8 sequences mixed in:
+    * the two-byte Latin-1 range the decoder's fast path takes, wider
+    * sequences and malformed ones it must hand to the JDK decoder, and
+    * marks and meta charsets that pick another decoder altogether.
+    */
+  private val pageBytes: Gen[Array[Byte]] = {
+    val piece = Gen.oneOf(
+      Gen.alphaNumStr.map(_.take(20).getBytes("UTF-8")),
+      Gen.oneOf("<p>", "</p>", " ", "\n", "&amp;", "<meta charset=utf-8>", "<meta charset=\"iso-8859-1\">",
+        "<meta charset=windows-1252>", "<meta charset=bogus>").map(_.getBytes("UTF-8")),
+      Gen.oneOf("ü", "Ö", "ß", "\u00a0", "\u0080", "\u00ff", "«»", "©·").map(_.getBytes("UTF-8")),
+      Gen.oneOf("–", "€", "中文", "\ufeff", "\ud83d\ude00", "\u0100").map(_.getBytes("UTF-8")),
+      Gen.listOfN(3, Gen.oneOf(0xc2, 0xc3, 0xc0, 0xc1, 0x80, 0xbf, 0xe2, 0xf0, 0xff, 0xfe, 0xef, 0xbb, 0x41))
+        .map(_.map(_.toByte).toArray),
+    )
+    Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, piece)).map(_.flatten.toArray)
+  }
+
+  /** Pages the decoder's fast path accepts (ASCII and two-byte Latin-1
+    * UTF-8), with at most one byte sequence at its edge spliced in:
+    * overlong and truncated two-byte forms, stray continuations, wider
+    * and invalid sequences.
+    */
+  private val latin1Page: Gen[Array[Byte]] = {
+    val ok = Gen.oneOf(Gen.alphaNumStr.map(_.take(30)), Gen.oneOf(" <p>", "</p>\n", "ü", "Öß", "\u0080", "\u00ff", "«x»"))
+    val probe = Gen.oneOf(Seq(0xc0, 0x80), Seq(0xc1, 0xbf), Seq(0xc2), Seq(0xc3), Seq(0xc2, 0x41), Seq(0xc3, 0xc3, 0xa4),
+      Seq(0x80), Seq(0xbf), Seq(0xff), Seq(0xe2, 0x80, 0x93), Seq(0xed, 0xa0, 0x80), Seq(0xf4, 0x90, 0x80, 0x80),
+      Seq(0xc2, 0x80), Seq(0xc3, 0xbf), Seq.empty[Int])
+    for {
+      n <- Gen.chooseNum(0, 30)
+      pieces <- Gen.listOfN(n, ok)
+      p <- probe
+      at <- Gen.chooseNum(0, n)
+    } yield {
+      val (a, b) = pieces.splitAt(at)
+      a.mkString.getBytes("UTF-8") ++ p.map(_.toByte) ++ b.mkString.getBytes("UTF-8")
+    }
+  }
+
+  test("decode == one full JDK decode + leading U+FEFF strip, on pages and arbitrary bytes") {
+    def jdkDecode(bytes: Array[Byte]): String = {
+      val out = new String(bytes, Html.detectCharset(bytes))
+      if (out.nonEmpty && out.charAt(0) == '\ufeff') out.substring(1) else out
+    }
+    val arbitrary = Gen.listOf(Gen.chooseNum(Byte.MinValue, Byte.MaxValue)).map(_.toArray)
+    check(Prop.forAll(Gen.oneOf(latin1Page, pageBytes, arbitrary)) { bytes => Html.decode(bytes) == jdkDecode(bytes) })
   }
 
   // --- URL resolver (core/Urls.scala) ---

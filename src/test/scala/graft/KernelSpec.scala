@@ -40,13 +40,13 @@ class KernelSpec extends AnyFunSuite {
   test("script/style/comment content never reaches text") {
     val html = "<html><body><script>var x = '<p>no</p>';</script><style>p{}</style>" +
       "<!-- <p>also no</p> --><p>yes</p></body></html>"
-    val blocks = BlockBuilder.build(Html.tokenize(html))
+    val blocks = BlockBuilder.buildStreaming(html, Html.Deadline.unlimited)
     assert(blocks.map(_.text) == Vector("yes"))
   }
 
   test("stray < is literal text; unclosed tags tolerated") {
     val html = "<body><p>a < b<p>second para</body>"
-    val blocks = BlockBuilder.build(Html.tokenize(html))
+    val blocks = BlockBuilder.buildStreaming(html, Html.Deadline.unlimited)
     assert(blocks.map(_.text) == Vector("a < b", "second para"))
   }
 
@@ -60,6 +60,45 @@ class KernelSpec extends AnyFunSuite {
       .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
     val r = HtmlExtractor.extract(latin, Html.Deadline.unlimited)
     assert(r.text == "café")
+  }
+
+  test("decode drops a UTF-8, UTF-16BE or UTF-16LE byte-order mark exactly as a full decode + strip") {
+    import java.nio.charset.StandardCharsets.{UTF_8, UTF_16BE, UTF_16LE}
+    def decodeThenStrip(bytes: Array[Byte]): String = {
+      val out = new String(bytes, Html.detectCharset(bytes))
+      if (out.nonEmpty && out.charAt(0) == '\ufeff') out.substring(1) else out
+    }
+    val bodies = Seq("", "<p>x</p>", "<p>Müller € 中文</p>", "\ufeff<p>second mark stays</p>")
+    for ((cs, bom) <- Seq(UTF_8 -> Array(0xef, 0xbb, 0xbf), UTF_16BE -> Array(0xfe, 0xff),
+        UTF_16LE -> Array(0xff, 0xfe)); body <- bodies) {
+      val bytes = bom.map(_.toByte) ++ body.getBytes(cs)
+      assert(Html.decode(bytes) == decodeThenStrip(bytes), s"$cs ${body.take(12)}")
+      assert(Html.decode(bytes) == body, s"$cs ${body.take(12)}")
+    }
+    // a mark alone, and an odd byte after a UTF-16 mark (malformed tail)
+    assert(Html.decode(Array(0xef, 0xbb, 0xbf).map(_.toByte)) == "")
+    val odd = Array(0xfe, 0xff, 0x00, 0x41, 0x42).map(_.toByte)
+    assert(Html.decode(odd) == decodeThenStrip(odd))
+    // no mark: a meta-declared charset that decodes to a leading U+FEFF
+    // still has it stripped
+    val gb = "\ufeff<meta charset=gb18030><p>x</p>".getBytes("GB18030")
+    assert(Html.decode(gb) == "<meta charset=gb18030><p>x</p>")
+  }
+
+  test("role table agrees with the reference element sets") {
+    import Html.Role
+    val names = ReferenceKernel.blockTags ++ ReferenceKernel.voidTags ++ ReferenceKernel.boilerTags ++
+      ReferenceKernel.contentTags ++ Set("a", "script", "style", "textarea", "noscript", "span", "html",
+      "x-nav", "dav", "pblockquote", "pfigcaption", "xxblockquote", "")
+    for (n <- names) {
+      val r = Html.rolesOf(n)
+      assert(((r & Role.Block) != 0) == ReferenceKernel.blockTags(n), n)
+      assert(((r & Role.Void) != 0) == ReferenceKernel.voidTags(n), n)
+      assert(((r & Role.Boiler) != 0) == ReferenceKernel.boilerTags(n), n)
+      assert(((r & Role.Content) != 0) == ReferenceKernel.contentTags(n), n)
+      assert(((r & Role.Anchor) != 0) == (n == "a"), n)
+      assert(((r & Role.RawText) != 0) == Set("script", "style", "textarea", "noscript")(n), n)
+    }
   }
 
   // ------------------------------------------------------------- classifier
@@ -202,7 +241,7 @@ class KernelSpec extends AnyFunSuite {
     )
     val corpus = (0L to 40L).map(id => new String(HtmlGen.render(id, words(90, id.toInt), "de"), "UTF-8"))
     for (html <- edge ++ corpus) {
-      val a = BlockBuilder.build(Html.tokenize(html))
+      val a = ReferenceKernel.build(ReferenceKernel.tokenize(html))
       val b = BlockBuilder.buildStreaming(html, Html.Deadline.unlimited)
       assert(a == b, s"mismatch for: ${html.take(80)}")
     }
