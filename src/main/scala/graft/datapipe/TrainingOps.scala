@@ -1,6 +1,6 @@
 package graft.datapipe
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.spark.Caches.RegisteredFrame
@@ -4708,6 +4708,22 @@ object TrainingOps extends Serializable {
       .toDF("doc_id", "n_bytes", "content_md5", "modality")
   }
 
+  /** The row shape of the entry walkers (png, jpeg, mp3, zstd, ebml,
+    * ogg, tfrecord, avro, zip, tar, tiff): one row per entry, each
+    * carrying the payload-level `head` (doc_id, status, ...), or — when
+    * the walk found no entries — one row whose entry columns are all
+    * NULL, so every payload surfaces. [[entryFrame]] flattens the pair
+    * into columns.
+    */
+  private def entryRows[H, E](head: H, es: Iterable[E]): Iterable[(H, Option[E])] =
+    if (es.isEmpty) Seq((head, None)) else es.map(e => (head, Some(e)))
+
+  private def entryFrame(rows: Dataset[_], names: String*): DataFrame =
+    rows.select(col("_1.*"), col("_2.*")).toDF(names: _*)
+
+  /** The 8-byte PNG signature, one char per byte. */
+  private final val PngSignature = "\u0089PNG\r\n\u001a\n"
+
   /** WARC record splitting (ISO 28500) — the byte-level primitive every
     * Common-Crawl pipeline starts at: a segment blob holds concatenated
     * `WARC/1.0` records (`header CRLFCRLF payload CRLFCRLF`), and the
@@ -4892,7 +4908,7 @@ object TrainingOps extends Serializable {
           found
         }
         it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
+          val b = new ByteCursor(raw).bytes
           val bom =
             if (b.length >= 3 && (b(0) & 0xff) == 0xef && (b(1) & 0xff) == 0xbb &&
               (b(2) & 0xff) == 0xbf) "utf-8"
@@ -5011,7 +5027,7 @@ object TrainingOps extends Serializable {
       .mapPartitions { it =>
         val digest = java.security.MessageDigest.getInstance("MD5")
         it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
+          val b = new ByteCursor(raw).bytes
           val h = parseHttpRegion(digest, b, 0, b.length)
           (id, h.code, h.ctype, h.loc, h.status, h.bodyOffset, h.bodyLen, h.bodyMd5)
         }
@@ -5124,55 +5140,36 @@ object TrainingOps extends Serializable {
     import spark.implicits._
     payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def le(b: Array[Byte], i: Int, n: Int): Long = {
-          var v = 0L; var k = n - 1
-          while (k >= 0) { v = (v << 8) | (b(i + k) & 0xffL); k -= 1 }
-          v
-        }
-        def tag(b: Array[Byte], i: Int): String =
-          if (i + 4 <= b.length) new String(b, i, 4, "US-ASCII") else ""
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          var chans: Option[Int] = None
-          var rate: Option[Int] = None
-          var bits: Option[Int] = None
-          var byteRate = 0L
-          var dataSize: Option[Long] = None
-          var status: String = null
-          if (n < 12 || tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE") status = "unknown"
-          else {
+      .map { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        var chans: Option[Int] = None
+        var rate: Option[Int] = None
+        var bits: Option[Int] = None
+        var byteRate = 0L
+        var dataSize: Option[Long] = None
+        val status =
+          if (!c.has(0, "RIFF") || !c.has(8, "WAVE")) "unknown"
+          else try {
             var i = 12
-            while (status == null && i < n) {
-              if (i + 8 > n) status = "truncated"
-              else {
-                val cid = tag(b, i)
-                val sz = le(b, i + 4, 4)
-                val body = i + 8
-                if (body + sz > n) status = "truncated"
-                else {
-                  if (cid == "fmt " && sz >= 16) {
-                    chans = Some(le(b, body + 2, 2).toInt)
-                    rate = Some(le(b, body + 4, 4).toInt)
-                    byteRate = le(b, body + 8, 4)
-                    bits = Some(le(b, body + 14, 2).toInt)
-                  } else if (cid == "data") dataSize = Some(sz)
-                  // odd chunk: one pad byte NOT counted by the size field
-                  i = body + sz.toInt + (sz.toInt & 1)
-                }
-              }
+            while (i < c.length) {
+              val cid = c.ascii(i, 4)
+              val sz = c.le(i + 4, 4)
+              val body = c.need(i + 8, sz)
+              if (cid == "fmt " && sz >= 16) {
+                chans = Some(c.le(body + 2, 2).toInt)
+                rate = Some(c.le(body + 4, 4).toInt)
+                byteRate = c.le(body + 8, 4)
+                bits = Some(c.le(body + 14, 2).toInt)
+              } else if (cid == "data") dataSize = Some(sz)
+              // odd chunk: one pad byte NOT counted by the size field
+              i = body + sz.toInt + (sz.toInt & 1)
             }
-            if (status == null)
-              status = if (chans.isDefined && dataSize.isDefined) "ok" else "truncated"
-          }
-          val dur =
-            if (status == "ok" && byteRate > 0) Some(1000L * dataSize.get / byteRate)
-            else None
-          val ok = status == "ok"
-          (id, if (ok) chans else None, if (ok) rate else None,
-            if (ok) bits else None, if (ok) dataSize else None, dur, status)
-        }
+            if (chans.isDefined && dataSize.isDefined) "ok" else "truncated"
+          } catch { case ByteCursor.Truncated => "truncated" }
+        val ok = status == "ok"
+        val dur = if (ok && byteRate > 0) Some(1000L * dataSize.get / byteRate) else None
+        (id, if (ok) chans else None, if (ok) rate else None,
+          if (ok) bits else None, if (ok) dataSize else None, dur, status)
       }
       .toDF("doc_id", "channels", "sample_rate", "bits", "data_bytes",
         "duration_ms", "status")
@@ -5205,79 +5202,21 @@ object TrainingOps extends Serializable {
       .mapPartitions { it =>
         val digest = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (sid, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
+          val c = new ByteCursor(raw)
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Long, Int, Long, String, String)]
           var off = 0
-          var idx = 0
           var halted = false
-          while (!halted && off < n) {
-            if (off + 2 <= n && ((b(off) & 0xff) != 0x1f || (b(off + 1) & 0xff) != 0x8b)) {
-              out += ((sid, idx, 0L, null, "malformed")); halted = true
-            } else if (off + 10 > n) {
-              out += ((sid, idx, 0L, null, "truncated")); halted = true
-            } else if ((b(off + 2) & 0xff) != 8) {
-              out += ((sid, idx, 0L, null, "malformed")); halted = true
-            } else {
-              val flg = b(off + 3) & 0xff
-              var p = off + 10
-              var bad = false
-              if ((flg & 4) != 0) { // FEXTRA
-                if (p + 2 > n) bad = true
-                else { val xlen = le(p, 2).toInt; p += 2 + xlen }
-              }
-              if (!bad && (flg & 8) != 0) { // FNAME: zero-terminated
-                while (p < n && b(p) != 0) p += 1
-                if (p >= n) bad = true else p += 1
-              }
-              if (!bad && (flg & 16) != 0) { // FCOMMENT
-                while (p < n && b(p) != 0) p += 1
-                if (p >= n) bad = true else p += 1
-              }
-              if (!bad && (flg & 2) != 0) p += 2 // FHCRC
-              if (bad || p > n) {
-                out += ((sid, idx, 0L, null, "truncated")); halted = true
-              } else {
-                val inf = new java.util.zip.Inflater(true)
-                val crc = new java.util.zip.CRC32
-                inf.setInput(b, p, n - p)
-                val buf = new Array[Byte](8192)
-                digest.reset()
-                var total = 0L
-                var fault: String = null
-                try {
-                  while (fault == null && !inf.finished()) {
-                    val k = inf.inflate(buf)
-                    if (k > 0) {
-                      digest.update(buf, 0, k); crc.update(buf, 0, k); total += k
-                    } else if (inf.needsInput()) fault = "truncated"
-                  }
-                } catch {
-                  case _: java.util.zip.DataFormatException => fault = "corrupt"
-                }
-                if (fault == null) {
-                  val trailerOff = p + ((n - p) - inf.getRemaining)
-                  if (trailerOff + 8 > n) fault = "truncated"
-                  else if (le(trailerOff, 4) != crc.getValue ||
-                    le(trailerOff + 4, 4) != (total & 0xffffffffL)) fault = "corrupt"
-                  else {
-                    out += ((sid, idx, total,
-                      digest.digest().map("%02x".format(_)).mkString, "ok"))
-                    off = trailerOff + 8
-                    idx += 1
-                  }
-                }
-                inf.end()
-                if (fault != null) {
-                  out += ((sid, idx, 0L, null, fault)); halted = true
-                }
-              }
+          while (!halted && off < c.length) {
+            var total = 0L
+            digest.reset()
+            gzipMemberAt(c, off, (buf, k) => { digest.update(buf, 0, k); total += k }) match {
+              case Right(next) =>
+                out += ((sid, out.length, total,
+                  digest.digest().map("%02x".format(_)).mkString, "ok"))
+                off = next
+              case Left(fault) =>
+                out += ((sid, out.length, 0L, null, fault)); halted = true
             }
           }
           out
@@ -5286,8 +5225,53 @@ object TrainingOps extends Serializable {
       .toDF("segment_id", "member_idx", "uncompressed_len", "content_md5", "status")
   }
 
+  /** The gzip member walk shared by [[gzipMembers]] and [[ccReader]]:
+    * the RFC 1952 header at `off` (CM=8 required; FEXTRA, FNAME,
+    * FCOMMENT and FHCRC skipped), the raw deflate stream inflated into
+    * `sink` chunk by chunk, then the CRC32 + ISIZE trailer, both checked
+    * against the inflated bytes. Right(offset after the trailer), or
+    * Left(verdict): `malformed` (no gzip magic, or CM != 8), `truncated`
+    * (header, deflate stream or trailer overruns the segment), `corrupt`
+    * (bad deflate data, or a CRC or ISIZE mismatch).
+    */
+  private def gzipMemberAt(c: ByteCursor, off: Int,
+      sink: (Array[Byte], Int) => Unit): Either[String, Int] =
+    if (c.fits(off, 2) && c.be(off, 2) != 0x1f8bL) Left("malformed")
+    else if (!c.fits(off, 10)) Left("truncated")
+    else if (c.u8(off + 2) != 8) Left("malformed")
+    else try {
+      val flg = c.u8(off + 3)
+      c.pos = off + 10
+      if ((flg & 4) != 0) c.skip(2 + c.le(c.pos, 2)) // FEXTRA
+      for (f <- Seq(8, 16) if (flg & f) != 0) { // FNAME, FCOMMENT: zero-terminated
+        while (c.u8(c.pos) != 0) c.pos += 1
+        c.pos += 1
+      }
+      if ((flg & 2) != 0) c.skip(2) // FHCRC
+      val inf = new java.util.zip.Inflater(true)
+      val crc = new java.util.zip.CRC32
+      inf.setInput(c.bytes, c.pos, c.length - c.pos)
+      val buf = new Array[Byte](8192)
+      var total = 0L
+      try {
+        while (!inf.finished()) {
+          val k = inf.inflate(buf)
+          if (k > 0) { sink(buf, k); crc.update(buf, 0, k); total += k }
+          else if (inf.needsInput()) throw ByteCursor.Truncated
+        }
+        val trailer = c.need(c.length - inf.getRemaining, 8)
+        if (c.le(trailer, 4) != crc.getValue ||
+          c.le(trailer + 4, 4) != (total & 0xffffffffL)) Left("corrupt")
+        else Right(trailer + 8)
+      } catch {
+        case _: java.util.zip.DataFormatException => Left("corrupt")
+      } finally inf.end()
+    } catch {
+      case ByteCursor.Truncated => Left("truncated")
+    }
+
   /** THE complete Common-Crawl reader — the full container stack fused
-    * in ONE typed pass: gzip member walk ([[gzipMembers]]) → inflate →
+    * in ONE typed pass: gzip member walk ([[gzipMemberAt]]) → inflate →
     * WARC record header at the member start → HTTP response parse over
     * the payload region ([[parseHttpRegion]]). One load-bearing semantic
     * DIFFERENCE from m3's plain-bytes walk: gzip members delimit
@@ -5312,101 +5296,38 @@ object TrainingOps extends Serializable {
         val lenRe = "(?m)^Content-Length: (\\d+)$".r
         val CRLF2 = Array[Byte]('\r', '\n', '\r', '\n')
         it.flatMap { case (sid, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
+          val c = new ByteCursor(raw)
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Long, Int, String, Option[Int], Option[String], Option[String], String)]
-          def fault(idx: Int, st: String): Unit =
-            out += ((sid, idx, null, None, None, None, st))
+          def verdict(uri: String, st: String): Unit =
+            out += ((sid, out.length, uri, None, None, None, st))
           var off = 0
-          var idx = 0
           var halted = false
-          while (!halted && off < n) {
-            if (off + 2 <= n && ((b(off) & 0xff) != 0x1f || (b(off + 1) & 0xff) != 0x8b)) {
-              fault(idx, "gzip_malformed"); halted = true
-            } else if (off + 10 > n || (b(off + 2) & 0xff) != 8) {
-              fault(idx, if (off + 10 > n) "gzip_truncated" else "gzip_malformed")
-              halted = true
-            } else {
-              val flg = b(off + 3) & 0xff
-              var p = off + 10
-              var bad = false
-              if ((flg & 4) != 0) {
-                if (p + 2 > n) bad = true else { val x = le(p, 2).toInt; p += 2 + x }
-              }
-              if (!bad && (flg & 8) != 0) {
-                while (p < n && b(p) != 0) p += 1
-                if (p >= n) bad = true else p += 1
-              }
-              if (!bad && (flg & 16) != 0) {
-                while (p < n && b(p) != 0) p += 1
-                if (p >= n) bad = true else p += 1
-              }
-              if (!bad && (flg & 2) != 0) p += 2
-              if (bad || p > n) { fault(idx, "gzip_truncated"); halted = true }
-              else {
-                val inf = new java.util.zip.Inflater(true)
-                val crc = new java.util.zip.CRC32
-                inf.setInput(b, p, n - p)
-                val chunk = new Array[Byte](8192)
-                val body = new java.io.ByteArrayOutputStream(16384)
-                var gzFault: String = null
-                try {
-                  while (gzFault == null && !inf.finished()) {
-                    val k = inf.inflate(chunk)
-                    if (k > 0) { body.write(chunk, 0, k); crc.update(chunk, 0, k) }
-                    else if (inf.needsInput()) gzFault = "gzip_truncated"
-                  }
-                } catch {
-                  case _: java.util.zip.DataFormatException => gzFault = "gzip_corrupt"
-                }
-                if (gzFault == null) {
-                  val trailerOff = p + ((n - p) - inf.getRemaining)
-                  if (trailerOff + 8 > n) gzFault = "gzip_truncated"
-                  else if (le(trailerOff, 4) != crc.getValue ||
-                    le(trailerOff + 4, 4) != (body.size.toLong & 0xffffffffL))
-                    gzFault = "gzip_corrupt"
+          while (!halted && off < c.length) {
+            val body = new java.io.ByteArrayOutputStream(16384)
+            gzipMemberAt(c, off, (buf, k) => body.write(buf, 0, k)) match {
+              case Left(fault) => verdict(null, "gzip_" + fault); halted = true
+              case Right(next) =>
+                // one WARC record per member (the CC convention):
+                // parse header, then HTTP over the payload region
+                val rec = body.toByteArray
+                val he = findBytes(rec, CRLF2, 0)
+                // not a record at all: malformed even without a header
+                // terminator to point at
+                if (!new ByteCursor(rec).has(0, "WARC/1.0")) verdict(null, "warc_malformed")
+                else if (he < 0) verdict(null, "warc_truncated")
+                else {
+                  val header = new String(rec, 0, he, "UTF-8")
+                  val uri = uriRe.findFirstMatchIn(header).map(_.group(1)).orNull
+                  val clOpt = lenRe.findFirstMatchIn(header).map(_.group(1).toInt)
+                  if (uri == null || clOpt.isEmpty) verdict(uri, "warc_malformed")
+                  else if (he + 4 + clOpt.get > rec.length) verdict(uri, "warc_truncated")
                   else {
-                    // one WARC record per member (the CC convention):
-                    // parse header, then HTTP over the payload region
-                    val rec = body.toByteArray
-                    val isWarc = rec.length >= 8 &&
-                      new String(rec, 0, 8, "US-ASCII") == "WARC/1.0"
-                    val he = findBytes(rec, CRLF2, 0)
-                    if (!isWarc) // not a record at all — malformed even
-                      // without a header terminator to point at
-                      out += ((sid, idx, null, None, None, None, "warc_malformed"))
-                    else if (he < 0)
-                      out += ((sid, idx, null, None, None, None, "warc_truncated"))
-                    else {
-                      val header = new String(rec, 0, he, "UTF-8")
-                      val uri = uriRe.findFirstMatchIn(header).map(_.group(1)).orNull
-                      val clOpt = lenRe.findFirstMatchIn(header).map(_.group(1).toInt)
-                      if (uri == null || clOpt.isEmpty)
-                        out += ((sid, idx, uri, None, None, None, "warc_malformed"))
-                      else {
-                        val cl = clOpt.get
-                        val ps = he + 4
-                        if (ps + cl > rec.length)
-                          out += ((sid, idx, uri, None, None, None, "warc_truncated"))
-                        else {
-                          val h = parseHttpRegion(digest, rec, ps, ps + cl)
-                          out += ((sid, idx, uri, h.code, h.ctype, h.bodyMd5, h.status))
-                        }
-                      }
-                    }
-                    off = trailerOff + 8
-                    idx += 1
+                    val h = parseHttpRegion(digest, rec, he + 4, he + 4 + clOpt.get)
+                    out += ((sid, out.length, uri, h.code, h.ctype, h.bodyMd5, h.status))
                   }
                 }
-                inf.end()
-                if (gzFault != null) { fault(idx, gzFault); halted = true }
-              }
+                off = next
             }
           }
           out
@@ -5437,9 +5358,7 @@ object TrainingOps extends Serializable {
     d.end()
     val crc = new java.util.zip.CRC32
     crc.update(content)
-    def le4(v: Long) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    bb ++= le4(crc.getValue); bb ++= le4(content.length.toLong & 0xffffffffL)
+    bb ++= ByteCursor.le(crc.getValue, 4) ++ ByteCursor.le(content.length, 4)
     bb.toArray
   }
 
@@ -5451,10 +5370,8 @@ object TrainingOps extends Serializable {
     * oracle.
     */
   def syntheticWavPayload(id: Long): Array[Byte] = {
+    import ByteCursor.le
     def a(s: String) = s.getBytes("US-ASCII")
-    def le2(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def le4(v: Long) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
     val chans = 1 + (id % 2).toInt
     val rate = 8000 * (1 + (id % 4).toInt)
     val bits = 16
@@ -5462,20 +5379,20 @@ object TrainingOps extends Serializable {
     val byteRate = rate.toLong * blockAlign
     val nSamples = 100 + (id % 50).toInt
     val data = Array.fill[Byte](nSamples * blockAlign)(0x11)
-    def fmt = a("fmt ") ++ le4(16) ++ le2(1) ++ le2(chans) ++ le4(rate) ++
-      le4(byteRate) ++ le2(blockAlign) ++ le2(bits)
-    def dataCk = a("data") ++ le4(data.length.toLong) ++ data
+    def fmt = a("fmt ") ++ le(16, 4) ++ le(1, 2) ++ le(chans, 2) ++ le(rate, 4) ++
+      le(byteRate, 4) ++ le(blockAlign, 2) ++ le(bits, 2)
+    def dataCk = a("data") ++ le(data.length, 4) ++ data
     def riff(chunks: Array[Byte]) =
-      a("RIFF") ++ le4(4L + chunks.length) ++ a("WAVE") ++ chunks
+      a("RIFF") ++ le(4L + chunks.length, 4) ++ a("WAVE") ++ chunks
     (id % 5) match {
       case 0 => riff(fmt ++ dataCk)
       case 1 => // odd-sized LIST chunk + its pad byte, then fmt/data —
         // a walker ignoring the pad lands off-grid and dies
         val listBody = a("INFOx" * 1).take(5)
-        riff(a("LIST") ++ le4(listBody.length.toLong) ++ listBody ++
+        riff(a("LIST") ++ le(listBody.length, 4) ++ listBody ++
           Array[Byte](0) ++ fmt ++ dataCk)
       case 2 => // data first, then a JUNK chunk, then fmt
-        val junk = a("JUNK") ++ le4(4) ++ Array.fill[Byte](4)(0x22)
+        val junk = a("JUNK") ++ le(4, 4) ++ Array.fill[Byte](4)(0x22)
         riff(dataCk ++ junk ++ fmt)
       case 3 => riff(fmt).take(20) // cut inside the fmt body
       case _ => a(s"not a riff payload $id")
@@ -5518,43 +5435,40 @@ object TrainingOps extends Serializable {
   def syntheticImagePayload(id: Long): Array[Byte] = {
     val w = (16 + id % 640).toInt
     val h = (16 + id % 480).toInt
-    def be2(v: Int) = Array[Byte](((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be4(v: Int) = Array[Byte]((v >>> 24).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def le2(v: Int) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
+    import ByteCursor.{be, le}
     val pngSig = Array[Byte](0x89.toByte, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
     (id % 6) match {
       case 0 => // PNG: signature, IHDR (13-byte body), zero CRC, junk tail
         bb ++= pngSig
-        bb ++= be4(13); bb ++= "IHDR".getBytes("US-ASCII")
-        bb ++= be4(w); bb ++= be4(h)
+        bb ++= be(13, 4); bb ++= "IHDR".getBytes("US-ASCII")
+        bb ++= be(w, 4); bb ++= be(h, 4)
         bb ++= Array[Byte](8, 6, 0, 0, 0) // depth, color, comp, filter, interlace
-        bb ++= be4(0)
+        bb ++= be(0, 4)
         bb ++= s"junk$id".getBytes("US-ASCII")
       case 1 => // GIF89a: 6-byte magic, LE width/height, flags/bg/aspect
         bb ++= "GIF89a".getBytes("US-ASCII")
-        bb ++= le2(w); bb ++= le2(h); bb ++= Array[Byte](0, 0, 0)
+        bb ++= le(w, 2); bb ++= le(h, 2); bb ++= Array[Byte](0, 0, 0)
         bb ++= s"junk$id".getBytes("US-ASCII")
       case 2 => // JPEG: SOI, APP0/JFIF, COM (variable length, embedded
         // FF D8 magic in the body — must be skipped by LENGTH, never by
         // magic search), optional fill byte, SOF0, EOI
         bb ++= Array(0xff.toByte, 0xd8.toByte)
-        bb ++= Array(0xff.toByte, 0xe0.toByte); bb ++= be2(16)
+        bb ++= Array(0xff.toByte, 0xe0.toByte); bb ++= be(16, 2)
         bb ++= "JFIF".getBytes("US-ASCII"); bb += 0; bb ++= Array.fill[Byte](9)(0)
         val com = s"c$id".getBytes("US-ASCII") ++
           Array(0xff.toByte, 0xd8.toByte) ++ Array.fill[Byte]((id % 23).toInt)('x')
-        bb ++= Array(0xff.toByte, 0xfe.toByte); bb ++= be2(com.length + 2); bb ++= com
+        bb ++= Array(0xff.toByte, 0xfe.toByte); bb ++= be(com.length + 2, 2); bb ++= com
         if (id % 4 == 2) bb += 0xff.toByte // fill byte before the next marker
-        bb ++= Array(0xff.toByte, 0xc0.toByte); bb ++= be2(17)
-        bb += 8; bb ++= be2(h); bb ++= be2(w)
+        bb ++= Array(0xff.toByte, 0xc0.toByte); bb ++= be(17, 2)
+        bb += 8; bb ++= be(h, 2); bb ++= be(w, 2)
         bb += 3; bb ++= Array.fill[Byte](9)(0)
         bb ++= Array(0xff.toByte, 0xd9.toByte)
       case 3 => // truncated PNG: signature + 4 bytes, IHDR never arrives
-        bb ++= pngSig; bb ++= be4(13)
+        bb ++= pngSig; bb ++= be(13, 4)
       case 5 => // malformed JPEG: SOS with no prior SOF — dims unknowable
         bb ++= Array(0xff.toByte, 0xd8.toByte, 0xff.toByte, 0xda.toByte)
-        bb ++= be2(4); bb ++= "xx".getBytes("US-ASCII")
+        bb ++= be(4, 2); bb ++= "xx".getBytes("US-ASCII")
       case _ => // not an image at all
         bb ++= s"plain text payload $id".getBytes("US-ASCII")
     }
@@ -5597,14 +5511,13 @@ object TrainingOps extends Serializable {
     *   5: clean EOF after a complete chunk but no IEND.
     */
   def syntheticPngPayload(id: Long): Array[Byte] = {
-    def be4(v: Long) = Array[Byte](((v >>> 24) & 0xff).toByte,
-      ((v >>> 16) & 0xff).toByte, ((v >>> 8) & 0xff).toByte, (v & 0xff).toByte)
+    import ByteCursor.be
     def fill(n: Int): Array[Byte] = Array.tabulate(n)(i => (0x61 + i % 13).toByte)
     def chunk(t: String, data: Array[Byte], crcXor: Long = 0L): Array[Byte] = {
       val crc = new java.util.zip.CRC32
       val tb = t.getBytes("US-ASCII")
       crc.update(tb); crc.update(data)
-      be4(data.length.toLong) ++ tb ++ data ++ be4((crc.getValue ^ crcXor) & 0xffffffffL)
+      be(data.length, 4) ++ tb ++ data ++ be(crc.getValue ^ crcXor, 4)
     }
     val sig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
     val tl = (1 + id % 17).toInt
@@ -5618,10 +5531,10 @@ object TrainingOps extends Serializable {
         chunk("IDAT", fill(dl)) ++ chunk("IDAT", fill(3)) ++
         chunk("IEND", Array.emptyByteArray) ++ s"JUNK$id".getBytes("US-ASCII")
       case 2 =>
-        if ((id / 6) % 2 == 0) sig ++ ihdr ++ be4(1000L) ++
+        if ((id / 6) % 2 == 0) sig ++ ihdr ++ be(1000L, 4) ++
           "tIME".getBytes("US-ASCII") ++ fill(4) // data overruns EOF
         else sig ++ ihdr ++ Array[Byte](0, 0, 0) // partial header
-      case 3 => sig ++ ihdr ++ be4(0x80000001L) ++ "tIME".getBytes("US-ASCII") ++ fill(5)
+      case 3 => sig ++ ihdr ++ be(0x80000001L, 4) ++ "tIME".getBytes("US-ASCII") ++ fill(5)
       case 4 => s"GIF89a not a png $id".getBytes("US-ASCII")
       case _ => sig ++ ihdr ++ chunk("tEXt", fill(tl))
     }
@@ -5654,63 +5567,45 @@ object TrainingOps extends Serializable {
     */
   def pngChunks(spark: SparkSession, payloads: DataFrame): DataFrame = {
     import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
+    val rows = payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val sig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
-          val isPng = b.length >= 8 && (0 until 8).forall(i => (b(i) & 0xff) == sig(i))
-          if (!isPng)
-            Seq((id, "not_png", None: Option[Int], None: Option[Long],
-              None: Option[String], None: Option[Int], None: Option[Int],
-              None: Option[Int]))
-          else {
-            val out = scala.collection.mutable.ArrayBuffer
-              .empty[(Int, Long, String, Int, Int, Int)]
+      .flatMap { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, Long, String, Int, Int, Int)]
+        val status =
+          if (!c.has(0, PngSignature)) "not_png"
+          else try {
             var p = 8
-            var idx = 0
-            var status: String = null
-            while (status == null) {
-              if (p == b.length) status = "no_iend"
-              else if (p + 8 > b.length) status = "truncated"
+            var v: String = null
+            while (v == null) {
+              if (p == c.length) v = "no_iend"
               else {
-                val len = ((b(p) & 0xffL) << 24) | ((b(p + 1) & 0xffL) << 16) |
-                  ((b(p + 2) & 0xffL) << 8) | (b(p + 3) & 0xffL)
+                c.need(p, 8)
+                val len = c.be(p, 4)
                 val typeOk = (p + 4 until p + 8).forall { i =>
-                  val c = b(i) & 0xff
-                  (c >= 'A' && c <= 'Z') || (c >= 'a' && c <= 'z')
+                  val ch = c.u8(i)
+                  (ch >= 'A' && ch <= 'Z') || (ch >= 'a' && ch <= 'z')
                 }
-                if (len > 0x7fffffffL || !typeOk) status = "malformed"
-                else if (p + 12 + len > b.length) status = "truncated"
+                if (len > 0x7fffffffL || !typeOk) v = "malformed"
                 else {
-                  val ctype = new String(b, p + 4, 4, "US-ASCII")
+                  val stored = c.be(p + 8 + len, 4)
+                  val ctype = c.ascii(p + 4, 4)
                   val crc = new java.util.zip.CRC32
-                  crc.update(b, p + 4, 4 + len.toInt)
-                  val cp = p + 8 + len.toInt
-                  val stored = ((b(cp) & 0xffL) << 24) | ((b(cp + 1) & 0xffL) << 16) |
-                    ((b(cp + 2) & 0xffL) << 8) | (b(cp + 3) & 0xffL)
-                  out += ((idx, p.toLong, ctype, len.toInt,
+                  crc.update(c.bytes, p + 4, 4 + len.toInt)
+                  out += ((out.length, p.toLong, ctype, len.toInt,
                     if (crc.getValue == stored) 1 else 0,
-                    if ((b(p + 4) & 0x20) == 0) 1 else 0))
-                  idx += 1
+                    if ((c.u8(p + 4) & 0x20) == 0) 1 else 0))
                   p += 12 + len.toInt
-                  if (ctype == "IEND") status = "ok"
+                  if (ctype == "IEND") v = "ok"
                 }
               }
             }
-            val es = out.toList
-            if (es.isEmpty)
-              Seq((id, status, None: Option[Int], None: Option[Long],
-                None: Option[String], None: Option[Int], None: Option[Int],
-                None: Option[Int]))
-            else es.map { case (i2, off, ct, ln, ck, cr) =>
-              (id, status, Some(i2), Some(off), Some(ct), Some(ln), Some(ck), Some(cr))
-            }
-          }
-        }
+            v
+          } catch { case ByteCursor.Truncated => "truncated" }
+        entryRows((id, status), out)
       }
-      .toDF("doc_id", "status", "idx", "c_off", "ctype", "clen", "crc_ok", "critical")
+    entryFrame(rows, "doc_id", "status", "idx", "c_off", "ctype", "clen", "crc_ok", "critical")
   }
 
   /** Synthetic JPEG payloads for [[jpegSegments]] — six families keyed
@@ -5732,27 +5627,27 @@ object TrainingOps extends Serializable {
     *      truncated-download signature, distinct from header truncation).
     */
   def syntheticJpegPayload(id: Long): Array[Byte] = {
+    import ByteCursor.be
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
     def mk(x: Int): Unit = { bb += 0xff.toByte; bb += x.toByte }
-    def be2(v: Int): Unit = { bb += ((v >>> 8) & 0xff).toByte; bb += (v & 0xff).toByte }
     def fill(n: Int): Unit = (0 until n).foreach(i => bb += (0x41 + i % 23).toByte)
     val al = (1 + id % 17).toInt
     val cl = (id % 9).toInt
     val el = (5 + id % 13).toInt
-    def app0(): Unit = { mk(0xe0); be2(al + 2); fill(al) }
+    def app0(): Unit = { mk(0xe0); bb ++= be(al + 2, 2); fill(al) }
     def sof0(): Unit = {
-      mk(0xc0); be2(17); bb += 8.toByte; be2(16); be2(16); bb += 3.toByte
+      mk(0xc0); bb ++= be(17, 2); bb += 8.toByte; bb ++= be(16, 2) ++ be(16, 2); bb += 3.toByte
       (1 to 3).foreach { c => bb += c.toByte; bb += 0x11.toByte; bb += 0.toByte }
     }
     def sos(): Unit = {
-      mk(0xda); be2(12); bb += 3.toByte
+      mk(0xda); bb ++= be(12, 2); bb += 3.toByte
       (1 to 3).foreach { c => bb += c.toByte; bb += 0.toByte }
       bb += 0.toByte; bb += 63.toByte; bb += 0.toByte
     }
     (id % 6) match {
       case 0 =>
         mk(0xd8); app0()
-        mk(0xfe); be2(cl + 4); bb += 0xff.toByte; bb += 0xd8.toByte; fill(cl)
+        mk(0xfe); bb ++= be(cl + 4, 2); bb += 0xff.toByte; bb += 0xd8.toByte; fill(cl)
         sof0(); sos()
         bb += 0xff.toByte; bb += 0x00.toByte; fill(el)
         mk(0xd0); fill(3)
@@ -5760,9 +5655,9 @@ object TrainingOps extends Serializable {
         bb ++= s"JUNK$id".getBytes("US-ASCII")
       case 1 => mk(0xd8); app0(); bb += 'X'.toByte; fill(4)
       case 2 =>
-        if ((id / 6) % 2 == 0) { mk(0xd8); app0(); mk(0xfe); be2(cl + 50); fill(2) }
+        if ((id / 6) % 2 == 0) { mk(0xd8); app0(); mk(0xfe); bb ++= be(cl + 50, 2); fill(2) }
         else { mk(0xd8); app0(); bb += 0xff.toByte }
-      case 3 => mk(0xd8); app0(); mk(0xfe); be2(1); fill(5)
+      case 3 => mk(0xd8); app0(); mk(0xfe); bb ++= be(1, 2); fill(5)
       case 4 => bb ++= s"GIF89a not a jpeg $id".getBytes("US-ASCII")
       case _ =>
         mk(0xd8); app0(); sof0(); sos()
@@ -5803,97 +5698,80 @@ object TrainingOps extends Serializable {
     */
   def jpegSegments(spark: SparkSession, payloads: DataFrame): DataFrame = {
     import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
+    def mname(x: Int): String = x match {
+      case 0xd8 => "SOI"
+      case 0xd9 => "EOI"
+      case 0xda => "SOS"
+      case 0xc4 => "DHT"
+      case 0xdb => "DQT"
+      case 0xdd => "DRI"
+      case 0xfe => "COM"
+      case 0x01 => "TEM"
+      case v if v >= 0xd0 && v <= 0xd7 => "RST" + (v - 0xd0)
+      case v if v >= 0xc0 && v <= 0xcf => "SOF" + (v - 0xc0)
+      case v if v >= 0xe0 && v <= 0xef => "APP" + (v - 0xe0)
+      case v => f"M$v%02X"
+    }
+    val rows = payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def mname(x: Int): String = x match {
-          case 0xd8 => "SOI"
-          case 0xd9 => "EOI"
-          case 0xda => "SOS"
-          case 0xc4 => "DHT"
-          case 0xdb => "DQT"
-          case 0xdd => "DRI"
-          case 0xfe => "COM"
-          case 0x01 => "TEM"
-          case v if v >= 0xd0 && v <= 0xd7 => "RST" + (v - 0xd0)
-          case v if v >= 0xc0 && v <= 0xcf => "SOF" + (v - 0xc0)
-          case v if v >= 0xe0 && v <= 0xef => "APP" + (v - 0xe0)
-          case v => f"M$v%02X"
-        }
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, String, Option[Int], Option[Int])]
-          var status: String = null
-          if (n < 2 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8)
-            status = "not_jpeg"
-          else {
+      .flatMap { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, Long, String, Option[Int], Option[Int])]
+        val status =
+          if (!c.has(0, "\u00ff\u00d8")) "not_jpeg"
+          else try {
             out += ((0, 0L, "SOI", None, None))
             var p = 2
-            var idx = 1
             var entropy = false
             var start = 0
             var scanRow = -1
             def patch(upTo: Int): Unit =
               if (scanRow >= 0) out(scanRow) = out(scanRow).copy(_5 = Some(upTo - start))
-            while (status == null) {
+            var v: String = null
+            while (v == null) {
               if (entropy) {
-                if (p >= n) { patch(p); status = "no_eoi" }
-                else if ((b(p) & 0xff) != 0xff) p += 1
-                else if (p + 1 >= n) { patch(p); status = "no_eoi" }
+                if (c.fits(p, 1) && c.u8(p) != 0xff) p += 1
+                else if (!c.fits(p, 2)) { patch(p); v = "no_eoi" }
                 else {
-                  val m = b(p + 1) & 0xff
+                  val m = c.u8(p + 1)
                   if (m == 0x00) p += 2 // stuffed data byte
                   else if (m >= 0xd0 && m <= 0xd7) {
                     patch(p)
-                    out += ((idx, p.toLong, mname(m), None, None))
-                    scanRow = out.length - 1
-                    idx += 1
+                    scanRow = out.length
+                    out += ((out.length, p.toLong, mname(m), None, None))
                     p += 2; start = p
                   } else { patch(p); entropy = false } // real marker: back to segment mode
                 }
-              } else if (p >= n) status = "truncated"
-              else if ((b(p) & 0xff) != 0xff) status = "malformed"
+              } else if (c.u8(p) != 0xff) v = "malformed"
               else {
                 var j = p // consume fill bytes (runs of FF before the marker byte)
-                while (j < n && (b(j) & 0xff) == 0xff) j += 1
-                if (j >= n) status = "truncated"
-                else {
-                  val m = b(j) & 0xff
-                  if (m == 0x00) status = "malformed"
-                  else if (m == 0xd9) {
-                    out += ((idx, (j - 1).toLong, "EOI", None, None))
-                    idx += 1; status = "ok"
-                  } else if (m == 0xd8 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) {
-                    out += ((idx, (j - 1).toLong, mname(m), None, None))
-                    idx += 1; p = j + 1
-                  } else if (j + 3 > n) status = "truncated"
+                while (c.u8(j) == 0xff) j += 1
+                val m = c.u8(j)
+                if (m == 0x00) v = "malformed"
+                else if (m == 0xd9) {
+                  out += ((out.length, (j - 1).toLong, "EOI", None, None))
+                  v = "ok"
+                } else if (m == 0xd8 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) {
+                  out += ((out.length, (j - 1).toLong, mname(m), None, None))
+                  p = j + 1
+                } else {
+                  val len = c.be(j + 1, 2).toInt
+                  if (len < 2) v = "malformed"
                   else {
-                    val len = ((b(j + 1) & 0xff) << 8) | (b(j + 2) & 0xff)
-                    if (len < 2) status = "malformed"
-                    else if (j + 1 + len > n) status = "truncated"
-                    else {
-                      out += ((idx, (j - 1).toLong, mname(m), Some(len), None))
-                      if (m == 0xda) { scanRow = out.length - 1; entropy = true; start = j + 1 + len }
-                      idx += 1
-                      p = j + 1 + len
-                    }
+                    c.need(j + 1, len)
+                    if (m == 0xda) { scanRow = out.length; entropy = true; start = j + 1 + len }
+                    out += ((out.length, (j - 1).toLong, mname(m), Some(len), None))
+                    p = j + 1 + len
                   }
                 }
               }
             }
-          }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[String], None: Option[Int], None: Option[Int]))
-          else es.map { case (i2, off, mk2, sl, ecs) =>
-            (id, status, Some(i2), Some(off), Some(mk2), sl, ecs)
-          }
-        }
+            v
+          } catch { case ByteCursor.Truncated => "truncated" }
+        entryRows((id, status), out)
       }
-      .toDF("doc_id", "status", "idx", "m_off", "marker", "seg_len", "ecs_len")
+    entryFrame(rows, "doc_id", "status", "idx", "m_off", "marker", "seg_len", "ecs_len")
   }
 
   /** MPEG-1 Layer III bitrate table (kbps by header index 1..14; 0 is
@@ -5996,73 +5874,59 @@ object TrainingOps extends Serializable {
     */
   def mp3Frames(spark: SparkSession, payloads: DataFrame): DataFrame = {
     import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
+    val rows = payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, String, Option[Int], Option[Int], Option[Int], Option[Int], Option[Int])]
-          var status: String = null
-          var p = 0
-          var idx = 0
-          def u(i: Int) = b(i) & 0xff
-          // ID3v2 only at offset 0 per spec
-          if (n >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3') {
-            val ts = (u(6) << 21) | (u(7) << 14) | (u(8) << 7) | u(9)
-            val tl = 10 + ts
-            if (tl > n) status = "truncated"
-            else {
-              out += ((idx, 0L, "id3v2", None, None, None, Some(tl), None))
-              idx += 1; p = tl
+      .flatMap { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, Long, String, Option[Int], Option[Int], Option[Int], Option[Int], Option[Int])]
+        def sync(p: Int) = c.u8(p) == 0xff && (c.u8(p + 1) & 0xe0) == 0xe0
+        // ID3v2 only at offset 0 per spec
+        val id3 = c.fits(0, 10) && c.has(0, "ID3")
+        val status =
+          if (!id3 && !(c.fits(0, 2) && sync(0))) "not_mp3"
+          else try {
+            var p = 0
+            if (id3) {
+              p = 10 + ((c.u8(6) << 21) | (c.u8(7) << 14) | (c.u8(8) << 7) | c.u8(9))
+              c.need(0, p)
+              out += ((0, 0L, "id3v2", None, None, None, Some(p), None))
             }
-          } else if (n < 2 || u(0) != 0xff || (u(1) & 0xe0) != 0xe0) {
-            status = "not_mp3"
-          }
-          while (status == null) {
-            if (p == n) status = "ok"
-            else if (n - p >= 3 && b(p) == 'T' && b(p + 1) == 'A' && b(p + 2) == 'G') {
-              if (n - p == 128) {
-                out += ((idx, p.toLong, "id3v1", None, None, None, Some(128), None))
-                idx += 1; status = "ok"
-              } else status = "malformed"
-            } else if (n - p < 4) status = "truncated"
-            else if (u(p) != 0xff || (u(p + 1) & 0xe0) != 0xe0) status = "malformed"
-            else {
-              val version = (u(p + 1) >> 3) & 0x3
-              val layer = (u(p + 1) >> 1) & 0x3
-              val noCrc = u(p + 1) & 0x1
-              val brIdx = u(p + 2) >> 4
-              val srIdx = (u(p + 2) >> 2) & 0x3
-              val pad = (u(p + 2) >> 1) & 0x1
-              if (version != 3 || layer != 1) status = "malformed"
-              else if (brIdx == 0) status = "free_bitrate"
-              else if (brIdx == 15 || srIdx == 3) status = "malformed"
+            var v: String = null
+            while (v == null) {
+              if (p == c.length) v = "ok"
+              else if (c.has(p, "TAG")) {
+                if (c.length - p == 128) {
+                  out += ((out.length, p.toLong, "id3v1", None, None, None, Some(128), None))
+                  v = "ok"
+                } else v = "malformed"
+              } else if (!c.fits(p, 4)) v = "truncated"
+              else if (!sync(p)) v = "malformed"
               else {
-                val flen = 144000 * Mp3Bitrates(brIdx) / Mp3Samplerates(srIdx) + pad
-                if (p + flen > n) status = "truncated"
+                val version = (c.u8(p + 1) >> 3) & 0x3
+                val layer = (c.u8(p + 1) >> 1) & 0x3
+                val noCrc = c.u8(p + 1) & 0x1
+                val brIdx = c.u8(p + 2) >> 4
+                val srIdx = (c.u8(p + 2) >> 2) & 0x3
+                val pad = (c.u8(p + 2) >> 1) & 0x1
+                if (version != 3 || layer != 1) v = "malformed"
+                else if (brIdx == 0) v = "free_bitrate"
+                else if (brIdx == 15 || srIdx == 3) v = "malformed"
                 else {
-                  out += ((idx, p.toLong, "frame", Some(Mp3Bitrates(brIdx)),
-                    Some(Mp3Samplerates(srIdx)), Some(pad), Some(flen),
-                    Some(1 - noCrc)))
-                  idx += 1; p += flen
+                  val flen = 144000 * Mp3Bitrates(brIdx) / Mp3Samplerates(srIdx) + pad
+                  c.need(p, flen)
+                  out += ((out.length, p.toLong, "frame", Some(Mp3Bitrates(brIdx)),
+                    Some(Mp3Samplerates(srIdx)), Some(pad), Some(flen), Some(1 - noCrc)))
+                  p += flen
                 }
               }
             }
-          }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[String], None: Option[Int], None: Option[Int],
-              None: Option[Int], None: Option[Int], None: Option[Int]))
-          else es.map { case (i2, off, k, br, sr, pd, fl, cr) =>
-            (id, status, Some(i2), Some(off), Some(k), br, sr, pd, fl, cr)
-          }
-        }
+            v
+          } catch { case ByteCursor.Truncated => "truncated" }
+        entryRows((id, status), out)
       }
-      .toDF("doc_id", "status", "idx", "f_off", "kind", "br_kbps", "sr_hz",
-        "pad", "flen", "crc")
+    entryFrame(rows, "doc_id", "status", "idx", "f_off", "kind", "br_kbps", "sr_hz",
+      "pad", "flen", "crc")
   }
 
   /** Synthetic zstd payloads for [[zstdFrames]] — six families keyed by
@@ -6085,14 +5949,10 @@ object TrainingOps extends Serializable {
     */
   def syntheticZstdPayload(id: Long): Array[Byte] = {
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le32(v: Long): Unit =
-      (0 until 4).foreach(i => bb += ((v >> (8 * i)) & 0xff).toByte)
-    def magic(): Unit = le32(0xFD2FB528L)
-    def blockHdr(size: Int, btype: Int, last: Int): Unit = {
-      val h = (size << 3) | (btype << 1) | last
-      bb += (h & 0xff).toByte; bb += ((h >> 8) & 0xff).toByte
-      bb += ((h >> 16) & 0xff).toByte
-    }
+    import ByteCursor.le
+    def magic(): Unit = bb ++= le(0xFD2FB528L, 4)
+    def blockHdr(size: Int, btype: Int, last: Int): Unit =
+      bb ++= le((size << 3) | (btype << 1) | last, 3)
     def fill(k: Int, c: Int = 'x'): Unit =
       (0 until k).foreach(i => bb += ((c + i % 23) & 0x7f).toByte)
     val r1 = (16 + id % 32).toInt; val r2 = (8 + id % 16).toInt
@@ -6105,12 +5965,12 @@ object TrainingOps extends Serializable {
         bb += 0x88.toByte // window descriptor
         bb += (id % 256).toByte // dictionary id
         val f = r1 + r2 + rc
-        bb += (f & 0xff).toByte; bb += ((f >> 8) & 0xff).toByte
+        bb ++= le(f, 2)
         blockHdr(r1, 0, 0); fill(r1)
         blockHdr(r2, 2, 0); fill(r2, 'q')
         blockHdr(rc, 1, 1); bb += 'r'.toByte
       case 1 =>
-        le32(0x184D2A50L + id % 16); le32(sk.toLong); fill(sk, 's')
+        bb ++= le(0x184D2A50L + id % 16, 4) ++ le(sk, 4); fill(sk, 's')
         magic(); bb += 0x24.toByte // single-segment + checksum
         bb += raw1.toByte // 1-byte FCS
         blockHdr(raw1, 0, 1); fill(raw1)
@@ -6163,111 +6023,82 @@ object TrainingOps extends Serializable {
     */
   def zstdFrames(spark: SparkSession, payloads: DataFrame): DataFrame = {
     import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
+    val rows = payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def u(i: Int) = b(i) & 0xff
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, String, Option[String], Option[Int], Option[Int], Option[Long])]
-          var status: String = null
-          var p = 0; var idx = 0
-          if (n < 4 || (le(0, 4) != 0xFD2FB528L &&
-            (le(0, 4) & 0xFFFFFFF0L) != 0x184D2A50L)) status = "not_zstd"
-          while (status == null) {
-            if (p == n) status = "ok"
-            else if (n - p < 4) status = "truncated"
-            else {
-              val m = le(p, 4)
-              if ((m & 0xFFFFFFF0L) == 0x184D2A50L) {
-                if (n - p < 8) status = "truncated"
-                else {
-                  val sz = le(p + 4, 4)
-                  if (p + 8 + sz > n) status = "truncated"
-                  else {
-                    out += ((idx, p.toLong, "skippable", None, Some(sz.toInt), None, None))
-                    idx += 1; p += 8 + sz.toInt
-                  }
-                }
-              } else if (m != 0xFD2FB528L) status = "malformed"
-              else if (n - p < 5) status = "truncated"
+      .flatMap { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, Long, String, Option[String], Option[Int], Option[Int], Option[Long])]
+        def skippable(m: Long) = (m & 0xFFFFFFF0L) == 0x184D2A50L
+        val status =
+          if (!c.fits(0, 4) || (c.le(0, 4) != 0xFD2FB528L && !skippable(c.le(0, 4)))) "not_zstd"
+          else try {
+            var p = 0
+            var v: String = null
+            while (v == null) {
+              if (p == c.length) v = "ok"
               else {
-                val d = u(p + 4)
-                val fcsFlag = d >> 6; val single = (d >> 5) & 1
-                val reserved = (d >> 3) & 1; val ck = (d >> 2) & 1
-                val didSize = Array(0, 1, 2, 4)(d & 3)
-                if (reserved == 1) status = "malformed"
+                val m = c.le(p, 4)
+                if (skippable(m)) {
+                  val sz = c.le(p + 4, 4)
+                  c.need(p + 8, sz)
+                  out += ((out.length, p.toLong, "skippable", None, Some(sz.toInt), None, None))
+                  p += 8 + sz.toInt
+                } else if (m != 0xFD2FB528L) v = "malformed"
                 else {
-                  val fcsSize = fcsFlag match {
-                    case 0 => if (single == 1) 1 else 0
-                    case 1 => 2
-                    case 2 => 4
-                    case _ => 8
-                  }
-                  val hl = 5 + (1 - single) + didSize + fcsSize
-                  if (p + hl > n) status = "truncated"
+                  val d = c.u8(p + 4)
+                  val fcsFlag = d >> 6; val single = (d >> 5) & 1
+                  val reserved = (d >> 3) & 1; val ck = (d >> 2) & 1
+                  val didSize = Array(0, 1, 2, 4)(d & 3)
+                  if (reserved == 1) v = "malformed"
                   else {
+                    val fcsSize = fcsFlag match {
+                      case 0 => if (single == 1) 1 else 0
+                      case 1 => 2
+                      case 2 => 4
+                      case _ => 8
+                    }
+                    val hl = 5 + (1 - single) + didSize + fcsSize
+                    c.need(p, hl)
                     val fcsOff = p + 5 + (1 - single) + didSize
                     val fcs: Option[Long] =
                       if (fcsSize == 0) None
-                      else if (fcsSize == 2) Some(le(fcsOff, 2) + 256L)
-                      else Some(le(fcsOff, fcsSize))
-                    out += ((idx, p.toLong, "frame", None, Some(hl), None, fcs))
-                    idx += 1; p += hl
+                      else if (fcsSize == 2) Some(c.le(fcsOff, 2) + 256L)
+                      else Some(c.le(fcsOff, fcsSize))
+                    out += ((out.length, p.toLong, "frame", None, Some(hl), None, fcs))
+                    p += hl
                     var lastSeen = false
-                    while (status == null && !lastSeen) {
-                      if (n - p < 3) status = "truncated"
+                    while (v == null && !lastSeen) {
+                      val h = c.le(p, 3)
+                      val lastB = (h & 1).toInt
+                      val bt = ((h >> 1) & 3).toInt
+                      val bs = (h >> 3).toInt
+                      if (bt == 3) v = "malformed"
                       else {
-                        val h = le(p, 3)
-                        val lastB = (h & 1).toInt
-                        val bt = ((h >> 1) & 3).toInt
-                        val bs = (h >> 3).toInt
-                        if (bt == 3) status = "malformed"
-                        else {
-                          val consumed = 3 + (if (bt == 1) 1 else bs)
-                          if (p + consumed > n) status = "truncated"
-                          else {
-                            val btName =
-                              if (bt == 0) "raw" else if (bt == 1) "rle" else "compressed"
-                            out += ((idx, p.toLong, "block", Some(btName),
-                              Some(bs), Some(lastB), None))
-                            idx += 1; p += consumed
-                            if (lastB == 1) lastSeen = true
-                          }
-                        }
+                        val consumed = 3 + (if (bt == 1) 1 else bs)
+                        c.need(p, consumed)
+                        val btName = if (bt == 0) "raw" else if (bt == 1) "rle" else "compressed"
+                        out += ((out.length, p.toLong, "block", Some(btName),
+                          Some(bs), Some(lastB), None))
+                        p += consumed
+                        lastSeen = lastB == 1
                       }
                     }
-                    if (status == null && ck == 1) {
-                      if (n - p < 4) status = "truncated"
-                      else {
-                        out += ((idx, p.toLong, "checksum", None, Some(4), None, None))
-                        idx += 1; p += 4
-                      }
+                    if (v == null && ck == 1) {
+                      c.need(p, 4)
+                      out += ((out.length, p.toLong, "checksum", None, Some(4), None, None))
+                      p += 4
                     }
                   }
                 }
               }
             }
-          }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[String], None: Option[String], None: Option[Int],
-              None: Option[Int], None: Option[Long]))
-          else es.map { case (i2, off, k, bt, bs, la, fc) =>
-            (id, status, Some(i2), Some(off), Some(k), bt, bs, la, fc)
-          }
-        }
+            v
+          } catch { case ByteCursor.Truncated => "truncated" }
+        entryRows((id, status), out)
       }
-      .toDF("doc_id", "status", "idx", "z_off", "kind", "btype", "bsize",
-        "last", "fcs")
+    entryFrame(rows, "doc_id", "status", "idx", "z_off", "kind", "btype", "bsize",
+      "last", "fcs")
   }
 
   /** Synthetic EBML/Matroska payloads for [[ebmlElements]] — six
@@ -6356,96 +6187,81 @@ object TrainingOps extends Serializable {
     */
   def ebmlElements(spark: SparkSession, payloads: DataFrame): DataFrame = {
     import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
+    val rows = payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def u(i: Int) = b(i) & 0xff
-          def vintWidth(fb: Int, max: Int): Int = {
-            var w = 1; var mask = 0x80
-            while (mask > 0 && (fb & mask) == 0) { w += 1; mask >>= 1 }
-            if (fb == 0 || w > max) -1 else w
+      .flatMap { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        def vintWidth(fb: Int, max: Int): Int = {
+          var w = 1; var mask = 0x80
+          while (mask > 0 && (fb & mask) == 0) { w += 1; mask >>= 1 }
+          if (fb == 0 || w > max) -1 else w
+        }
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, Long, Int, String, Option[Long], Int)]
+        // one element header at p inside a region ending at `end`:
+        // (idHex, size Option, headerLen), null on a malformed VINT;
+        // Truncated when the header runs past `end`
+        def readHeader(p: Int, end: Int): (String, Option[Long], Int) = {
+          def u(q: Int): Int = if (q < end) c.u8(q) else throw ByteCursor.Truncated
+          val iw = vintWidth(u(p), 4)
+          if (iw < 0) return null
+          val idHex = (0 until iw).map(k => f"${u(p + k)}%02X").mkString
+          val sp = p + iw
+          val sw = vintWidth(u(sp), 8)
+          if (sw < 0) return null
+          var v = (u(sp) & (0xff >> sw)).toLong
+          var allOnes = (u(sp) & (0xff >> sw)) == (0xff >> sw)
+          (1 until sw).foreach { k =>
+            v = (v << 8) | u(sp + k); if (u(sp + k) != 0xff) allOnes = false
           }
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, Int, String, Option[Long], Int)]
-          var status: String = null
-          var idx = 0
-          // read one element header at p bounded by end; returns
-          // (idHex, size Option, headerLen) or null after setting status
-          def readHeader(p: Int, end: Int): (String, Option[Long], Int) = {
-            if (end - p < 1) { status = "truncated"; return null }
-            val iw = vintWidth(u(p), 4)
-            if (iw < 0) { status = "malformed"; return null }
-            if (p + iw > end) { status = "truncated"; return null }
-            val idHex = (0 until iw).map(k => f"${u(p + k)}%02X").mkString
-            val sp = p + iw
-            if (end - sp < 1) { status = "truncated"; return null }
-            val sw = vintWidth(u(sp), 8)
-            if (sw < 0) { status = "malformed"; return null }
-            if (sp + sw > end) { status = "truncated"; return null }
-            var v = (u(sp) & (0xff >> sw)).toLong
-            var allOnes = (u(sp) & (0xff >> sw)) == (0xff >> sw)
-            (1 until sw).foreach { k =>
-              v = (v << 8) | u(sp + k); if (u(sp + k) != 0xff) allOnes = false
+          (idHex, if (allOnes) None else Some(v), iw + sw)
+        }
+        // descend one level into a Segment; inside a DECLARED segment a
+        // child crossing the boundary is malformed (disagreeing
+        // extents), inside an unknown-size one it is plain truncation
+        def segment(start: Int, end: Int, unknown: Boolean): String = {
+          val crossing = if (unknown) "truncated" else "malformed"
+          var q = start
+          try {
+            while (q < end) {
+              val ch = readHeader(q, end)
+              if (ch == null || ch._2.isEmpty) return "malformed"
+              val (cid, csz, chl) = ch
+              if (q + chl + csz.get > end) return crossing
+              out += ((out.length, q.toLong, 1, cid, csz, chl))
+              q += chl + csz.get.toInt
             }
-            (idHex, if (allOnes) None else Some(v), iw + sw)
-          }
-          if (n < 4 || !(u(0) == 0x1a && u(1) == 0x45 && u(2) == 0xdf && u(3) == 0xa3))
-            status = "not_ebml"
-          var p = 0
-          while (status == null) {
-            if (p == n) status = "ok"
-            else {
-              val h = readHeader(p, n)
-              if (h != null) {
+            null
+          } catch { case ByteCursor.Truncated => crossing }
+        }
+        val status =
+          if (!c.has(0, "\u001a\u0045\u00df\u00a3")) "not_ebml"
+          else try {
+            var p = 0
+            var v: String = null
+            while (v == null && p < c.length) {
+              val h = readHeader(p, c.length)
+              if (h == null) v = "malformed"
+              else {
                 val (idHex, size, hl) = h
-                if (size.isEmpty && idHex != "18538067") status = "malformed"
+                if (size.isEmpty && idHex != "18538067") v = "malformed"
                 else {
-                  out += ((idx, p.toLong, 0, idHex, size, hl)); idx += 1
+                  out += ((out.length, p.toLong, 0, idHex, size, hl))
                   val cStart = p + hl
-                  val cEnd = size.map(sz => cStart + sz).getOrElse(n.toLong)
-                  if (cEnd > n) status = "truncated"
-                  else if (idHex == "18538067") {
-                    // descend one level into the Segment; inside a
-                    // DECLARED segment a child crossing the boundary is
-                    // malformed (disagreeing extents), inside an
-                    // unknown-size one it is plain truncation (EOF)
-                    val segUnknown = size.isEmpty
-                    var q = cStart
-                    while (status == null && q < cEnd) {
-                      val ch = readHeader(q, cEnd.toInt)
-                      if (ch != null) {
-                        val (cid, csz, chl) = ch
-                        if (csz.isEmpty) status = "malformed"
-                        else if (q + chl + csz.get > cEnd)
-                          status = if (segUnknown) "truncated" else "malformed"
-                        else {
-                          out += ((idx, q.toLong, 1, cid, csz, chl)); idx += 1
-                          q += chl + csz.get.toInt
-                        }
-                      } else if (status == "truncated" && !segUnknown)
-                        status = "malformed"
-                    }
-                    p = cEnd.toInt
-                  } else p = cEnd.toInt
+                  val len = size.getOrElse((c.length - cStart).toLong)
+                  c.need(cStart, len)
+                  val cEnd = cStart + len.toInt
+                  if (idHex == "18538067") v = segment(cStart, cEnd, size.isEmpty)
+                  p = cEnd
                 }
               }
             }
-          }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[Int], None: Option[String], None: Option[Long],
-              None: Option[Int]))
-          else es.map { case (i2, off, lvl, ih, sz, hl) =>
-            (id, status, Some(i2), Some(off), Some(lvl), Some(ih), sz, Some(hl))
-          }
-        }
+            if (v == null) "ok" else v
+          } catch { case ByteCursor.Truncated => "truncated" }
+        entryRows((id, status), out)
       }
-      .toDF("doc_id", "status", "idx", "e_off", "level", "id_hex", "esize",
-        "hdr_len")
+    entryFrame(rows, "doc_id", "status", "idx", "e_off", "level", "id_hex", "esize",
+      "hdr_len")
   }
 
   /** Ogg page CRC (RFC 3533): CRC-32 with polynomial 0x04c11db7,
@@ -6492,9 +6308,8 @@ object TrainingOps extends Serializable {
     *   4: not ogg.
     */
   def syntheticOggPayload(id: Long): Array[Byte] = {
+    import ByteCursor.le
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le(v: Long, k: Int): Unit =
-      (0 until k).foreach(i => bb += ((v >> (8 * i)) & 0xff).toByte)
     val l1 = (10 + id % 50).toInt; val l2 = (5 + id % 20).toInt
     val r = (7 + id % 40).toInt; val l3 = (3 + id % 30).toInt
     val gran = id % 1000; val serial = id % 97
@@ -6503,16 +6318,16 @@ object TrainingOps extends Serializable {
       val start = bb.length
       bb ++= "OggS".getBytes("US-ASCII")
       bb += version.toByte; bb += flags.toByte
-      le(gran, 8); le(serial, 4); le(seq, 4)
+      bb ++= le(gran, 8) ++ le(serial, 4) ++ le(seq, 4)
       val crcPos = bb.length
-      le(0L, 4) // crc placeholder
+      bb ++= le(0L, 4) // crc placeholder
       bb += lacing.length.toByte
       lacing.foreach(v => bb += v.toByte)
       lacing.zipWithIndex.foreach { case (v, k) =>
         (0 until v).foreach(j => bb += (('a' + (k + j) % 23) & 0x7f).toByte)
       }
       val crc = oggCrc(bb.toArray, start, bb.length - start)
-      (0 until 4).foreach(i => bb(crcPos + i) = ((crc >> (8 * i)) & 0xff).toByte)
+      bb.patchInPlace(crcPos, le(crc, 4), 4)
       if (corruptCrc && lacing.nonEmpty && lacing.head > 0)
         bb(bb.length - 1) = (bb(bb.length - 1) ^ 0x01).toByte
     }
@@ -6525,7 +6340,7 @@ object TrainingOps extends Serializable {
       case 2 =>
         bb ++= "OggS".getBytes("US-ASCII")
         bb += 0.toByte; bb += 0x02.toByte
-        le(gran, 8); le(serial, 4); le(0L, 4); le(0L, 4)
+        bb ++= le(gran, 8) ++ le(serial, 4) ++ le(0L, 8)
         bb += 5.toByte; bb += 40.toByte; bb += 40.toByte // table cut short
       case 3 =>
         page(0x02, 0L, Seq(l1))
@@ -6559,77 +6374,53 @@ object TrainingOps extends Serializable {
     */
   def oggPages(spark: SparkSession, payloads: DataFrame): DataFrame = {
     import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
+    val rows = payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def u(i: Int) = b(i) & 0xff
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Int, Long, Int, Long, Long, Long, Int, Int, Int, Int)]
-          var status: String = null
-          var p = 0; var idx = 0
-          if (n < 4 || b(0) != 'O' || b(1) != 'g' || b(2) != 'g' || b(3) != 'S')
-            status = "not_ogg"
-          while (status == null) {
-            if (p == n) status = "ok"
-            else if (n - p < 27) status = "truncated"
-            else if (!(b(p) == 'O' && b(p + 1) == 'g' && b(p + 2) == 'g' && b(p + 3) == 'S'))
-              status = "malformed"
-            else if (u(p + 4) != 0) status = "malformed"
-            else {
-              val flags = u(p + 5)
-              val gran = le(p + 6, 8)
-              val serial = le(p + 14, 4)
-              val seq = le(p + 18, 4)
-              val nseg = u(p + 26)
-              if (p + 27 + nseg > n) status = "truncated"
+      .flatMap { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, Long, Int, Long, Long, Long, Int, Int, Int, Int)]
+        val status =
+          if (!c.has(0, "OggS")) "not_ogg"
+          else try {
+            var p = 0
+            var v: String = null
+            while (v == null) {
+              if (p == c.length) v = "ok"
               else {
-                var body = 0; var pkts = 0
-                (0 until nseg).foreach { k =>
-                  val v = u(p + 27 + k)
-                  body += v; if (v < 255) pkts += 1
-                }
-                val total = 27 + nseg + body
-                if (p + total > n) status = "truncated"
+                c.need(p, 27)
+                if (!c.has(p, "OggS") || c.u8(p + 4) != 0) v = "malformed"
                 else {
+                  val nseg = c.u8(p + 26)
+                  c.need(p + 27, nseg)
+                  var body = 0; var pkts = 0
+                  (0 until nseg).foreach { k =>
+                    val lace = c.u8(p + 27 + k)
+                    body += lace; if (lace < 255) pkts += 1
+                  }
+                  val total = 27 + nseg + body
+                  c.need(p, total)
                   // CRC over the page with its CRC field zeroed
-                  var c = 0
+                  var crc = 0
                   var i = p
                   while (i < p + total) {
-                    val byte = if (i >= p + 22 && i < p + 26) 0 else u(i)
-                    c = (c << 8) ^ OggCrcTable(((c >>> 24) ^ byte) & 0xff)
+                    val byte = if (i >= p + 22 && i < p + 26) 0 else c.u8(i)
+                    crc = (crc << 8) ^ OggCrcTable(((crc >>> 24) ^ byte) & 0xff)
                     i += 1
                   }
-                  val stored = le(p + 22, 4)
-                  val ok = if ((c & 0xffffffffL) == stored) 1 else 0
-                  out += ((idx, p.toLong, flags, gran, serial, seq, nseg,
-                    body, pkts, ok))
-                  idx += 1; p += total
+                  out += ((out.length, p.toLong, c.u8(p + 5), c.le(p + 6, 8), c.le(p + 14, 4),
+                    c.le(p + 18, 4), nseg, body, pkts,
+                    if ((crc & 0xffffffffL) == c.le(p + 22, 4)) 1 else 0))
+                  p += total
                 }
               }
             }
-          }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[Int], None: Option[Long], None: Option[Long],
-              None: Option[Long], None: Option[Int], None: Option[Int],
-              None: Option[Int], None: Option[Int]))
-          else es.map { case (i2, off, fl, gr, se, sq, ns, bo, pk, ok) =>
-            (id, status, Some(i2), Some(off), Some(fl), Some(gr), Some(se),
-              Some(sq), Some(ns), Some(bo), Some(pk), Some(ok))
-          }
-        }
+            v
+          } catch { case ByteCursor.Truncated => "truncated" }
+        entryRows((id, status), out)
       }
-      .toDF("doc_id", "status", "idx", "p_off", "flags", "granule", "serial",
-        "seq", "n_segs", "body_len", "n_packets", "crc_ok")
+    entryFrame(rows, "doc_id", "status", "idx", "p_off", "flags", "granule", "serial",
+      "seq", "n_segs", "body_len", "n_packets", "crc_ok")
   }
 
   /** TFRecord masked CRC32C (the TensorFlow framing convention):
@@ -6661,18 +6452,15 @@ object TrainingOps extends Serializable {
     *   4: a 7-byte fragment of a valid record (truncated mid-length).
     */
   def syntheticTfrecordPayload(id: Long): Array[Byte] = {
+    import ByteCursor.le
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le(v: Long, k: Int): Unit =
-      (0 until k).foreach(i => bb += ((v >> (8 * i)) & 0xff).toByte)
     val lens = Seq((8 + id % 40).toInt, (5 + id % 25).toInt, (3 + id % 10).toInt)
     def record(i: Int, declaredLen: Int, actualLen: Int): Unit = {
-      val lenBytes = new Array[Byte](8)
-      (0 until 8).foreach(k => lenBytes(k) = ((declaredLen.toLong >> (8 * k)) & 0xff).toByte)
-      bb ++= lenBytes
-      le(tfMaskedCrc(lenBytes, 0, 8).toLong & 0xffffffffL, 4)
+      val lenBytes = le(declaredLen, 8)
+      bb ++= lenBytes ++ le(tfMaskedCrc(lenBytes, 0, 8), 4)
       val dataStart = bb.length
       (0 until actualLen).foreach(_ => bb += ('a' + i).toByte)
-      le(tfMaskedCrc(bb.toArray, dataStart, actualLen).toLong & 0xffffffffL, 4)
+      bb ++= le(tfMaskedCrc(bb.toArray, dataStart, actualLen), 4)
     }
     (id % 5) match {
       case 0 => (0 until 3).foreach(i => record(i, lens(i), lens(i)))
@@ -6722,56 +6510,42 @@ object TrainingOps extends Serializable {
     */
   def tfrecordRecords(spark: SparkSession, payloads: DataFrame): DataFrame = {
     import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
+    val rows = payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
+        def crcOk(c: ByteCursor, from: Int, len: Int): Boolean =
+          (tfMaskedCrc(c.bytes, from, len).toLong & 0xffffffffL) == c.le(from + len, 4)
         it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
+          val c = new ByteCursor(raw)
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Int, Long, Long, Int, Int, String)]
-          var status: String = null
-          var p = 0; var idx = 0
-          while (status == null) {
-            if (p == n) status = "ok"
-            else if (n - p < 12) status = "truncated"
-            else {
-              val len = le(p, 8)
-              val lenCrcOk =
-                (tfMaskedCrc(b, p, 8).toLong & 0xffffffffL) == le(p + 8, 4)
-              if (!lenCrcOk) status = "corrupt_len"
-              else if (p + 12 + len + 4 > n) status = "truncated"
+          val status = try {
+            var p = 0
+            var v: String = null
+            while (v == null) {
+              if (p == c.length) v = "ok"
               else {
-                val dataCrcOk =
-                  (tfMaskedCrc(b, p + 12, len.toInt).toLong & 0xffffffffL) ==
-                    le(p + 12 + len.toInt, 4)
-                md.reset()
-                md.update(b, p + 12, len.toInt)
-                val hex = md.digest().map("%02x".format(_)).mkString
-                out += ((idx, p.toLong, len, 1, if (dataCrcOk) 1 else 0, hex))
-                idx += 1; p += 12 + len.toInt + 4
+                val len = c.le(p, 8)
+                if (!crcOk(c, p, 8)) v = "corrupt_len"
+                else {
+                  c.need(p + 12, len + 4)
+                  val dataCrcOk = crcOk(c, p + 12, len.toInt)
+                  md.reset()
+                  md.update(c.bytes, p + 12, len.toInt)
+                  val hex = md.digest().map("%02x".format(_)).mkString
+                  out += ((out.length, p.toLong, len, 1, if (dataCrcOk) 1 else 0, hex))
+                  p += 12 + len.toInt + 4
+                }
               }
             }
-          }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Long],
-              None: Option[Long], None: Option[Int], None: Option[Int],
-              None: Option[String]))
-          else es.map { case (i2, off, ln, lc, dc, h) =>
-            (id, status, Some(i2), Some(off), Some(ln), Some(lc), Some(dc),
-              Some(h))
-          }
+            v
+          } catch { case ByteCursor.Truncated => "truncated" }
+          entryRows((id, status), out)
         }
       }
-      .toDF("doc_id", "status", "idx", "r_off", "rec_len", "len_crc_ok",
-        "data_crc_ok", "payload_md5")
+    entryFrame(rows, "doc_id", "status", "idx", "r_off", "rec_len", "len_crc_ok",
+      "data_crc_ok", "payload_md5")
   }
 
   /** Strict RFC-8259 JSON validity check, from scratch (no library
@@ -6931,7 +6705,7 @@ object TrainingOps extends Serializable {
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
+          val b = new ByteCursor(raw).bytes
           val n = b.length
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Long, Int, Long, Long, String, Int, String)]
@@ -7038,29 +6812,27 @@ object TrainingOps extends Serializable {
     payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .map { case (id, raw) =>
-        val b = if (raw == null) Array.emptyByteArray else raw
-        val n = b.length
+        val c = new ByteCursor(raw)
+        val n = c.length
         def fail(st: String, ver: Option[String] = None, hlen: Option[Long] = None):
             (Long, String, Option[String], Option[String], Option[Boolean],
               Option[Int], Option[Long], Option[Int], Option[Long], Option[Long]) =
           (id, st, ver, None, None, None, None, None, hlen, None)
-        val magic = Array(0x93, 'N', 'U', 'M', 'P', 'Y').map(_.toByte)
-        if (n < 8 || !magic.indices.forall(i => b(i) == magic(i))) fail("not_npy")
+        if (!c.fits(0, 8) || !c.has(0, "\u0093NUMPY")) fail("not_npy")
         else {
-          val maj = b(6) & 0xff
-          val min = b(7) & 0xff
+          val maj = c.u8(6)
+          val min = c.u8(7)
           val ver = Some(s"$maj.$min")
           if (maj < 1 || maj > 3) fail("bad_version", ver)
           else {
             val pre = if (maj == 1) 10 else 12
             if (n < pre) fail("truncated_header", ver)
             else {
-              var hlen = 0L
-              (pre - 1) to 8 by -1 foreach { i => hlen = (hlen << 8) | (b(i) & 0xffL) }
+              val hlen = c.le(8, pre - 8)
               val hdrEnd = pre + hlen
               if (hdrEnd > n) fail("truncated_header", ver, Some(hlen))
               else {
-                val hdr = new String(b, pre, hlen.toInt, "US-ASCII")
+                val hdr = c.ascii(pre, hlen.toInt)
                 // from-scratch dict-literal scan
                 var p = 0
                 val m = scala.collection.mutable.HashMap.empty[String, Any]
@@ -7219,8 +6991,7 @@ object TrainingOps extends Serializable {
     bb ++= "NUMPY".getBytes("US-ASCII")
     bb += verMaj.toByte
     bb += 0.toByte
-    if (verMaj == 1) { bb += (hlen & 0xff).toByte; bb += ((hlen >> 8) & 0xff).toByte }
-    else (0 until 4).foreach(i => bb += ((hlen >> (8 * i)) & 0xff).toByte)
+    bb ++= ByteCursor.le(hlen, if (verMaj == 1) 2 else 4)
     bb ++= (dict + " " * (hlen - dict.length - 1) + "\n").getBytes("US-ASCII")
     if (f == 4) return bb.take(pre + 5).toArray
     val nData = if (f == 3) 3 else itemSize * shape.foldLeft(1)(_ * _)
@@ -7276,8 +7047,8 @@ object TrainingOps extends Serializable {
     payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .flatMap { case (id, raw) =>
-        val b = if (raw == null) Array.emptyByteArray else raw
-        val n = b.length
+        val c = new ByteCursor(raw)
+        val n = c.length
         def one(st: String, hlen: Option[Long] = None):
             Seq[(Long, String, Option[String], Option[String], Option[Int],
               Option[Long], Option[Int], Option[Long], Option[Long],
@@ -7285,12 +7056,11 @@ object TrainingOps extends Serializable {
           Seq((id, st, None, None, None, None, None, None, None, hlen, None))
         if (n < 8) one("too_short")
         else {
-          var hlen = 0L
-          7 to 0 by -1 foreach { i => hlen = (hlen << 8) | (b(i) & 0xffL) }
+          val hlen = c.le(0, 8)
           if (hlen <= 0 || hlen > 100000000L || 8 + hlen > n)
             one("bad_header_len", Some(hlen))
           else {
-            val s = new String(b, 8, hlen.toInt, "UTF-8")
+            val s = new String(c.bytes, 8, hlen.toInt, "UTF-8")
             val nn = s.length
             var p = 0
             // from-scratch scanner over the safetensors JSON grammar
@@ -7584,7 +7354,7 @@ object TrainingOps extends Serializable {
       case _ => ((8L + json.length + 7) / 8) * 8 - 8
     }
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    (0 until 8).foreach(i => bb += ((hlen >> (8 * i)) & 0xff).toByte)
+    bb ++= ByteCursor.le(hlen, 8)
     val padded = if (f == 2 || f == 3) json
       else json + " " * (hlen.toInt - json.length)
     bb ++= padded.getBytes("UTF-8")
@@ -7688,15 +7458,6 @@ object TrainingOps extends Serializable {
       (0 until 0x20).filterNot(Seq(0x08, 0x09, 0x0a, 0x0c, 0x0d).contains)
         .map(c => c.toChar.toString -> f"\\u$c%04x")
 
-  /** Zigzag-varint append (Avro long encoding): zigzag fold then 7-bit
-    * little-endian groups with continuation bits.
-    */
-  private def avroZz(bb: scala.collection.mutable.ArrayBuffer[Byte], v: Long): Unit = {
-    var n = (v << 1) ^ (v >> 63)
-    while ((n & ~0x7fL) != 0) { bb += ((n & 0x7f) | 0x80).toByte; n >>>= 7 }
-    bb += n.toByte
-  }
-
   /** Synthetic Avro Object-Container-File payloads for [[avroBlocks]] —
     * five families keyed by doc_id % 5 (block i: s = 10+(id+i)%50 data
     * bytes of chr('a'+i), o = 1+(id+i)%7 declared objects; sync marker
@@ -7715,11 +7476,12 @@ object TrainingOps extends Serializable {
     *      sync (truncated, codec already parsed).
     */
   def syntheticAvroPayload(id: Long): Array[Byte] = {
+    import ByteCursor.zigzag
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
     val f = (id % 5).toInt
     if (f == 2) return "NotAnAvroFile".getBytes(java.nio.charset.StandardCharsets.UTF_8)
     def wstr(s: String): Unit = {
-      avroZz(bb, s.length.toLong)
+      bb ++= zigzag(s.length.toLong)
       bb ++= s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     }
     val codec = if (f == 1) "deflate" else "null"
@@ -7727,12 +7489,12 @@ object TrainingOps extends Serializable {
     bb ++= Array[Byte]('O', 'b', 'j', 1)
     if (f == 1) {
       // negative-count block: abs(count) entries preceded by their byte size
-      avroZz(bb, -2L)
-      avroZz(bb, (12 + 8 + 11 + 1 + codec.length).toLong) // 39 for "deflate"
-    } else avroZz(bb, 2L)
+      bb ++= zigzag(-2L)
+      bb ++= zigzag((12 + 8 + 11 + 1 + codec.length).toLong) // 39 for "deflate"
+    } else bb ++= zigzag(2L)
     wstr("avro.schema"); wstr("\"bytes\"")
     wstr("avro.codec"); wstr(codec)
-    avroZz(bb, 0L)
+    bb ++= zigzag(0L)
     if (f == 4) return bb.toArray
     bb ++= sync
     val nBlocks = if (f == 1) 3 else 2
@@ -7742,11 +7504,11 @@ object TrainingOps extends Serializable {
       val s = (10 + (id + i) % 50).toInt
       val o = (1 + (id + i) % 7).toLong
       if (f == 3 && i == 1) {
-        avroZz(bb, o); avroZz(bb, (1000 + s).toLong)
+        bb ++= zigzag(o); bb ++= zigzag((1000 + s).toLong)
         bb ++= "xxx".getBytes(java.nio.charset.StandardCharsets.UTF_8)
         halt = true
       } else {
-        avroZz(bb, o); avroZz(bb, s.toLong)
+        bb ++= zigzag(o); bb ++= zigzag(s.toLong)
         (0 until s).foreach(_ => bb += ('a' + i).toByte)
         val sy = sync.clone()
         if (f == 1 && i == 1) sy(0) = (sy(0) ^ 0x01).toByte
@@ -7777,116 +7539,65 @@ object TrainingOps extends Serializable {
     */
   def avroBlocks(spark: SparkSession, payloads: DataFrame): DataFrame = {
     import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
+    val rows = payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         val md = java.security.MessageDigest.getInstance("MD5")
+        val utf8 = java.nio.charset.StandardCharsets.UTF_8
         it.flatMap { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          // zigzag varint at p: (value, nextPos), or null at EOF/overflow
-          def vint(p0: Int): (Long, Int) = {
-            var acc = 0L; var shift = 0; var p = p0
-            while (p < n && shift <= 63) {
-              val by = b(p); p += 1
-              acc |= (by & 0x7fL) << shift
-              if ((by & 0x80) == 0) return ((acc >>> 1) ^ -(acc & 1L), p)
-              shift += 7
-            }
-            null
+          val c = new ByteCursor(raw)
+          // a zigzag length, then that many bytes
+          def bytesAt(): (Int, Int) = {
+            val k = c.zigzag()
+            val at = c.need(c.pos, k)
+            c.pos += k.toInt
+            (at, k.toInt)
           }
-          var status: String = null
           var codec: String = null
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Int, Long, Long, Long, Int, String)]
-          if (n < 4 || b(0) != 'O' || b(1) != 'b' || b(2) != 'j' || b(3) != 1)
-            status = "not_avro"
-          else {
-            var p = 4
-            // metadata map
-            var mapDone = false
-            while (status == null && !mapDone) {
-              val c = vint(p)
-              if (c == null) status = "truncated"
-              else {
-                p = c._2
-                var remaining = math.abs(c._1)
-                if (c._1 == 0) mapDone = true
-                else {
-                  if (c._1 < 0) {
-                    val sz = vint(p) // byte size of the entries; boundary hint only
-                    if (sz == null) { status = "truncated"; remaining = 0 }
-                    else p = sz._2
-                  }
-                  while (status == null && remaining > 0) {
-                    var key: String = null
-                    val kl = vint(p)
-                    if (kl == null || kl._1 < 0 || kl._2 + kl._1 > n) status = "truncated"
-                    else {
-                      key = new String(b, kl._2, kl._1.toInt,
-                        java.nio.charset.StandardCharsets.UTF_8)
-                      p = kl._2 + kl._1.toInt
-                      val vl = vint(p)
-                      if (vl == null || vl._1 < 0 || vl._2 + vl._1 > n) status = "truncated"
-                      else {
-                        if (key == "avro.codec")
-                          codec = new String(b, vl._2, vl._1.toInt,
-                            java.nio.charset.StandardCharsets.UTF_8)
-                        p = vl._2 + vl._1.toInt
-                      }
-                    }
-                    remaining -= 1
-                  }
+          val status =
+            if (!c.has(0, "Obj\u0001")) "not_avro"
+            else try {
+              c.pos = 4
+              // metadata map: blocks of (count, entries), count 0 ends it;
+              // a negative count is followed by the block's byte size,
+              // a boundary hint only
+              var count = c.zigzag()
+              while (count != 0) {
+                if (count < 0) c.zigzag()
+                var remaining = math.abs(count)
+                while (remaining > 0) {
+                  val (ka, kl) = bytesAt()
+                  val (va, vl) = bytesAt()
+                  if (new String(c.bytes, ka, kl, utf8) == "avro.codec")
+                    codec = new String(c.bytes, va, vl, utf8)
+                  remaining -= 1
                 }
+                count = c.zigzag()
               }
-            }
-            // header sync
-            val sync = new Array[Byte](16)
-            if (status == null) {
-              if (p + 16 > n) status = "truncated"
-              else { System.arraycopy(b, p, sync, 0, 16); p += 16 }
-            }
-            // data blocks
-            var idx = 0
-            while (status == null) {
-              if (p == n) status = "ok"
-              else {
-                val off = p
-                val cnt = vint(p)
-                val sz = if (cnt == null) null else vint(cnt._2)
-                if (cnt == null || sz == null || cnt._1 < 0 || sz._1 < 0 ||
-                  sz._2 + sz._1 + 16 > n) status = "truncated"
-                else {
-                  val dataAt = sz._2
-                  val len = sz._1.toInt
-                  md.reset(); md.update(b, dataAt, len)
-                  val hex = md.digest().map("%02x".format(_)).mkString
-                  var ok = 1
-                  var j = 0
-                  while (j < 16) {
-                    if (b(dataAt + len + j) != sync(j)) ok = 0
-                    j += 1
-                  }
-                  out += ((idx, off.toLong, cnt._1, len.toLong, ok, hex))
-                  idx += 1
-                  p = dataAt + len + 16
-                }
+              val sync = c.need(c.pos, 16)
+              c.pos += 16
+              // data blocks: (object count, byte size, payload, sync)
+              while (c.pos < c.length) {
+                val off = c.pos
+                val cnt = c.zigzag()
+                val len = c.zigzag()
+                if (cnt < 0 || len < 0) throw ByteCursor.Truncated
+                val dataAt = c.need(c.pos, len + 16)
+                md.reset(); md.update(c.bytes, dataAt, len.toInt)
+                val hex = md.digest().map("%02x".format(_)).mkString
+                val ok = (0 until 16).forall(j => c.bytes(dataAt + len.toInt + j) == c.bytes(sync + j))
+                out += ((out.length, off.toLong, cnt, len, if (ok) 1 else 0, hex))
+                c.pos = dataAt + len.toInt + 16
               }
-            }
-          }
-          val es = out.toList
-          if (es.isEmpty)
-            Seq((id, status, Option(codec), None: Option[Int], None: Option[Long],
-              None: Option[Long], None: Option[Long], None: Option[Int],
-              None: Option[String]))
-          else es.map { case (i2, off, o, s, ok, h) =>
-            (id, status, Option(codec), Some(i2), Some(off), Some(o), Some(s),
-              Some(ok), Some(h))
-          }
+              "ok"
+            } catch { case ByteCursor.Truncated | ByteCursor.Overlong => "truncated" }
+          entryRows((id, status, Option(codec)), out)
         }
       }
-      .toDF("doc_id", "status", "codec", "idx", "b_off", "n_objects",
-        "n_bytes", "sync_ok", "payload_md5")
+    entryFrame(rows, "doc_id", "status", "codec", "idx", "b_off", "n_objects",
+      "n_bytes", "sync_ok", "payload_md5")
   }
 
   /** Synthetic Parquet-container payloads for [[parquetFooter]] — five
@@ -7897,20 +7608,19 @@ object TrainingOps extends Serializable {
     * 4 shorter than the 12-byte minimum.
     */
   def syntheticParquetPayload(id: Long): Array[Byte] = {
+    import ByteCursor.le
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le32(v: Long): Unit =
-      (0 until 4).foreach(i => bb += ((v >> (8 * i)) & 0xff).toByte)
     def magic(): Unit = bb ++= "PAR1".getBytes("US-ASCII")
     val p = (30 + id % 40).toInt; val fl = (20 + id % 50).toInt
     def fill(k: Int, c: Int): Unit =
       (0 until k).foreach(i => bb += ((c + i % 17) & 0x7f).toByte)
     (id % 5) match {
-      case 0 => magic(); fill(p, 'd'); fill(fl, 'm'); le32(fl.toLong); magic()
+      case 0 => magic(); fill(p, 'd'); fill(fl, 'm'); bb ++= le(fl.toLong, 4); magic()
       case 1 => bb ++= s"plain text payload $id".getBytes("US-ASCII")
-      case 2 => magic(); fill(p, 'd'); fill(fl, 'm'); le32(fl.toLong)
+      case 2 => magic(); fill(p, 'd'); fill(fl, 'm'); bb ++= le(fl.toLong, 4)
         bb ++= "XXXX".getBytes("US-ASCII")
       case 3 => magic(); fill(p, 'd'); fill(fl, 'm')
-        le32((p + fl + 100).toLong); magic()
+        bb ++= le((p + fl + 100).toLong, 4); magic()
       case _ => magic(); fill(math.min(7, p), 'd')
     }
     bb.toArray
@@ -7939,27 +7649,18 @@ object TrainingOps extends Serializable {
     import spark.implicits._
     payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var j = k - 1
-            while (j >= 0) { v = (v << 8) | (b(i + j) & 0xffL); j -= 1 }
-            v
-          }
-          def magicAt(i: Int) =
-            b(i) == 'P' && b(i + 1) == 'A' && b(i + 2) == 'R' && b(i + 3) == '1'
-          if (n < 12)
-            (id, if (n >= 4 && magicAt(0)) "truncated" else "not_parquet",
-              None: Option[Long], None: Option[Long], n)
-          else if (!magicAt(0)) (id, "not_parquet", None, None, n)
-          else if (!magicAt(n - 4)) (id, "malformed", None, None, n)
-          else {
-            val fl = le(n - 8, 4)
-            if (fl > n - 12) (id, "corrupt_footer", Some(fl), None, n)
-            else (id, "ok", Some(fl), Some(n - 8 - fl), n)
-          }
+      .map { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val n = c.length
+        if (n < 12)
+          (id, if (c.has(0, "PAR1")) "truncated" else "not_parquet",
+            None: Option[Long], None: Option[Long], n)
+        else if (!c.has(0, "PAR1")) (id, "not_parquet", None, None, n)
+        else if (!c.has(n - 4, "PAR1")) (id, "malformed", None, None, n)
+        else {
+          val fl = c.le(n - 8, 4)
+          if (fl > n - 12) (id, "corrupt_footer", Some(fl), None, n)
+          else (id, "ok", Some(fl), Some(n - 8 - fl), n)
         }
       }
       .toDF("doc_id", "status", "footer_len", "footer_off", "n_bytes")
@@ -7975,19 +7676,19 @@ object TrainingOps extends Serializable {
     * minimal GIF87a — no color table, no extensions, one frame.
     */
   def syntheticGifPayload(id: Long): Array[Byte] = {
+    import ByteCursor.le
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le16(v: Int): Unit = { bb += (v & 0xff).toByte; bb += ((v >> 8) & 0xff).toByte }
     val s = (id % 3).toInt; val k = (1 + id % 3).toInt
     val m = (1 + id % 2).toInt; val d = (1 + id % 7).toInt
     val w = (100 + id % 50).toInt; val h = (80 + id % 40).toInt
     def lsd(gct: Boolean): Unit = {
-      le16(w); le16(h)
+      bb ++= le(w, 2); bb ++= le(h, 2)
       bb += (if (gct) (0x80 | s) else s).toByte; bb += 0; bb += 0
     }
     def gctBytes(): Unit = (0 until 3 * (2 << s)).foreach(i => bb += ((i * 7) & 0x7f).toByte)
     def gce(): Unit = { bb ++= Array[Byte](0x21, 0xf9.toByte, 4, 0, 0, 0, 0, 0) }
     def frame(): Unit = {
-      bb += 0x2c; le16(0); le16(0); le16(w); le16(h); bb += 0 // no LCT
+      bb += 0x2c; bb ++= le(0, 2); bb ++= le(0, 2); bb ++= le(w, 2); bb ++= le(h, 2); bb += 0 // no LCT
       bb += 8 // LZW min code size
       (0 until m).foreach { j =>
         bb += d.toByte; (0 until d).foreach(x => bb += ((j * 31 + x) & 0x7f).toByte)
@@ -8020,24 +7721,20 @@ object TrainingOps extends Serializable {
     * 4 a varint whose continuation bit never clears before EOF.
     */
   def syntheticProtoPayload(id: Long): Array[Byte] = {
+    import ByteCursor.varint
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def vint(x: Long): Unit = {
-      var v = x
-      while ((v & ~0x7fL) != 0) { bb += ((v & 0x7f) | 0x80).toByte; v >>>= 7 }
-      bb += v.toByte
-    }
     val v = (5 + id % 20).toInt
     def fill(k: Int): Unit = (0 until k).foreach(i => bb += ((i * 5 + 1) & 0x7f).toByte)
     (id % 5) match {
       case 0 =>
-        bb += 0x08; vint(150 + id % 1000) // field 1 varint, 2-byte value
-        bb += 0x12; vint(v); fill(v) // field 2 length-delimited
+        bb += 0x08; bb ++= varint(150 + id % 1000) // field 1 varint, 2-byte value
+        bb += 0x12; bb ++= varint(v); fill(v) // field 2 length-delimited
         bb += 0x1d; fill(4) // field 3 fixed32
         bb += 0x21; fill(8) // field 4 fixed64
-        bb += 0x28; vint(id % 128) // field 5 varint, 1-byte value
+        bb += 0x28; bb ++= varint(id % 128) // field 5 varint, 1-byte value
       case 1 => // empty
-      case 2 => bb += 0x12; vint(100); fill(3)
-      case 3 => bb += 0x08; vint(id % 100); bb += 0x13; fill(2)
+      case 2 => bb += 0x12; bb ++= varint(100); fill(3)
+      case 3 => bb += 0x08; bb ++= varint(id % 100); bb += 0x13; fill(2)
       case _ => bb += 0x08; bb += 0x80.toByte; bb += 0x80.toByte; bb += 0x80.toByte
     }
     bb.toArray
@@ -8069,68 +7766,36 @@ object TrainingOps extends Serializable {
     import spark.implicits._
     payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          var pos = 0
-          var verr = 0 // 0 ok, 1 truncated, 2 overlong
-          def varint(): Long = {
-            var shift = 0; var v = 0L; var i = 0; verr = 0
-            while (true) {
-              if (pos >= n) { verr = 1; return 0L }
-              val c = b(pos) & 0xff; pos += 1; i += 1
-              if (i > 10) { verr = 2; return 0L }
-              v |= (c & 0x7fL) << shift; shift += 7
-              if ((c & 0x80) == 0) return v
+      .map { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        var nf = 0; var nv = 0; var nl = 0; var n32 = 0; var n64 = 0
+        var maxF = 0L
+        val status = try {
+          var v: String = null
+          while (v == null && c.pos < c.length) {
+            val tag = c.varint()
+            val fno = tag >>> 3
+            if (fno == 0) v = "malformed"
+            else (tag & 7).toInt match {
+              case 0 => c.varint(); nv += 1
+              case 1 => c.skip(8); n64 += 1
+              case 2 => c.skip(c.varint()); nl += 1
+              case 5 => c.skip(4); n32 += 1
+              case _ => v = "malformed"
             }
-            v
+            if (v == null) { nf += 1; if (fno > maxF) maxF = fno }
           }
-          var nf = 0; var nv = 0; var nl = 0; var n32 = 0; var n64 = 0
-          var maxF = 0L
-          var status: String = null
-          while (status == null && pos < n) {
-            val tag = varint()
-            if (verr == 1) status = "truncated"
-            else if (verr == 2) status = "malformed"
-            else {
-              val wt = (tag & 7).toInt; val fno = tag >>> 3
-              if (fno == 0) status = "malformed"
-              else {
-                var fieldOk = false
-                wt match {
-                  case 0 =>
-                    varint()
-                    if (verr == 1) status = "truncated"
-                    else if (verr == 2) status = "malformed"
-                    else { nv += 1; fieldOk = true }
-                  case 1 =>
-                    if (pos + 8 > n) status = "truncated"
-                    else { pos += 8; n64 += 1; fieldOk = true }
-                  case 2 =>
-                    val l = varint()
-                    if (verr == 1) status = "truncated"
-                    else if (verr == 2) status = "malformed"
-                    else if (l < 0 || l > n - pos) status = "truncated"
-                    else { pos += l.toInt; nl += 1; fieldOk = true }
-                  case 5 =>
-                    if (pos + 4 > n) status = "truncated"
-                    else { pos += 4; n32 += 1; fieldOk = true }
-                  case _ => status = "malformed"
-                }
-                if (fieldOk) { nf += 1; if (fno > maxF) maxF = fno }
-              }
-            }
-          }
-          if (status == null) status = "ok"
-          val noneI = None: Option[Int]
-          val noneL = None: Option[Long]
-          if (status == "truncated")
-            (id, status, noneI, noneI, noneI, noneI, noneI, noneL, n)
-          else
-            (id, status, Some(nf), Some(nv), Some(nl), Some(n32), Some(n64),
-              if (nf == 0) noneL else Some(maxF), n)
+          if (v == null) "ok" else v
+        } catch {
+          case ByteCursor.Truncated => "truncated"
+          case ByteCursor.Overlong => "malformed"
         }
+        val noneI = None: Option[Int]
+        if (status == "truncated")
+          (id, status, noneI, noneI, noneI, noneI, noneI, None: Option[Long], c.length)
+        else
+          (id, status, Some(nf), Some(nv), Some(nl), Some(n32), Some(n64),
+            if (nf == 0) None else Some(maxF), c.length)
       }
       .toDF("doc_id", "status", "n_fields", "n_varint", "n_len",
         "n_fixed32", "n_fixed64", "max_field_no", "n_bytes")
@@ -8162,62 +7827,45 @@ object TrainingOps extends Serializable {
     import spark.implicits._
     payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def u16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-          val hdrOk = n >= 6 && b(0) == 'G' && b(1) == 'I' && b(2) == 'F' &&
-            b(3) == '8' && (b(4) == '7' || b(4) == '9') && b(5) == 'a'
-          if (!hdrOk) (id, "not_gif", None: Option[Int], None: Option[Int],
+      .map { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val n = c.length
+        if (!c.has(0, "GIF87a") && !c.has(0, "GIF89a"))
+          (id, "not_gif", None: Option[Int], None: Option[Int],
             None: Option[Int], None: Option[Int], None: Option[Int], n)
-          else if (n < 13) (id, "truncated", None, None, None, None, None, n)
-          else {
-            val w = u16(6); val h = u16(8); val packed = b(10) & 0xff
-            val gct = if ((packed & 0x80) != 0) 3 * (2 << (packed & 7)) else 0
-            var pos = 13 + gct
-            var frames = 0; var exts = 0; var subs = 0
-            var status: String = null
-            // walks one len|data chain; returns data-sub-block count or -1 on EOF
-            def chain(): Int = {
-              var c = 0
-              while (true) {
-                if (pos >= n) return -1
-                val len = b(pos) & 0xff; pos += 1
-                if (len == 0) return c
-                if (pos + len > n) return -1
-                c += 1; pos += len
-              }
-              c
-            }
-            while (status == null) {
-              if (pos >= n) status = "truncated"
-              else (b(pos) & 0xff) match {
-                case 0x3b => status = "ok"
-                case 0x21 =>
-                  pos += 2 // introducer + label
-                  val c = chain()
-                  if (c < 0) status = "truncated" else { exts += 1; subs += c }
-                case 0x2c =>
-                  if (pos + 10 > n) status = "truncated"
-                  else {
-                    val fp = b(pos + 9) & 0xff
-                    pos += 10
-                    pos += (if ((fp & 0x80) != 0) 3 * (2 << (fp & 7)) else 0)
-                    pos += 1 // LZW minimum code size
-                    if (pos > n) status = "truncated"
-                    else {
-                      val c = chain()
-                      if (c < 0) status = "truncated" else { frames += 1; subs += c }
-                    }
-                  }
-                case _ => status = "malformed"
-              }
-            }
-            if (status == "truncated")
-              (id, status, Some(w), Some(h), None, None, None, n)
-            else (id, status, Some(w), Some(h), Some(frames), Some(exts), Some(subs), n)
+        else if (n < 13) (id, "truncated", None, None, None, None, None, n)
+        else {
+          val w = c.le(6, 2).toInt; val h = c.le(8, 2).toInt
+          // a color table of 3·2^(bits+1) bytes follows when the flag is set
+          def table(packed: Int) = if ((packed & 0x80) != 0) 3 * (2 << (packed & 7)) else 0
+          c.pos = 13 + table(c.u8(10))
+          var frames = 0; var exts = 0; var subs = 0
+          // hops one len|data sub-block chain past its 0x00 terminator;
+          // returns the data sub-block count
+          def chain(): Int = {
+            var k = 0
+            while (c.u8(c.pos) != 0) { c.skip(1 + c.u8(c.pos)); k += 1 }
+            c.pos += 1
+            k
           }
+          val status = try {
+            var v: String = null
+            while (v == null) c.u8(c.pos) match {
+              case 0x3b => v = "ok"
+              case 0x21 => // introducer + label, then the chain
+                c.pos += 2
+                subs += chain(); exts += 1
+              case 0x2c => // descriptor, local table, LZW minimum code size
+                val fp = c.u8(c.pos + 9)
+                c.pos += 10 + table(fp) + 1
+                subs += chain(); frames += 1
+              case _ => v = "malformed"
+            }
+            v
+          } catch { case ByteCursor.Truncated => "truncated" }
+          if (status == "truncated")
+            (id, status, Some(w), Some(h), None, None, None, n)
+          else (id, status, Some(w), Some(h), Some(frames), Some(exts), Some(subs), n)
         }
       }
       .toDF("doc_id", "status", "width", "height", "frames", "extensions",
@@ -8232,49 +7880,47 @@ object TrainingOps extends Serializable {
     * 4 truncated mid-chunk-data; 5 RIFF size field off by 3.
     */
   def syntheticWebpPayload(id: Long): Array[Byte] = {
+    import ByteCursor.le
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def le(v: Long, k: Int): Unit =
-      (0 until k).foreach(i => bb += ((v >> (8 * i)) & 0xff).toByte)
     def tag(s: String): Unit = bb ++= s.getBytes("US-ASCII")
     def fill(k: Int): Unit = (0 until k).foreach(i => bb += ((i * 11 + 3) & 0x7f).toByte)
     val w = (160 + id % 100).toInt; val h = (120 + id % 80).toInt
     val j = (10 + id % 13).toInt; val e = (5 + id % 7).toInt
     def chunk(cc: String, data: => Unit): Unit = {
       val mark = bb.length
-      tag(cc); le(0, 4) // len patched below
+      tag(cc); bb ++= le(0, 4) // len patched below
       val start = bb.length
       data
       val len = bb.length - start
-      (0 until 4).foreach(i => bb(mark + 4 + i) = ((len >> (8 * i)) & 0xff).toByte)
+      bb.patchInPlace(mark + 4, le(len, 4), 4)
       if (len % 2 == 1) bb += 0 // RIFF odd pad
     }
     def riff(body: => Unit): Unit = {
-      tag("RIFF"); le(0, 4); tag("WEBP")
+      tag("RIFF"); bb ++= le(0, 4); tag("WEBP")
       body
-      val sz = bb.length - 8
-      (0 until 4).foreach(i => bb(4 + i) = ((sz >> (8 * i)) & 0xff).toByte)
+      bb.patchInPlace(4, le(bb.length - 8, 4), 4)
     }
     def vp8(): Unit = chunk("VP8 ", {
       fill(3); bb += 0x9d.toByte; bb += 0x01; bb += 0x2a
-      le(w.toLong, 2); le(h.toLong, 2); fill(j)
+      bb ++= le(w, 2) ++ le(h, 2); fill(j)
     })
     (id % 6) match {
       case 0 => riff(vp8())
       case 1 => riff(chunk("VP8L", {
         bb += 0x2f
-        le(((w - 1).toLong | ((h - 1).toLong << 14)), 4); fill(j)
+        bb ++= le((w - 1).toLong | ((h - 1).toLong << 14), 4); fill(j)
       }))
       case 2 => riff({
-        chunk("VP8X", { le(0, 4); le((w - 1).toLong, 3); le((h - 1).toLong, 3) })
+        chunk("VP8X", bb ++= le(0, 4) ++ le(w - 1, 3) ++ le(h - 1, 3))
         chunk("EXIF", fill(e))
       })
       case 3 => bb ++= s"plain text payload $id".getBytes("US-ASCII")
       case 4 =>
-        tag("RIFF"); le(16, 4); tag("WEBP"); tag("VP8 "); le(20, 4); fill(4)
+        tag("RIFF"); bb ++= le(16, 4); tag("WEBP"); tag("VP8 "); bb ++= le(20, 4); fill(4)
       case _ =>
         riff(vp8())
-        val sz = bb.length - 8 + 3 // off by 3: the concat/truncate tell
-        (0 until 4).foreach(i => bb(4 + i) = ((sz >> (8 * i)) & 0xff).toByte)
+        // off by 3: the concat/truncate tell
+        bb.patchInPlace(4, le(bb.length - 8 + 3, 4), 4)
     }
     bb.toArray
   }
@@ -8302,72 +7948,57 @@ object TrainingOps extends Serializable {
     import spark.implicits._
     payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def le(i: Int, k: Int): Long = {
-            var v = 0L; var z = k - 1
-            while (z >= 0) { v = (v << 8) | (b(i + z) & 0xffL); z -= 1 }
-            v
-          }
-          def tagAt(i: Int, s: String): Boolean =
-            s.indices.forall(k => b(i + k) == s.charAt(k).toByte)
-          val noneI = None: Option[Int]
-          if (n < 12 || !tagAt(0, "RIFF") || !tagAt(8, "WEBP"))
-            (id, "not_webp", None: Option[String], noneI, noneI, noneI, n)
-          else if (le(4, 4) != n - 8)
-            (id, "malformed", None, noneI, noneI, noneI, n)
-          else {
+      .map { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val n = c.length
+        val noneI = None: Option[Int]
+        if (!c.has(0, "RIFF") || !c.has(8, "WEBP"))
+          (id, "not_webp", None: Option[String], noneI, noneI, noneI, n)
+        else if (c.le(4, 4) != n - 8)
+          (id, "malformed", None, noneI, noneI, noneI, n)
+        else {
+          var format: Option[String] = None
+          var wd = noneI; var ht = noneI
+          var chunks = 0
+          val status = try {
             var pos = 12
-            var status: String = null
-            var format: Option[String] = None
-            var wd = noneI; var ht = noneI
-            var chunks = 0
-            while (status == null && pos < n) {
-              if (pos + 8 > n) status = "truncated"
-              else {
-                val cc = new String(b, pos, 4, "US-ASCII")
-                val len = le(pos + 4, 4)
-                val pad = len % 2
-                if (pos + 8 + len + pad > n) status = "truncated"
-                else {
-                  val d = pos + 8
-                  if (chunks == 0) cc match {
-                    case "VP8 " =>
-                      if (len < 10 || b(d + 3) != 0x9d.toByte ||
-                        b(d + 4) != 0x01 || b(d + 5) != 0x2a)
-                        status = "malformed"
-                      else {
-                        format = Some("lossy")
-                        wd = Some((le(d + 6, 2) & 0x3fff).toInt)
-                        ht = Some((le(d + 8, 2) & 0x3fff).toInt)
-                      }
-                    case "VP8L" =>
-                      if (len < 5 || b(d) != 0x2f) status = "malformed"
-                      else {
-                        format = Some("lossless")
-                        val bits = le(d + 1, 4)
-                        wd = Some((bits & 0x3fff).toInt + 1)
-                        ht = Some(((bits >> 14) & 0x3fff).toInt + 1)
-                      }
-                    case "VP8X" =>
-                      if (len < 10) status = "malformed"
-                      else {
-                        format = Some("extended")
-                        wd = Some(le(d + 4, 3).toInt + 1)
-                        ht = Some(le(d + 7, 3).toInt + 1)
-                      }
-                    case _ => status = "malformed"
+            var v: String = null
+            while (v == null && pos < n) {
+              val cc = c.ascii(pos, 4)
+              val len = c.le(pos + 4, 4)
+              val d = pos + 8
+              c.need(d, len + len % 2)
+              if (chunks == 0) cc match {
+                case "VP8 " =>
+                  if (len < 10 || !c.has(d + 3, "\u009d\u0001\u002a")) v = "malformed"
+                  else {
+                    format = Some("lossy")
+                    wd = Some((c.le(d + 6, 2) & 0x3fff).toInt)
+                    ht = Some((c.le(d + 8, 2) & 0x3fff).toInt)
                   }
-                  if (status == null) { chunks += 1; pos = d + len.toInt + pad.toInt }
-                }
+                case "VP8L" =>
+                  if (len < 5 || c.u8(d) != 0x2f) v = "malformed"
+                  else {
+                    format = Some("lossless")
+                    val bits = c.le(d + 1, 4)
+                    wd = Some((bits & 0x3fff).toInt + 1)
+                    ht = Some(((bits >> 14) & 0x3fff).toInt + 1)
+                  }
+                case "VP8X" =>
+                  if (len < 10) v = "malformed"
+                  else {
+                    format = Some("extended")
+                    wd = Some(c.le(d + 4, 3).toInt + 1)
+                    ht = Some(c.le(d + 7, 3).toInt + 1)
+                  }
+                case _ => v = "malformed"
               }
+              if (v == null) { chunks += 1; pos = d + (len + len % 2).toInt }
             }
-            if (status == null)
-              (id, "ok", format, wd, ht, Some(chunks), n)
-            else (id, status, None, noneI, noneI, noneI, n)
-          }
+            v
+          } catch { case ByteCursor.Truncated => "truncated" }
+          if (status == null) (id, "ok", format, wd, ht, Some(chunks), n)
+          else (id, status, None, noneI, noneI, noneI, n)
         }
       }
       .toDF("doc_id", "status", "format", "width", "height", "n_chunks", "n_bytes")
@@ -8381,21 +8012,21 @@ object TrainingOps extends Serializable {
     * is padding, not STREAMINFO; 4 STREAMINFO length 20 instead of 34.
     */
   def syntheticFlacPayload(id: Long): Array[Byte] = {
+    import ByteCursor.be
     val bb = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def u24be(v: Int): Unit = { bb += ((v >> 16) & 0xff).toByte; bb += ((v >> 8) & 0xff).toByte; bb += (v & 0xff).toByte }
     def block(last: Boolean, tpe: Int, len: Int): Unit = {
-      bb += ((if (last) 0x80 else 0) | tpe).toByte; u24be(len)
+      bb += ((if (last) 0x80 else 0) | tpe).toByte; bb ++= be(len, 3)
     }
     val rate = 8000 + (id % 8).toInt * 4000
     val ch = 1 + (id % 4).toInt; val bps = 16 + (id % 2).toInt * 8
     val total = 44100L + id % 1000
     def streaminfo(): Unit = {
       block(last = false, 0, 34)
-      u24be(0x10001000 >> 8); bb += 0x10 // min/max block size 4096 each
-      u24be(0); u24be(0x040000) // min/max frame size
+      bb ++= be(0x10001000 >> 8, 3); bb += 0x10 // min/max block size 4096 each
+      bb ++= be(0, 3); bb ++= be(0x040000, 3) // min/max frame size
       val packed = (rate.toLong << 44) | ((ch - 1).toLong << 41) |
         ((bps - 1).toLong << 36) | total
-      (7 to 0 by -1).foreach(i => bb += ((packed >> (8 * i)) & 0xff).toByte)
+      bb ++= be(packed, 8)
       (0 until 16).foreach(i => bb += ((id + i) & 0x7f).toByte) // md5
     }
     val v = (10 + id % 20).toInt; val p = (5 + id % 9).toInt; val a = (20 + id % 30).toInt
@@ -8444,50 +8075,44 @@ object TrainingOps extends Serializable {
     import spark.implicits._
     payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          def u24(i: Int): Int =
-            ((b(i) & 0xff) << 16) | ((b(i + 1) & 0xff) << 8) | (b(i + 2) & 0xff)
-          val none = None: Option[Long]
-          val noneI = None: Option[Int]
-          if (n < 4 || b(0) != 'f' || b(1) != 'L' || b(2) != 'a' || b(3) != 'C')
-            (id, "not_flac", noneI, noneI, noneI, noneI, none, none, n)
-          else {
-            var pos = 4
-            var blocks = 0
-            var rate = noneI; var ch = noneI; var bps = noneI; var tot = none
-            var status: String = null
+      .map { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val n = c.length
+        val none = None: Option[Long]
+        val noneI = None: Option[Int]
+        if (!c.has(0, "fLaC"))
+          (id, "not_flac", noneI, noneI, noneI, noneI, none, none, n)
+        else {
+          var pos = 4
+          var blocks = 0
+          var rate = noneI; var ch = noneI; var bps = noneI; var tot = none
+          val status = try {
+            var v: String = null
             var last = false
-            while (status == null && !last) {
-              if (pos + 4 > n) status = "truncated"
+            while (v == null && !last) {
+              val len = c.be(pos + 1, 3).toInt
+              val hdr = c.u8(pos)
+              last = (hdr & 0x80) != 0
+              pos += 4
+              if (blocks == 0 && (hdr & 0x7f) != 0) v = "missing_streaminfo"
+              else if (blocks == 0 && len != 34) v = "malformed"
               else {
-                val hdr = b(pos) & 0xff
-                last = (hdr & 0x80) != 0
-                val tpe = hdr & 0x7f
-                val len = u24(pos + 1)
-                pos += 4
-                if (blocks == 0 && tpe != 0) status = "missing_streaminfo"
-                else if (blocks == 0 && len != 34) status = "malformed"
-                else if (pos + len > n) status = "truncated"
-                else {
-                  if (blocks == 0) {
-                    var packed = 0L
-                    (0 until 8).foreach(i => packed = (packed << 8) | (b(pos + 10 + i) & 0xffL))
-                    rate = Some((packed >>> 44).toInt)
-                    ch = Some(((packed >>> 41) & 0x7).toInt + 1)
-                    bps = Some(((packed >>> 36) & 0x1f).toInt + 1)
-                    tot = Some(packed & 0xFFFFFFFFFL)
-                  }
-                  pos += len; blocks += 1
+                c.need(pos, len)
+                if (blocks == 0) {
+                  val packed = c.be(pos + 10, 8)
+                  rate = Some((packed >>> 44).toInt)
+                  ch = Some(((packed >>> 41) & 0x7).toInt + 1)
+                  bps = Some(((packed >>> 36) & 0x1f).toInt + 1)
+                  tot = Some(packed & 0xFFFFFFFFFL)
                 }
+                pos += len; blocks += 1
               }
             }
-            if (status == null)
-              (id, "ok", Some(blocks), rate, ch, bps, tot, Some((n - pos).toLong), n)
-            else (id, status, noneI, rate, ch, bps, tot, none, n)
-          }
+            v
+          } catch { case ByteCursor.Truncated => "truncated" }
+          if (status == null)
+            (id, "ok", Some(blocks), rate, ch, bps, tot, Some((n - pos).toLong), n)
+          else (id, status, noneI, rate, ch, bps, tot, none, n)
         }
       }
       .toDF("doc_id", "status", "n_blocks", "sample_rate", "channels",
@@ -8498,67 +8123,49 @@ object TrainingOps extends Serializable {
     import spark.implicits._
     payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def be(b: Array[Byte], i: Int, n: Int): Long = {
-          var v = 0L; var k = 0
-          while (k < n) { v = (v << 8) | (b(i + k) & 0xffL); k += 1 }
-          v
-        }
-        def le(b: Array[Byte], i: Int, n: Int): Long = {
-          var v = 0L; var k = n - 1
-          while (k >= 0) { v = (v << 8) | (b(i + k) & 0xffL); k -= 1 }
-          v
-        }
-        def ascii(b: Array[Byte], i: Int, n: Int): String =
-          if (i + n <= b.length) new String(b, i, n, "US-ASCII") else ""
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          var fmt = "unknown"; var wd: Option[Int] = None
-          var ht: Option[Int] = None; var st = "unknown"
-          if (n >= 8 && be(b, 0, 4) == 0x89504e47L && be(b, 4, 4) == 0x0d0a1a0aL) {
-            fmt = "png"
-            if (n >= 24 && ascii(b, 12, 4) == "IHDR") {
-              wd = Some(be(b, 16, 4).toInt); ht = Some(be(b, 20, 4).toInt); st = "ok"
-            } else st = "truncated"
-          } else if (ascii(b, 0, 6) == "GIF89a" || ascii(b, 0, 6) == "GIF87a") {
-            fmt = "gif"
-            if (n >= 10) {
-              wd = Some(le(b, 6, 2).toInt); ht = Some(le(b, 8, 2).toInt); st = "ok"
-            } else st = "truncated"
-          } else if (n >= 2 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8) {
-            fmt = "jpeg"; st = null
+      .map { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        var fmt = "unknown"; var wd: Option[Int] = None
+        var ht: Option[Int] = None; var st = "unknown"
+        if (c.has(0, PngSignature)) {
+          fmt = "png"
+          if (c.fits(16, 8) && c.has(12, "IHDR")) {
+            wd = Some(c.be(16, 4).toInt); ht = Some(c.be(20, 4).toInt); st = "ok"
+          } else st = "truncated"
+        } else if (c.has(0, "GIF89a") || c.has(0, "GIF87a")) {
+          fmt = "gif"
+          if (c.fits(6, 4)) {
+            wd = Some(c.le(6, 2).toInt); ht = Some(c.le(8, 2).toInt); st = "ok"
+          } else st = "truncated"
+        } else if (c.has(0, "\u00ff\u00d8")) {
+          fmt = "jpeg"
+          st = try {
             var i = 2
-            while (st == null) {
-              if (i >= n) st = "truncated"
-              else if ((b(i) & 0xff) != 0xff) st = "malformed"
+            var v: String = null
+            while (v == null) {
+              if (c.u8(i) != 0xff) v = "malformed"
               else {
                 var j = i
-                while (j < n && (b(j) & 0xff) == 0xff) j += 1 // fill bytes
-                if (j >= n) st = "truncated"
+                while (c.u8(j) == 0xff) j += 1 // fill bytes
+                val m = c.u8(j)
+                if (m == 0xd8 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) i = j + 1
+                else if (m == 0xd9 || m == 0xda) v = "malformed" // EOI/SOS, no SOF seen
                 else {
-                  val m = b(j) & 0xff
-                  if (m == 0xd8 || m == 0x01 || (m >= 0xd0 && m <= 0xd7)) i = j + 1
-                  else if (m == 0xd9 || m == 0xda) st = "malformed" // EOI/SOS, no SOF seen
-                  else if (j + 3 > n) st = "truncated"
-                  else {
-                    val len = be(b, j + 1, 2).toInt
-                    if (len < 2) st = "malformed"
-                    else if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc) {
-                      if (j + 8 > n) st = "truncated"
-                      else {
-                        ht = Some(be(b, j + 4, 2).toInt)
-                        wd = Some(be(b, j + 6, 2).toInt)
-                        st = "ok"
-                      }
-                    } else i = j + 1 + len // skip by declared length
-                  }
+                  val len = c.be(j + 1, 2).toInt
+                  if (len < 2) v = "malformed"
+                  else if (m >= 0xc0 && m <= 0xcf && m != 0xc4 && m != 0xc8 && m != 0xcc) {
+                    val h = c.be(j + 4, 2).toInt
+                    wd = Some(c.be(j + 6, 2).toInt)
+                    ht = Some(h)
+                    v = "ok"
+                  } else i = j + 1 + len // skip by declared length
                 }
               }
             }
-          }
-          (id, fmt, wd, ht, st)
+            v
+          } catch { case ByteCursor.Truncated => "truncated" }
         }
+        (id, fmt, wd, ht, st)
       }
       .toDF("doc_id", "format", "width", "height", "status")
   }
@@ -8830,7 +8437,7 @@ object TrainingOps extends Serializable {
           sb.toString
         }
         it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
+          val b = new ByteCursor(raw).bytes
           val n = b.length
           md.reset()
           var off = 0
@@ -8919,25 +8526,23 @@ object TrainingOps extends Serializable {
     * the arithmetic oracle.
     */
   def syntheticMp4Payload(id: Long): Array[Byte] = {
+    import ByteCursor.be
     def a(s: String) = s.getBytes("US-ASCII")
-    def be4(v: Long) = Array[Byte]((v >>> 24).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-    def be8(v: Long) = be4(v >>> 32) ++ be4(v & 0xffffffffL)
     def box(tpe: String, body: Array[Byte]): Array[Byte] =
-      be4(8L + body.length) ++ a(tpe) ++ body
+      be(8L + body.length, 4) ++ a(tpe) ++ body
     val kind = (id % 6).toInt
     val timescale = 600L * (1 + id % 4)
     val durV0 = 6000L + id % 5000
     val durV1 = 5000000000L + id % 1000 // needs the full 64 bits
     val brand = if (kind == 1) "mp42" else "isom"
-    val ftyp = box("ftyp", a(brand) ++ be4(0) ++ a("isomavc1"))
+    val ftyp = box("ftyp", a(brand) ++ be(0, 4) ++ a("isomavc1"))
     def mvhd(v: Int): Array[Byte] =
       if (v == 0)
-        box("mvhd", Array[Byte](0, 0, 0, 0) ++ be4(0) ++ be4(0) ++
-          be4(timescale) ++ be4(durV0))
+        box("mvhd", Array[Byte](0, 0, 0, 0) ++ be(0, 4) ++ be(0, 4) ++
+          be(timescale, 4) ++ be(durV0, 4))
       else
-        box("mvhd", Array[Byte](1, 0, 0, 0) ++ be8(0) ++ be8(0) ++
-          be4(timescale) ++ be8(durV1))
+        box("mvhd", Array[Byte](1, 0, 0, 0) ++ be(0, 8) ++ be(0, 8) ++
+          be(timescale, 4) ++ be(durV1, 8))
     def trak(i: Long): Array[Byte] =
       box("trak", box("free", a(s"t$i")))
     def moov(v: Int, nTrak: Int): Array[Byte] =
@@ -8948,13 +8553,13 @@ object TrainingOps extends Serializable {
       case 1 => ftyp ++ moov(1, 1) ++ box("mdat", mdatBody)
       case 2 => // largesize mdat, then moov: size field = 1, real 64-bit
         // size (16-byte header + body) follows the type
-        val large = be4(1L) ++ a("mdat") ++ be8(16L + mdatBody.length) ++ mdatBody
+        val large = be(1L, 4) ++ a("mdat") ++ be(16L + mdatBody.length, 8) ++ mdatBody
         ftyp ++ large ++ moov(0, 1)
       case 3 => // moov claims 9999 bytes the payload does not have
-        ftyp ++ be4(9999L) ++ a("moov") ++ mvhd(0)
+        ftyp ++ be(9999L, 4) ++ a("moov") ++ mvhd(0)
       case 4 => a(s"plain text payload $id")
       case _ => // size==0: mdat runs to EOF (last box)
-        ftyp ++ moov(0, 1) ++ be4(0L) ++ a("mdat") ++ mdatBody
+        ftyp ++ moov(0, 1) ++ be(0L, 4) ++ a("mdat") ++ mdatBody
     }
   }
 
@@ -8986,97 +8591,80 @@ object TrainingOps extends Serializable {
     import spark.implicits._
     payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def be(b: Array[Byte], i: Int, n: Int): Long = {
-          var v = 0L; var k = 0
-          while (k < n) { v = (v << 8) | (b(i + k) & 0xffL); k += 1 }
-          v
+      .map { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        var brand: Option[String] = None
+        var timescale: Option[Long] = None
+        var duration: Option[Long] = None
+        var nTracks = 0
+        var sawMoov = false
+        // the box at `at` inside a region ending at `end`: (type, header
+        // length, size) — a size field of 1 means a 64-bit size follows
+        // the type, 0 that the box runs to the region's end; null when
+        // the size is smaller than the header, Truncated when the header
+        // or the box overruns the region
+        def box(at: Int, end: Int): (String, Int, Int) = {
+          if (end - at < 8) throw ByteCursor.Truncated
+          val s32 = c.be(at, 4)
+          val hdr = if (s32 == 1L) 16 else 8
+          if (end - at < hdr) throw ByteCursor.Truncated
+          val size = if (s32 == 1L) c.be(at + 8, 8) else if (s32 == 0L) (end - at).toLong else s32
+          if (size < hdr) null
+          else if (size > end - at) throw ByteCursor.Truncated
+          else (c.ascii(at + 4, 4), hdr, size.toInt)
         }
-        def tag(b: Array[Byte], i: Int): String =
-          if (i + 4 <= b.length) new String(b, i, 4, "US-ASCII") else ""
-        it.map { case (id, raw) =>
-          val b = if (raw == null) Array.emptyByteArray else raw
-          val n = b.length
-          var brand: Option[String] = None
-          var timescale: Option[Long] = None
-          var duration: Option[Long] = None
-          var nTracks = 0
-          var sawMoov = false
-          var status: String = null
-          if (n < 8 || tag(b, 4) != "ftyp") status = "unknown"
-          else {
+        val status =
+          if (!c.has(4, "ftyp")) "unknown"
+          else try {
+            var v: String = null
             var off = 0
-            while (status == null && off < n) {
-              if (off + 8 > n) status = "truncated"
+            while (v == null && off < c.length) {
+              val bx = box(off, c.length)
+              if (bx == null) v = "malformed"
               else {
-                var size = be(b, off, 4)
-                val tpe = tag(b, off + 4)
-                var hdr = 8
-                if (size == 1L) {
-                  if (off + 16 > n) { status = "truncated" }
-                  else { size = be(b, off + 8, 8); hdr = 16 }
-                } else if (size == 0L) size = (n - off).toLong
-                if (status == null) {
-                  if (size < hdr) status = "malformed"
-                  else if (off + size > n) status = "truncated"
-                  else {
-                    val end = off + size.toInt
-                    if (tpe == "ftyp") {
-                      if (off + hdr + 4 <= end) brand = Some(tag(b, off + hdr))
-                      else status = "truncated"
-                    } else if (tpe == "moov") {
-                      sawMoov = true
-                      var c = off + hdr
-                      while (status == null && c < end) {
-                        if (c + 8 > end) status = "truncated"
-                        else {
-                          var cs = be(b, c, 4)
-                          val ct = tag(b, c + 4)
-                          var ch = 8
-                          if (cs == 1L) {
-                            if (c + 16 > end) { status = "truncated" }
-                            else { cs = be(b, c + 8, 8); ch = 16 }
-                          } else if (cs == 0L) cs = (end - c).toLong
-                          if (status == null) {
-                            if (cs < ch) status = "malformed"
-                            else if (c + cs > end) status = "truncated"
-                            else {
-                              val body = c + ch
-                              if (ct == "mvhd") {
-                                val ver = if (body < end) b(body) & 0xff else -1
-                                if (ver == 0 && body + 20 <= end) {
-                                  timescale = Some(be(b, body + 12, 4))
-                                  duration = Some(be(b, body + 16, 4))
-                                } else if (ver == 1 && body + 32 <= end) {
-                                  timescale = Some(be(b, body + 20, 4))
-                                  duration = Some(be(b, body + 24, 8))
-                                } else status = "truncated"
-                              } else if (ct == "trak") nTracks += 1
-                              c += cs.toInt
-                            }
-                          }
-                        }
-                      }
+                val (tpe, hdr, size) = bx
+                val end = off + size
+                if (tpe == "ftyp") {
+                  if (hdr + 4 > size) throw ByteCursor.Truncated
+                  brand = Some(c.ascii(off + hdr, 4))
+                } else if (tpe == "moov") {
+                  sawMoov = true
+                  var ch = off + hdr
+                  while (v == null && ch < end) {
+                    val cb = box(ch, end)
+                    if (cb == null) v = "malformed"
+                    else {
+                      val (ct, chdr, cs) = cb
+                      val body = ch + chdr
+                      if (ct == "mvhd") {
+                        val ver = if (body < end) c.u8(body) else -1
+                        if (ver == 0 && body + 20 <= end) {
+                          timescale = Some(c.be(body + 12, 4))
+                          duration = Some(c.be(body + 16, 4))
+                        } else if (ver == 1 && body + 32 <= end) {
+                          timescale = Some(c.be(body + 20, 4))
+                          duration = Some(c.be(body + 24, 8))
+                        } else throw ByteCursor.Truncated
+                      } else if (ct == "trak") nTracks += 1
+                      ch += cs
                     }
-                    if (status == null) off = end
                   }
                 }
+                off = end
               }
             }
-            if (status == null)
-              status =
-                if (sawMoov && timescale.exists(_ > 0L) && duration.isDefined) "ok"
-                else "malformed"
-          }
-          val ok = status == "ok"
-          val durMs =
-            if (ok) Some(1000L * duration.get / timescale.get) else None
-          (id, brand.orNull,
-            if (ok) timescale.map(_.toInt) else None,
-            durMs,
-            if (ok) Some(nTracks) else None,
-            status)
-        }
+            if (v != null) v
+            else if (sawMoov && timescale.exists(_ > 0L) && duration.isDefined) "ok"
+            else "malformed"
+          } catch { case ByteCursor.Truncated => "truncated" }
+        val ok = status == "ok"
+        val durMs =
+          if (ok) Some(1000L * duration.get / timescale.get) else None
+        (id, brand.orNull,
+          if (ok) timescale.map(_.toInt) else None,
+          durMs,
+          if (ok) Some(nTracks) else None,
+          status)
       }
       .toDF("doc_id", "brand", "timescale", "duration_ms", "n_tracks", "status")
   }
@@ -9085,25 +8673,23 @@ object TrainingOps extends Serializable {
     * by doc_id, each pinning one archive-grammar trap (see zipEntries).
     */
   def syntheticZipPayload(id: Long): Array[Byte] = {
+    import ByteCursor.le
     def a(s: String) = s.getBytes("US-ASCII")
-    def le2(v: Long) = Array[Byte]((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def le4(v: Long) = le2(v & 0xffff) ++ le2((v >> 16) & 0xffff)
-    def le8(v: Long) = le4(v & 0xffffffffL) ++ le4(v >>> 32)
     def cdEntry(name: String, method: Int, flags: Int, comp: Long,
                 uncomp: Long, extra: Array[Byte] = Array.empty): Array[Byte] =
-      le4(0x02014b50L) ++ le2(20) ++ le2(20) ++ le2(flags) ++ le2(method) ++
-        le2(0) ++ le2(0) ++ le4(0) ++ le4(comp) ++ le4(uncomp) ++
-        le2(name.length) ++ le2(extra.length) ++ le2(0) ++ le2(0) ++
-        le2(0) ++ le4(0) ++ le4(0) ++ a(name) ++ extra
+      le(0x02014b50L, 4) ++ le(20, 2) ++ le(20, 2) ++ le(flags, 2) ++ le(method, 2) ++
+        le(0, 2) ++ le(0, 2) ++ le(0, 4) ++ le(comp, 4) ++ le(uncomp, 4) ++
+        le(name.length, 2) ++ le(extra.length, 2) ++ le(0, 2) ++ le(0, 2) ++
+        le(0, 2) ++ le(0, 4) ++ le(0, 4) ++ a(name) ++ extra
     def eocd(n: Long, cdSize: Long, cdOff: Long,
              comment: Array[Byte] = Array.empty): Array[Byte] =
-      le4(0x06054b50L) ++ le2(0) ++ le2(0) ++ le2(n) ++ le2(n) ++
-        le4(cdSize) ++ le4(cdOff) ++ le2(comment.length) ++ comment
+      le(0x06054b50L, 4) ++ le(0, 2) ++ le(0, 2) ++ le(n, 2) ++ le(n, 2) ++
+        le(cdSize, 4) ++ le(cdOff, 4) ++ le(comment.length, 2) ++ comment
     def localHdr(name: String, method: Int, flags: Int, comp: Long,
                  uncomp: Long): Array[Byte] =
-      le4(0x04034b50L) ++ le2(20) ++ le2(flags) ++ le2(method) ++ le2(0) ++
-        le2(0) ++ le4(0) ++ le4(comp) ++ le4(uncomp) ++ le2(name.length) ++
-        le2(0) ++ a(name)
+      le(0x04034b50L, 4) ++ le(20, 2) ++ le(flags, 2) ++ le(method, 2) ++ le(0, 2) ++
+        le(0, 2) ++ le(0, 4) ++ le(comp, 4) ++ le(uncomp, 4) ++ le(name.length, 2) ++
+        le(0, 2) ++ a(name)
     (id % 6).toInt match {
       case 0 =>
         val n0 = 7 + id % 3
@@ -9118,7 +8704,7 @@ object TrainingOps extends Serializable {
         // does not cover the bytes remaining
         val filler = a("x" * (3 + id % 4).toInt)
         val cd = cdEntry(s"c${id % 9}.txt", 0, 0, 7 + id % 3, 7 + id % 3)
-        val decoy = le4(0x06054b50L) ++ Array.fill[Byte](18)(0xab.toByte)
+        val decoy = le(0x06054b50L, 4) ++ Array.fill[Byte](18)(0xab.toByte)
         filler ++ cd ++ eocd(1, cd.length, filler.length, decoy)
       case 2 =>
         // ZIP64: EOCD carries 0xFFFF/0xFFFFFFFF sentinels, the real
@@ -9126,14 +8712,14 @@ object TrainingOps extends Serializable {
         // locator; entry 0's uncompressed size is itself a sentinel
         // resolved from the 0x0001 extra field (> 4 GiB)
         val bigUncomp = 5000000000L + id % 9
-        val x64 = le2(0x0001) ++ le2(8) ++ le8(bigUncomp)
+        val x64 = le(0x0001, 2) ++ le(8, 2) ++ le(bigUncomp, 8)
         val filler = a("z" * (2 + id % 3).toInt)
         val cd = cdEntry(s"big${id % 9}.bin", 8, 0, 1000 + id % 7,
           0xffffffffL, x64) ++ cdEntry("s.txt", 0, 0, 3, 3)
-        val z64 = le4(0x06064b50L) ++ le8(44) ++ le2(45) ++ le2(45) ++
-          le4(0) ++ le4(0) ++ le8(2) ++ le8(2) ++ le8(cd.length) ++
-          le8(filler.length)
-        val loc = le4(0x07064b50L) ++ le4(0) ++ le8(filler.length + cd.length) ++ le4(1)
+        val z64 = le(0x06064b50L, 4) ++ le(44, 8) ++ le(45, 2) ++ le(45, 2) ++
+          le(0, 4) ++ le(0, 4) ++ le(2, 8) ++ le(2, 8) ++ le(cd.length, 8) ++
+          le(filler.length, 8)
+        val loc = le(0x07064b50L, 4) ++ le(0, 4) ++ le(filler.length + cd.length, 8) ++ le(1, 4)
         filler ++ cd ++ z64 ++ loc ++ eocd(0xffffL, cd.length, 0xffffffffL)
       case 3 =>
         // data-descriptor archive: local headers carry ZERO sizes (flag
@@ -9185,106 +8771,84 @@ object TrainingOps extends Serializable {
     */
   def zipEntries(spark: SparkSession, payloads: DataFrame): DataFrame = {
     import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
+    val rows = payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def le(b: Array[Byte], i: Int, n: Int): Long = {
-          var v = 0L; var k = n - 1
-          while (k >= 0) { v = (v << 8) | (b(i + k) & 0xffL); k -= 1 }
-          v
+      .flatMap { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val len = c.length
+        var eocd = -1
+        var p = len - 22
+        val lo = math.max(0, len - 22 - 65535)
+        while (eocd < 0 && p >= lo) {
+          if (c.le(p, 4) == 0x06054b50L && c.le(p + 20, 2) == (len - (p + 22)).toLong)
+            eocd = p
+          else p -= 1
         }
-        it.flatMap { case (id, b) =>
-          val len = b.length
-          var eocd = -1
-          var p = len - 22
-          val lo = math.max(0, len - 22 - 65535)
-          while (eocd < 0 && p >= lo) {
-            if (le(b, p, 4) == 0x06054b50L && le(b, p + 20, 2) == (len - (p + 22)).toLong)
-              eocd = p
-            else p -= 1
-          }
-          var status: String = null
-          var nTotal = 0L
-          var cdOff = 0L
-          val entries = Vector.newBuilder[(Int, String, Int, Long, Long)]
-          if (eocd < 0) status = "no_eocd"
-          else {
-            nTotal = le(b, eocd + 10, 2)
-            cdOff = le(b, eocd + 16, 4)
+        val entries = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, String, Int, Long, Long)]
+        val status =
+          if (eocd < 0) "no_eocd"
+          else try {
+            var v: String = null
+            var nTotal = c.le(eocd + 10, 2)
+            var cdOff = c.le(eocd + 16, 4)
             if (nTotal == 0xffffL || cdOff == 0xffffffffL) {
               // ZIP64 sentinel: locator sits directly before the EOCD
               val lp = eocd - 20
-              if (lp < 0 || le(b, lp, 4) != 0x07064b50L) status = "malformed"
+              if (lp < 0 || c.le(lp, 4) != 0x07064b50L) v = "malformed"
               else {
-                val zoff = le(b, lp + 8, 8)
-                if (zoff < 0 || zoff + 56 > len || le(b, zoff.toInt, 4) != 0x06064b50L)
-                  status = "malformed"
+                val zoff = c.le(lp + 8, 8)
+                if (!c.fits(zoff, 56) || c.le(zoff, 4) != 0x06064b50L) v = "malformed"
                 else {
-                  nTotal = le(b, zoff.toInt + 32, 8)
-                  cdOff = le(b, zoff.toInt + 48, 8)
+                  nTotal = c.le(zoff + 32, 8)
+                  cdOff = c.le(zoff + 48, 8)
                 }
               }
             }
-            if (status == null) {
-              var c = cdOff
-              var j = 0
-              while (status == null && j < nTotal) {
-                if (c + 46 > len || le(b, c.toInt, 4) != 0x02014b50L)
-                  status = "truncated"
-                else {
-                  val ci = c.toInt
-                  val method = le(b, ci + 10, 2).toInt
-                  var comp = le(b, ci + 20, 4)
-                  var uncomp = le(b, ci + 24, 4)
-                  val nameLen = le(b, ci + 28, 2).toInt
-                  val extraLen = le(b, ci + 30, 2).toInt
-                  val cmtLen = le(b, ci + 32, 2).toInt
-                  if (c + 46 + nameLen + extraLen + cmtLen > len) status = "truncated"
-                  else {
-                    val name = new String(b, ci + 46, nameLen, "US-ASCII")
-                    // sentinel sizes resolve from the ZIP64 extra field
-                    // (id 0x0001): values appear in order, only for the
-                    // fields that are sentinels in the fixed record
-                    if (comp == 0xffffffffL || uncomp == 0xffffffffL) {
-                      var x = ci + 46 + nameLen
-                      val xEnd = x + extraLen
-                      var found = false
-                      while (!found && x + 4 <= xEnd) {
-                        val hid = le(b, x, 2)
-                        val hsz = le(b, x + 2, 2).toInt
-                        if (hid == 0x0001L && x + 4 + hsz <= xEnd) {
-                          var q = x + 4
-                          if (uncomp == 0xffffffffL && q + 8 <= x + 4 + hsz) {
-                            uncomp = le(b, q, 8); q += 8
-                          }
-                          if (comp == 0xffffffffL && q + 8 <= x + 4 + hsz)
-                            comp = le(b, q, 8)
-                          found = true
-                        } else x += 4 + hsz
-                      }
-                      if (!found) status = "malformed"
+            var cd = cdOff
+            while (v == null && entries.length < nTotal) {
+              val ci = c.need(cd, 46)
+              if (c.le(ci, 4) != 0x02014b50L) throw ByteCursor.Truncated
+              val method = c.le(ci + 10, 2).toInt
+              var comp = c.le(ci + 20, 4)
+              var uncomp = c.le(ci + 24, 4)
+              val nameLen = c.le(ci + 28, 2).toInt
+              val extraLen = c.le(ci + 30, 2).toInt
+              val cmtLen = c.le(ci + 32, 2).toInt
+              c.need(ci + 46, nameLen + extraLen + cmtLen)
+              val name = c.ascii(ci + 46, nameLen)
+              // sentinel sizes resolve from the ZIP64 extra field
+              // (id 0x0001): values appear in order, only for the
+              // fields that are sentinels in the fixed record
+              if (comp == 0xffffffffL || uncomp == 0xffffffffL) {
+                var x = ci + 46 + nameLen
+                val xEnd = x + extraLen
+                var found = false
+                while (!found && x + 4 <= xEnd) {
+                  val hid = c.le(x, 2)
+                  val hsz = c.le(x + 2, 2).toInt
+                  if (hid == 0x0001L && x + 4 + hsz <= xEnd) {
+                    var q = x + 4
+                    if (uncomp == 0xffffffffL && q + 8 <= x + 4 + hsz) {
+                      uncomp = c.le(q, 8); q += 8
                     }
-                    if (status == null) {
-                      entries += ((j, name, method, comp, uncomp))
-                      c += 46 + nameLen + extraLen + cmtLen
-                      j += 1
-                    }
-                  }
+                    if (comp == 0xffffffffL && q + 8 <= x + 4 + hsz)
+                      comp = c.le(q, 8)
+                    found = true
+                  } else x += 4 + hsz
                 }
+                if (!found) v = "malformed"
               }
-              if (status == null) status = "ok"
+              if (v == null) {
+                entries += ((entries.length, name, method, comp, uncomp))
+                cd += 46 + nameLen + extraLen + cmtLen
+              }
             }
-          }
-          val es = entries.result()
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[String],
-              None: Option[Int], None: Option[Long], None: Option[Long]))
-          else es.map { case (j, nm, m, cp, uc) =>
-            (id, status, Some(j), Some(nm), Some(m), Some(cp), Some(uc))
-          }
-        }
+            if (v == null) "ok" else v
+          } catch { case ByteCursor.Truncated => "truncated" }
+        entryRows((id, status), entries)
       }
-      .toDF("doc_id", "status", "idx", "name", "method", "comp_size", "uncomp_size")
+    entryFrame(rows, "doc_id", "status", "idx", "name", "method", "comp_size", "uncomp_size")
   }
 
   /** Deterministic TAR archive payloads for [[tarEntries]], six families
@@ -9317,8 +8881,7 @@ object TrainingOps extends Serializable {
       if (base256) {
         // GNU binary size: flag bit on byte 0, big-endian in bytes 1-11
         b(124) = 0x80.toByte
-        var v = size; var k = 135
-        while (k > 124) { b(k) = (v & 0xff).toByte; v >>= 8; k -= 1 }
+        ByteCursor.put(b, 125, size, 11, bigEndian = true)
       } else put(124, f"$size%011o" + "\u0000")
       put(136, "00000000000\u0000")
       put(156, typeflag.toString)
@@ -9398,15 +8961,12 @@ object TrainingOps extends Serializable {
     */
   def tarEntries(spark: SparkSession, payloads: DataFrame): DataFrame = {
     import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
+    val rows = payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        def cstr(b: Array[Byte], off: Int, len: Int): String = {
-          var e = off; val lim = off + len
-          while (e < lim && b(e) != 0) e += 1
-          new String(b, off, e - off, "US-ASCII")
-        }
-        def octal(b: Array[Byte], off: Int, len: Int): Long = {
+      .flatMap { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val b = c.bytes
+        def octal(off: Int, len: Int): Long = {
           var i = off; val lim = off + len
           while (i < lim && b(i) == ' '.toByte) i += 1
           var v = 0L; var any = false
@@ -9415,14 +8975,12 @@ object TrainingOps extends Serializable {
           }
           if (any) v else -1L
         }
-        def sizeField(b: Array[Byte], off: Int): Long =
-          if ((b(off) & 0x80) != 0) {
-            var v = b(off) & 0x7fL; var i = off + 1
-            while (i < off + 12) { v = (v << 8) | (b(i) & 0xffL); i += 1 }
-            v
-          } else octal(b, off, 12)
-        def checksumOk(b: Array[Byte], off: Int): Boolean = {
-          val stored = octal(b, off + 148, 8)
+        // GNU base-256 when byte 0's high bit is set: the 12-byte field
+        // is big-endian binary, and a Long keeps its last 8 bytes
+        def sizeField(off: Int): Long =
+          if ((b(off) & 0x80) != 0) c.be(off + 4, 8) else octal(off, 12)
+        def checksumOk(off: Int): Boolean = {
+          val stored = octal(off + 148, 8)
           var s = 0L; var i = 0
           while (i < 512) {
             s += (if (i >= 148 && i < 156) 32L else (b(off + i) & 0xffL))
@@ -9430,74 +8988,62 @@ object TrainingOps extends Serializable {
           }
           stored >= 0 && s == stored
         }
-        def zeroBlock(b: Array[Byte], off: Int): Boolean = {
+        def zeroBlock(off: Int): Boolean = {
           var i = off
           while (i < off + 512 && b(i) == 0) i += 1
           i == off + 512
         }
-        it.flatMap { case (id, b) =>
-          val len = b.length
-          var p = 0
-          var j = 0
-          var status: String = null
-          var pendingLong: String = null
-          val entries = Vector.newBuilder[(Int, String, String, Long)]
-          if (len < 512) status = "not_tar"
-          while (status == null) {
-            if (p + 512 > len) {
-              // clean EOF exactly on a block boundary after >=1 entry is
-              // a legal (terminator-less) end; anything else mid-header
-              // is truncation
-              status =
-                if (p == len && j > 0) "ok"
-                else if (j > 0) "truncated" else "not_tar"
-            } else if (zeroBlock(b, p)) {
-              status = "ok" // terminator (empty archives are legal tars)
-            } else if (!(b(p + 257) == 'u' && b(p + 258) == 's' &&
-                         b(p + 259) == 't' && b(p + 260) == 'a' &&
-                         b(p + 261) == 'r')) {
-              status = if (j == 0) "not_tar" else "malformed"
-            } else if (!checksumOk(b, p)) {
-              status = "bad_checksum"
-            } else {
-              val sz = sizeField(b, p + 124)
-              if (sz < 0) status = "malformed"
+        var p = 0
+        var status: String = null
+        var pendingLong: String = null
+        val entries = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+        if (c.length < 512) status = "not_tar"
+        while (status == null) {
+          val j = entries.length
+          if (!c.fits(p, 512)) {
+            // clean EOF exactly on a block boundary after >=1 entry is
+            // a legal (terminator-less) end; anything else mid-header
+            // is truncation
+            status =
+              if (p == c.length && j > 0) "ok"
+              else if (j > 0) "truncated" else "not_tar"
+          } else if (zeroBlock(p)) {
+            status = "ok" // terminator (empty archives are legal tars)
+          } else if (!c.has(p + 257, "ustar")) {
+            status = if (j == 0) "not_tar" else "malformed"
+          } else if (!checksumOk(p)) {
+            status = "bad_checksum"
+          } else {
+            val sz = sizeField(p + 124)
+            if (sz < 0) status = "malformed"
+            else {
+              val blocks = ((sz + 511) / 512) * 512
+              if (!c.fits(p + 512, blocks)) status = "truncated"
               else {
-                val blocks = ((sz + 511) / 512) * 512
-                if (p + 512 + blocks > len) status = "truncated"
-                else {
-                  val tf = (b(p + 156) & 0xff).toChar
-                  if (tf == 'L') {
-                    // GNU longname: the data block holds the REAL name
-                    // of the next entry, NUL-terminated; consume it
-                    pendingLong = cstr(b, p + 512, sz.toInt)
-                  } else {
-                    val posix = b(p + 262) == 0 // "ustar\0" vs "ustar  "
-                    val base = cstr(b, p, 100)
-                    val pre = if (posix) cstr(b, p + 345, 155) else ""
-                    val name =
-                      if (pendingLong != null) pendingLong
-                      else if (pre.nonEmpty) pre + "/" + base
-                      else base
-                    pendingLong = null
-                    entries += ((j, name, tf.toString, sz))
-                    j += 1
-                  }
-                  p += 512 + blocks.toInt
+                val tf = c.u8(p + 156).toChar
+                if (tf == 'L') {
+                  // GNU longname: the data block holds the REAL name
+                  // of the next entry, NUL-terminated; consume it
+                  pendingLong = c.asciiz(p + 512, sz.toInt)
+                } else {
+                  val posix = b(p + 262) == 0 // "ustar\0" vs "ustar  "
+                  val base = c.asciiz(p, 100)
+                  val pre = if (posix) c.asciiz(p + 345, 155) else ""
+                  val name =
+                    if (pendingLong != null) pendingLong
+                    else if (pre.nonEmpty) pre + "/" + base
+                    else base
+                  pendingLong = null
+                  entries += ((j, name, tf.toString, sz))
                 }
+                p += 512 + blocks.toInt
               }
             }
           }
-          val es = entries.result()
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[String],
-              None: Option[String], None: Option[Long]))
-          else es.map { case (i2, nm, tf, sz) =>
-            (id, status, Some(i2), Some(nm), Some(tf), Some(sz))
-          }
         }
+        entryRows((id, status), entries)
       }
-      .toDF("doc_id", "status", "idx", "name", "typeflag", "size")
+    entryFrame(rows, "doc_id", "status", "idx", "name", "typeflag", "size")
   }
 
   /** Deterministic TIFF payloads for [[tiffEntries]], six families by
@@ -9517,72 +9063,62 @@ object TrainingOps extends Serializable {
     * order.
     */
   def syntheticTiffPayload(id: Long): Array[Byte] = {
-    def w16(b: Array[Byte], off: Int, v: Int, be: Boolean): Unit =
-      if (be) { b(off) = (v >> 8).toByte; b(off + 1) = v.toByte }
-      else { b(off) = v.toByte; b(off + 1) = (v >> 8).toByte }
-    def w32(b: Array[Byte], off: Int, v: Long, be: Boolean): Unit =
-      if (be) {
-        b(off) = (v >> 24).toByte; b(off + 1) = (v >> 16).toByte
-        b(off + 2) = (v >> 8).toByte; b(off + 3) = v.toByte
-      } else {
-        b(off) = v.toByte; b(off + 1) = (v >> 8).toByte
-        b(off + 2) = (v >> 16).toByte; b(off + 3) = (v >> 24).toByte
-      }
+    import ByteCursor.put
     def mk(size: Int, be: Boolean): Array[Byte] = {
       val b = new Array[Byte](size)
       b(0) = (if (be) 'M' else 'I').toByte; b(1) = b(0)
-      w16(b, 2, 42, be); w32(b, 4, 8L, be); b
+      put(b, 2, 42, 2, be); put(b, 4, 8L, 4, be); b
     }
     // writes an entry header, returns the value-field offset
     def ent(b: Array[Byte], off: Int, tag: Int, typ: Int, cnt: Long,
             be: Boolean): Int = {
-      w16(b, off, tag, be); w16(b, off + 2, typ, be)
-      w32(b, off + 4, cnt, be); off + 8
+      put(b, off, tag, 2, be); put(b, off + 2, typ, 2, be)
+      put(b, off + 4, cnt, 4, be); off + 8
     }
     (id % 6).toInt match {
       case 0 =>
         val b = mk(58, be = false)
-        w16(b, 8, 3, false)
-        w16(b, ent(b, 10, 256, 3, 1, false), (640 + id % 100).toInt, false)
-        w16(b, ent(b, 22, 257, 3, 1, false), (480 + id % 100).toInt, false)
-        w32(b, ent(b, 34, 271, 2, 8, false), 50L, false)
-        w32(b, 46, 0L, false)
+        put(b, 8, 3, 2, false)
+        put(b, ent(b, 10, 256, 3, 1, false), (640 + id % 100).toInt, 2, false)
+        put(b, ent(b, 22, 257, 3, 1, false), (480 + id % 100).toInt, 2, false)
+        put(b, ent(b, 34, 271, 2, 8, false), 50L, 4, false)
+        put(b, 46, 0L, 4, false)
         val s = s"camera${id % 9}".getBytes("US-ASCII") // 7 chars + NUL pad
         System.arraycopy(s, 0, b, 50, s.length)
         b
       case 1 =>
         val b = mk(46, be = true)
-        w16(b, 8, 2, true)
-        w16(b, ent(b, 10, 256, 3, 1, true), (800 + id % 100).toInt, true)
-        w32(b, ent(b, 22, 282, 5, 1, true), 38L, true)
-        w32(b, 34, 0L, true)
-        w32(b, 38, 2L * (72 + id % 10), true) // numerator
-        w32(b, 42, 2L, true)                  // denominator
+        put(b, 8, 2, 2, true)
+        put(b, ent(b, 10, 256, 3, 1, true), (800 + id % 100).toInt, 2, true)
+        put(b, ent(b, 22, 282, 5, 1, true), 38L, 4, true)
+        put(b, 34, 0L, 4, true)
+        put(b, 38, 2L * (72 + id % 10), 4, true) // numerator
+        put(b, 42, 2L, 4, true)                  // denominator
         b
       case 2 =>
         val b = mk(74, be = false)
-        w16(b, 8, 2, false)
-        w16(b, ent(b, 10, 256, 3, 1, false), (1024 + id % 50).toInt, false)
-        w32(b, ent(b, 22, 34665, 4, 1, false), 38L, false) // EXIF pointer
-        w32(b, 34, 56L, false) // next IFD = IFD1
-        w16(b, 38, 1, false)   // EXIF sub-IFD
-        w16(b, ent(b, 40, 34855, 3, 1, false), (100 + (id % 8) * 25).toInt, false)
-        w32(b, 52, 0L, false)
-        w16(b, 56, 1, false)   // IFD1 (thumbnail)
-        w16(b, ent(b, 58, 259, 3, 1, false), 6, false)
-        w32(b, 70, 0L, false)
+        put(b, 8, 2, 2, false)
+        put(b, ent(b, 10, 256, 3, 1, false), (1024 + id % 50).toInt, 2, false)
+        put(b, ent(b, 22, 34665, 4, 1, false), 38L, 4, false) // EXIF pointer
+        put(b, 34, 56L, 4, false) // next IFD = IFD1
+        put(b, 38, 1, 2, false)   // EXIF sub-IFD
+        put(b, ent(b, 40, 34855, 3, 1, false), (100 + (id % 8) * 25).toInt, 2, false)
+        put(b, 52, 0L, 4, false)
+        put(b, 56, 1, 2, false)   // IFD1 (thumbnail)
+        put(b, ent(b, 58, 259, 3, 1, false), 6, 2, false)
+        put(b, 70, 0L, 4, false)
         b
       case 3 =>
         val b = mk(26, be = false)
-        w16(b, 8, 1, false)
-        w16(b, ent(b, 10, 256, 3, 1, false), (555 + id % 9).toInt, false)
-        w32(b, 22, 8L, false) // next-IFD cycles back to IFD0
+        put(b, 8, 1, 2, false)
+        put(b, ent(b, 10, 256, 3, 1, false), (555 + id % 9).toInt, 2, false)
+        put(b, 22, 8L, 4, false) // next-IFD cycles back to IFD0
         b
       case 4 => s"not a tiff $id".getBytes("US-ASCII")
       case _ =>
         val b = mk(22, be = false) // promises 2 entries, holds 1
-        w16(b, 8, 2, false)
-        w16(b, ent(b, 10, 256, 3, 1, false), (320 + id % 100).toInt, false)
+        put(b, 8, 2, 2, false)
+        put(b, ent(b, 10, 256, 3, 1, false), (320 + id % 100).toInt, 2, false)
         b
     }
   }
@@ -9617,121 +9153,78 @@ object TrainingOps extends Serializable {
     */
   def tiffEntries(spark: SparkSession, payloads: DataFrame): DataFrame = {
     import spark.implicits._
-    payloads.select(col("doc_id"), col("payload"))
+    val rows = payloads.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, b) =>
-          val len = b.length
-          var status: String = null
-          val out = Vector.newBuilder[
-            (Int, Int, Int, Int, Long, Option[Long], Option[String])]
-          if (len < 8 ||
-              !((b(0) == 'I' && b(1) == 'I') || (b(0) == 'M' && b(1) == 'M')))
-            status = "not_tiff"
-          else {
-            val be = b(0) == 'M'
-            def u16(off: Int): Int =
-              if (be) ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-              else ((b(off + 1) & 0xff) << 8) | (b(off) & 0xff)
-            def u32(off: Int): Long =
-              if (be) ((b(off) & 0xffL) << 24) | ((b(off + 1) & 0xffL) << 16) |
-                ((b(off + 2) & 0xffL) << 8) | (b(off + 3) & 0xffL)
-              else ((b(off + 3) & 0xffL) << 24) | ((b(off + 2) & 0xffL) << 16) |
-                ((b(off + 1) & 0xffL) << 8) | (b(off) & 0xffL)
-            if (u16(2) != 42) status = "not_tiff"
-            else {
-              // parse one IFD at `off0` labeled `label`; returns
-              // (exifOffset, nextIfdOffset), 0 meaning absent
-              def parseIfd(off0: Long, label: Int): (Long, Long) = {
-                var exif = 0L; var next = 0L
-                if (off0 + 2 > len) { status = "truncated"; return (0L, 0L) }
-                val off = off0.toInt
-                val n = u16(off)
-                var emitted = 0; var i = 0; var done = false
-                while (i < n && !done) {
-                  val e = off + 2 + i * 12
-                  if (e + 12 > len) { status = "truncated"; done = true }
-                  else {
-                    val tag = u16(e); val typ = u16(e + 2); val cnt = u32(e + 4)
-                    val sz: Long = typ match {
-                      case 1 | 2 => 1L; case 3 => 2L; case 4 => 4L
-                      case 5 => 8L; case _ => 0L
-                    }
-                    val bl = cnt * sz
-                    val vOff: Long = if (bl <= 4) (e + 8).toLong else u32(e + 8)
-                    if (sz == 0L) {
-                      // unknown type: surfaced, value unreadable
-                      out += ((label, emitted, tag, typ, cnt, None, None))
-                      emitted += 1
-                    } else if (vOff + bl > len) {
-                      status = "truncated"; done = true
-                    } else if (tag == 34665 && typ == 4) {
-                      exif = u32(vOff.toInt) // consumed: pointer plumbing
-                    } else {
-                      val v = vOff.toInt
-                      typ match {
-                        case 2 =>
-                          var sEnd = v; val lim = v + cnt.toInt
-                          while (sEnd < lim && b(sEnd) != 0) sEnd += 1
-                          out += ((label, emitted, tag, typ, cnt, None,
-                            Some(new String(b, v, sEnd - v, "US-ASCII"))))
-                        case 1 =>
-                          out += ((label, emitted, tag, typ, cnt,
-                            Some(b(v) & 0xffL), None))
-                        case 3 =>
-                          out += ((label, emitted, tag, typ, cnt,
-                            Some(u16(v).toLong), None))
-                        case 4 =>
-                          out += ((label, emitted, tag, typ, cnt,
-                            Some(u32(v)), None))
-                        case _ => // 5: RATIONAL
-                          val den = u32(v + 4)
-                          out += ((label, emitted, tag, typ, cnt,
-                            if (den == 0) None else Some(u32(v) / den), None))
-                      }
-                      emitted += 1
-                    }
-                    i += 1
-                  }
-                }
-                if (!done) {
-                  val nOff = off + 2 + n * 12
-                  if (nOff + 4 > len) status = "truncated"
-                  else next = u32(nOff)
-                }
-                (exif, next)
+      .flatMap { case (id, raw) =>
+        val c = new ByteCursor(raw)
+        val out = scala.collection.mutable.ArrayBuffer
+          .empty[(Int, Int, Int, Int, Long, Option[Long], Option[String])]
+        val be = c.has(0, "MM")
+        def u16(off: Long): Int = (if (be) c.be(off, 2) else c.le(off, 2)).toInt
+        def u32(off: Long): Long = if (be) c.be(off, 4) else c.le(off, 4)
+        // parse one IFD at `off0` labeled `label`; returns
+        // (exifOffset, nextIfdOffset), 0 meaning absent
+        def parseIfd(off0: Long, label: Int): (Long, Long) = {
+          val n = u16(off0)
+          val off = off0.toInt
+          var exif = 0L
+          var emitted = 0
+          for (i <- 0 until n) {
+            val e = c.need(off + 2 + i * 12, 12)
+            val tag = u16(e); val typ = u16(e + 2); val cnt = u32(e + 4)
+            val sz: Long = typ match {
+              case 1 | 2 => 1L; case 3 => 2L; case 4 => 4L
+              case 5 => 8L; case _ => 0L
+            }
+            val bl = cnt * sz
+            if (sz == 0L) {
+              // unknown type: surfaced, value unreadable
+              out += ((label, emitted, tag, typ, cnt, None, None))
+              emitted += 1
+            } else {
+              val v = c.need(if (bl <= 4) e + 8 else u32(e + 8), bl)
+              if (tag == 34665 && typ == 4) exif = u32(v) // consumed: pointer plumbing
+              else {
+                out += ((label, emitted, tag, typ, cnt, typ match {
+                  case 2 => None
+                  case 1 => Some(c.u8(v).toLong)
+                  case 3 => Some(u16(v).toLong)
+                  case 4 => Some(u32(v))
+                  case _ => // 5: RATIONAL
+                    val den = u32(v + 4)
+                    if (den == 0) None else Some(u32(v) / den)
+                }, if (typ == 2) Some(c.asciiz(v, cnt.toInt)) else None))
+                emitted += 1
               }
-              var visited = Set.empty[Long]
-              var chain = 0
-              var cur = u32(4)
-              while (cur != 0 && status == null) {
-                if (visited(cur)) status = "malformed"
-                else {
-                  visited += cur
-                  val (exif, next) = parseIfd(cur, chain)
-                  if (status == null && exif != 0) {
-                    if (visited(exif)) status = "malformed"
-                    else { visited += exif; parseIfd(exif, 100) }
-                  }
-                  cur = next; chain += 1
-                }
-              }
-              if (status == null) status = "ok"
             }
           }
-          val es = out.result()
-          if (es.isEmpty)
-            Seq((id, status, None: Option[Int], None: Option[Int],
-              None: Option[Int], None: Option[Int], None: Option[Long],
-              None: Option[Long], None: Option[String]))
-          else es.map { case (ifd, idx, tag, typ, cnt, vn, vs) =>
-            (id, status, Some(ifd), Some(idx), Some(tag), Some(typ),
-              Some(cnt), vn, vs)
-          }
+          (exif, u32(off + 2 + n * 12))
         }
+        val status =
+          if (!c.fits(0, 8) || !(c.has(0, "II") || be) || u16(2) != 42) "not_tiff"
+          else try {
+            var v: String = null
+            var visited = Set.empty[Long]
+            var chain = 0
+            var cur = u32(4)
+            while (cur != 0 && v == null) {
+              if (visited(cur)) v = "malformed"
+              else {
+                visited += cur
+                val (exif, next) = parseIfd(cur, chain)
+                if (exif != 0) {
+                  if (visited(exif)) v = "malformed"
+                  else { visited += exif; parseIfd(exif, 100) }
+                }
+                cur = next; chain += 1
+              }
+            }
+            if (v == null) "ok" else v
+          } catch { case ByteCursor.Truncated => "truncated" }
+        entryRows((id, status), out)
       }
-      .toDF("doc_id", "status", "ifd", "idx", "tag", "ftype", "cnt",
-        "value_num", "value_str")
+    entryFrame(rows, "doc_id", "status", "ifd", "idx", "tag", "ftype", "cnt",
+      "value_num", "value_str")
   }
 
   /** The blocklist pattern table for [[blocklistHits]]'s driver query —

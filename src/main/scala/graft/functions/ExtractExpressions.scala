@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Un
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.core._
+import graft.spark.{ExtractConf, ExtractPipeline, ResultRow}
 
 /** Static kernel entry points for codegen: generated Java calls these
   * directly (`graft.functions.ExtractTextKernel.extractText(bytes)`), so
@@ -17,31 +18,32 @@ import graft.core._
   * the primary surface; these expose the same kernel to SQL users
   * (`SELECT extract_text(html) FROM pages`).
   *
-  * Error-as-data at expression granularity: rejected formats, timeouts
-  * and kernel errors all yield SQL NULL (an expression has no status
-  * column to carry a taxonomy; the pipeline surface does).
+  * Both run the pipeline's own kernel, [[ExtractPipeline.Kernel.process]]
+  * under the default [[ExtractConf]], size gate included, so a page gets
+  * the answer the pipeline gives it. Error-as-data at expression
+  * granularity: every status but `ok` (oversized, rejected format,
+  * timeout, kernel error) yields SQL NULL — an expression has no status
+  * column to carry the taxonomy; the pipeline surface does.
   */
 object ExtractTextKernel {
-  private val budgetNanos = graft.spark.ExtractConf().docBudgetNanos
+  private val conf = ExtractConf()
+
+  /** The pipeline's result for one payload, or null unless it is `ok`. */
+  private def extracted(bytes: Array[Byte]): ResultRow = {
+    if (bytes == null) return null
+    val gate = if (bytes.length > conf.maxBytes) Status.RejectedSize else null
+    val r = ExtractPipeline.Kernel.process(null, bytes, gate, 0, conf)
+    if (r.status == Status.Ok) r else null
+  }
 
   def extractText(bytes: Array[Byte]): UTF8String = {
-    if (bytes == null) return null
-    Extractors.forType(ContentType.detect(bytes)) match {
-      case Some(ex) =>
-        try UTF8String.fromString(ex.extract(bytes, new Html.Deadline(budgetNanos)).text)
-        catch { case _: Exception => null }
-      case None => null
-    }
+    val r = extracted(bytes)
+    if (r == null) null else UTF8String.fromString(r.text)
   }
 
   def extractPages(bytes: Array[Byte]): java.lang.Integer = {
-    if (bytes == null) return null
-    Extractors.forType(ContentType.detect(bytes)) match {
-      case Some(ex) =>
-        try Int.box(ex.extract(bytes, new Html.Deadline(budgetNanos)).pages)
-        catch { case _: Exception => null }
-      case None => null
-    }
+    val r = extracted(bytes)
+    if (r == null) null else Int.box(r.pages)
   }
 }
 

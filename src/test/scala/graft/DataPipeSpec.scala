@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -5697,5 +5697,181 @@ class DataPipeSpec extends AnyFunSuite with BeforeAndAfterAll {
     // -> its absence proves the brace rule fired
     val (n7, k7, c7) = out(7L)
     assert(c7.nonEmpty && !c7.contains("{") && k7 < n7)
+  }
+
+  // ------------------------------------------------- binary walker hygiene
+
+  /** A two-member Common-Crawl segment for [[TrainingOps.gzipMembers]]
+    * and [[TrainingOps.ccReader]]: each member one WARC record wrapping a
+    * synthetic HTTP response, the second with an FNAME header field.
+    */
+  private def ccSegment(id: Long): Array[Byte] = {
+    def rec(k: Long): Array[Byte] = {
+      val http = TrainingOps.syntheticHttpPayload(k)
+      (s"WARC/1.0\r\nWARC-Target-URI: http://h$k.example.com/\r\n" +
+        s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1") ++
+        http ++ "\r\n\r\n".getBytes("ISO-8859-1")
+    }
+    TrainingOps.gzipMember(rec(id)) ++ TrainingOps.gzipMember(rec(id + 1), s"r$id.warc")
+  }
+
+  /** Every synthetic fixture builder, by name. */
+  private val fixtureBuilders: Seq[(String, Long => Array[Byte])] = Seq(
+    "http" -> TrainingOps.syntheticHttpPayload,
+    "wav" -> TrainingOps.syntheticWavPayload,
+    "charset" -> TrainingOps.syntheticCharsetPayload,
+    "image" -> TrainingOps.syntheticImagePayload,
+    "png" -> TrainingOps.syntheticPngPayload,
+    "jpeg" -> TrainingOps.syntheticJpegPayload,
+    "mp3" -> TrainingOps.syntheticMp3Payload,
+    "zstd" -> TrainingOps.syntheticZstdPayload,
+    "ebml" -> TrainingOps.syntheticEbmlPayload,
+    "ogg" -> TrainingOps.syntheticOggPayload,
+    "tfrecord" -> TrainingOps.syntheticTfrecordPayload,
+    "jsonl" -> TrainingOps.syntheticJsonlPayload,
+    "npy" -> TrainingOps.syntheticNpyPayload,
+    "safetensors" -> TrainingOps.syntheticSafetensorsPayload,
+    "avro" -> TrainingOps.syntheticAvroPayload,
+    "parquet" -> TrainingOps.syntheticParquetPayload,
+    "gif" -> TrainingOps.syntheticGifPayload,
+    "proto" -> TrainingOps.syntheticProtoPayload,
+    "webp" -> TrainingOps.syntheticWebpPayload,
+    "flac" -> TrainingOps.syntheticFlacPayload,
+    "chunked" -> TrainingOps.syntheticChunkedPayload,
+    "mp4" -> TrainingOps.syntheticMp4Payload,
+    "zip" -> TrainingOps.syntheticZipPayload,
+    "tar" -> TrainingOps.syntheticTarPayload,
+    "tiff" -> TrainingOps.syntheticTiffPayload,
+    "gzip_member" -> ((id: Long) => TrainingOps.gzipMember(
+      (s"member $id " * (1 + (id % 7).toInt)).getBytes("US-ASCII"),
+      if (id % 2 == 0) s"f$id.txt" else null)),
+    "cc_segment" -> ccSegment)
+
+  test("synthetic fixture builders are byte-stable: one SHA-256 per builder over ids 0-599") {
+    def digest(build: Long => Array[Byte]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      (0L until 600L).foreach { id =>
+        val b = build(id)
+        md.update(java.nio.ByteBuffer.allocate(4).putInt(b.length).array)
+        md.update(b)
+      }
+      md.digest().map("%02x".format(_)).mkString
+    }
+    // the builders' exact bytes: the oracle sees them only through the
+    // walkers' outputs at sf0.01, so a byte that moves must fail here
+    val expected = Map(
+      "http" -> "890dc0d6edf173f34d8c38843b33b33a625b48004e886b7d9c52edb4d6e99c8a",
+      "wav" -> "0084b16d399e520e1e24e06f449a98050744b3bc038bb57a9a50c617a374fb57",
+      "charset" -> "6f0059583c790e0d37e13df5f9f1c01f74caaa92114d433a5d0d6a918be95c48",
+      "image" -> "0686d4dbba107c69123bf80e4863b9747f68cf70e7873c6b88d971e7c0f87dd3",
+      "png" -> "59c8324f5e9ad5c6a196f04a4eb9e64ff82b0cc8f6e3b2dc0d4a4e387102d090",
+      "jpeg" -> "b58cc2e4137951f490f6eebcace7e0e0288432e4a8002a7e611a16c4fa3c27e8",
+      "mp3" -> "e12ba9895d39cc31cc439c5184a1ea18f0b57a54da64a430f14afbb4171410ca",
+      "zstd" -> "6f5c65f846373129f1db0d875eb8d4039b62a5b63ec07c9b3154cb5eabf8a7f8",
+      "ebml" -> "0b50cd0e22e2f3572708add88c7cecbe86efeed1d94edfdc0a0c826bf2acbe39",
+      "ogg" -> "0ce8c1a44ff26426f34c97886c0e9cc3b8392be4af7c6f8541db2654ba9c0a50",
+      "tfrecord" -> "349959145307a9630a26bddb0d650b91b6173d97338286172ee61fb301a88319",
+      "jsonl" -> "d3829dcd06c613859580684ba0d430dc245631c2fdf40262717541cd75734b24",
+      "npy" -> "ea9485bfe709572d11874ecad857e08764c26d7d74649da8beff42ef6310d56a",
+      "safetensors" -> "8669b497d2df4dfe35fff080731e9cb286e2cdf21d403a7b444a4a92f323a5b3",
+      "avro" -> "fc6f67bf9df9f5f2c6931e4d0a60e9fc463ea06042b7ddaf7a0c771d75711ecb",
+      "parquet" -> "b4f13e4046e847f4228721adcf9e3c10af1469c45696f2b0c8f127659d74b4fb",
+      "gif" -> "fbaab4cb547e8e33eb8007b5f682525e6eba6afa916d1bc25349af3f82280286",
+      "proto" -> "a276d457be5602aca3c794d14ec5541ff56289d45889cf0cff70b90715bc236d",
+      "webp" -> "894541aa32b0670f6c1869fb6bec1e6567f045b7f7504c6f8556ff2e260e265c",
+      "flac" -> "6115df32075bc92e08d23c97b4a856ad831cb3885791217c07ae365b9290b4dd",
+      "chunked" -> "a5e5e84b93bfccca0c17974005ba9873110d322798df3359bbd0bc6a9c4cd4cd",
+      "mp4" -> "1b886d68ccfae147536381930d6fb15436f3d908ae610c63371346e96e70bdc4",
+      "zip" -> "0230266ca398e1c389ed5caae9f729daf21c811691a0f0dad14d774ffab95e68",
+      "tar" -> "dd21aa8641b8eb3035e1e750d3ea5a33514c6350c07d044d5888554d547a6c49",
+      "tiff" -> "4f9b2b7f265ea1a9b7df2ce274fceb41032b00f047d274545ecd93a076b02411",
+      "gzip_member" -> "3e47b317a5fede304b400a2fa58c7d20f40ad09d69a81403a0dde65651146379",
+      "cc_segment" -> "f83d47900cf70b8e0f86916383e647d341d936d1ddd5571df3426ab3680c6a47")
+    fixtureBuilders.foreach { case (name, build) =>
+      assert(digest(build) == expected(name), s"builder $name")
+    }
+  }
+
+  /** Hostile inputs for one walker: NULL, empty, every prefix of the
+    * synthetic payloads for ids 0-11, each payload with one bit flipped
+    * per byte, seeded random bytes, and random tails behind each
+    * payload's first 12 bytes (past the magic, into the length fields).
+    */
+  private def hostileInputs(build: Long => Array[Byte]): Seq[Array[Byte]] = {
+    val base = (0L until 12L).map(build)
+    val rnd = new scala.util.Random(20261019L)
+    def noise(k: Int) = Array.fill(k)(rnd.nextInt(256).toByte)
+    Seq(null, Array.emptyByteArray) ++
+      base.flatMap(b => (1 to b.length).map(k => b.take(k))) ++
+      base.flatMap(b => b.indices.map { i =>
+        val c = b.clone(); c(i) = (c(i) ^ (1 << (i % 8))).toByte; c
+      }) ++
+      Seq.fill(64)(noise(rnd.nextInt(600))) ++
+      base.flatMap(b => Seq.fill(8)(b.take(12) ++ noise(rnd.nextInt(200))))
+  }
+
+  test("every payload walker is total: NULL, empty, prefixes, bit flips and noise never throw, statuses stay in taxonomy") {
+    val sp = spark; import sp.implicits._
+    type Walk = (SparkSession, DataFrame) => DataFrame
+    def seg(w: Walk): Walk = (s, df) => w(s, df.toDF("segment_id", "gz"))
+    val fx = fixtureBuilders.toMap
+    // (walker, its fixture builder, documented status taxonomy — empty
+    // for the walkers that emit no status column)
+    val walkers: Seq[(String, Walk, Long => Array[Byte], Set[String])] = Seq(
+      ("m5_charset", TrainingOps.charsetDetect, fx("charset"), Set()),
+      ("m6_http", TrainingOps.httpResponses, fx("http"), Set("ok", "truncated", "malformed")),
+      ("m8_wav", TrainingOps.wavHeaders, fx("wav"), Set("ok", "truncated", "unknown")),
+      ("m9_gzip", seg(TrainingOps.gzipMembers), fx("cc_segment"),
+        Set("ok", "truncated", "malformed", "corrupt")),
+      ("m10_cc", seg(TrainingOps.ccReader), fx("cc_segment"),
+        Set("ok", "truncated", "malformed", "gzip_truncated", "gzip_malformed",
+          "gzip_corrupt", "warc_truncated", "warc_malformed")),
+      ("m4_image", TrainingOps.imageDims, fx("image"), Set("ok", "truncated", "malformed", "unknown")),
+      ("m11_mp4", TrainingOps.mp4Headers, fx("mp4"), Set("ok", "truncated", "malformed", "unknown")),
+      ("m12_chunked", TrainingOps.chunkedDecode, fx("chunked"), Set("ok", "truncated", "malformed")),
+      ("m13_zip", TrainingOps.zipEntries, fx("zip"), Set("ok", "no_eocd", "malformed", "truncated")),
+      ("m14_tar", TrainingOps.tarEntries, fx("tar"),
+        Set("ok", "not_tar", "bad_checksum", "malformed", "truncated")),
+      ("m15_tiff", TrainingOps.tiffEntries, fx("tiff"), Set("ok", "not_tiff", "malformed", "truncated")),
+      ("m16_png", TrainingOps.pngChunks, fx("png"),
+        Set("ok", "not_png", "truncated", "malformed", "no_iend")),
+      ("m17_jpeg", TrainingOps.jpegSegments, fx("jpeg"),
+        Set("ok", "not_jpeg", "truncated", "malformed", "no_eoi")),
+      ("m18_mp3", TrainingOps.mp3Frames, fx("mp3"),
+        Set("ok", "not_mp3", "truncated", "malformed", "free_bitrate")),
+      ("m19_zstd", TrainingOps.zstdFrames, fx("zstd"), Set("ok", "not_zstd", "truncated", "malformed")),
+      ("m20_ebml", TrainingOps.ebmlElements, fx("ebml"), Set("ok", "not_ebml", "truncated", "malformed")),
+      ("m21_ogg", TrainingOps.oggPages, fx("ogg"), Set("ok", "not_ogg", "truncated", "malformed")),
+      ("m22_tfrecord", TrainingOps.tfrecordRecords, fx("tfrecord"), Set("ok", "truncated", "corrupt_len")),
+      ("m23_parquet", TrainingOps.parquetFooter, fx("parquet"),
+        Set("ok", "not_parquet", "malformed", "corrupt_footer", "truncated")),
+      ("m24_gif", TrainingOps.gifBlocks, fx("gif"), Set("ok", "not_gif", "truncated", "malformed")),
+      ("m25_flac", TrainingOps.flacBlocks, fx("flac"),
+        Set("ok", "not_flac", "missing_streaminfo", "malformed", "truncated")),
+      ("m26_proto", TrainingOps.protoFields, fx("proto"), Set("ok", "truncated", "malformed")),
+      ("m27_webp", TrainingOps.webpChunks, fx("webp"), Set("ok", "not_webp", "truncated", "malformed")),
+      ("m28_avro", TrainingOps.avroBlocks, fx("avro"), Set("ok", "not_avro", "truncated")),
+      ("m29_jsonl", TrainingOps.jsonlRecords, fx("jsonl"), Set()),
+      ("m30_npy", TrainingOps.npyHeaders, fx("npy"),
+        Set("ok", "not_npy", "bad_version", "truncated_header", "bad_header", "short_data")),
+      ("m31_safetensors", TrainingOps.safetensorsHeaders, fx("safetensors"),
+        Set("ok", "empty", "too_short", "bad_header_len", "bad_json", "bad_schema", "short_data")))
+    val faults = walkers.flatMap { case (name, walk, build, taxonomy) =>
+      val rows = hostileInputs(build).zipWithIndex.map { case (b, i) => (i.toLong, b) }
+      val out = walk(sp, rows.toDF("doc_id", "payload"))
+      scala.util.Try(
+        if (taxonomy.isEmpty) { out.count(); Set.empty[String] }
+        else out.select("status").distinct().collect().map(_.getString(0)).toSet
+      ) match {
+        case scala.util.Failure(e) =>
+          var c: Throwable = e
+          while (c.getCause != null) c = c.getCause
+          Some(s"$name threw ${c.getClass.getSimpleName}")
+        case scala.util.Success(st) if !st.subsetOf(taxonomy) =>
+          Some(s"$name emitted statuses outside its taxonomy: ${st -- taxonomy}")
+        case _ => None
+      }
+    }
+    assert(faults.isEmpty, faults.mkString("\n"))
   }
 }

@@ -54,6 +54,23 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("extract_text / extract_pages answer what the pipeline answers: its text for ok rows, NULL for the rest") {
+    val s = spark; import s.implicits._
+    val pages = graft.gen.PagesGen.fromDocuments(spark, "/root/testdata/sf0.001")
+    val results = graft.spark.ExtractPipeline.run(pages)(spark).collect()
+      .map(r => r.url -> r).toMap
+    val sql = pages.toDF().selectExpr("url", "extract_text(html)", "extract_pages(html)")
+      .collect()
+    assert(sql.nonEmpty && results.values.exists(_.status != graft.core.Status.Ok))
+    sql.foreach { row =>
+      val r = results(row.getString(0))
+      if (r.status == graft.core.Status.Ok) {
+        assert(row.getString(1) == r.text, s"text mismatch for ${r.url}")
+        assert(row.getInt(2) == r.pages, s"pages mismatch for ${r.url}")
+      } else assert(row.isNullAt(1) && row.isNullAt(2), s"${r.url} (${r.status}) is not NULL")
+    }
+  }
+
   test("unknown format and null yield SQL NULL (error-as-data)") {
     val s = spark; import s.implicits._
     Seq((1L, HtmlGen.junkBytes(7L)), (2L, null.asInstanceOf[Array[Byte]]))
