@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.spark.{ExtractConf, ExtractPipeline, LakehouseIO, PageRow}
+import graft.spark.{ExtractConf, ExtractPipeline, MetaJson, PageRow}
 
 /** Driver-run benchmark: times every SparkEntry query, then measures
   * sustained extraction throughput (docs/sec) on a replicated corpus —
@@ -68,7 +68,6 @@ object Bench {
     val results = s1.map { case (k, v) => k -> v.zip(s2(k)).map { case (a, b) => math.min(a, b) } }
     val timed = results.collect { case (k, Some(v)) => k -> v }
     val failed = results.collect { case (k, None) => k }.toSeq.sorted
-    val qs = timed.map { case (k, v) => s"${LakehouseIO.q(k)}:$v" }.mkString("{", ",", "}")
     val total = timed.values.sum
 
     // sustained-throughput measure: replicated corpus, kernel-dominated,
@@ -98,10 +97,10 @@ object Bench {
     val (docs, sec) = if (t1 <= t2) (d1, t1) else (d2, t2)
     val tput = docs / sec
 
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""failed":${failed.map(LakehouseIO.q).mkString("[", ",", "]")},"sf":${LakehouseIO.q(sfDir)},""" +
-      s""""throughput_docs":$docs,"throughput_sec":$sec,"docs_per_sec":$tput,""" +
-      s""""docs_per_sec_per_core":${tput / cpus.toInt},"cores":$cpus}"""
+    val json = MetaJson.write(MetaJson.obj("metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> MetaJson.obj(timed.toSeq: _*), "failed" -> failed, "sf" -> sfDir,
+      "throughput_docs" -> docs, "throughput_sec" -> sec, "docs_per_sec" -> tput,
+      "docs_per_sec_per_core" -> tput / cpus.toInt, "cores" -> cpus.toInt))
     println(json)
     // durable copy: sbt log decoration made the stdout line unparseable in
     // round 1 (BENCH_r01.json parsed:null) — a file survives any wrapper

@@ -113,15 +113,19 @@ object ExtractMain {
     try {
       a.expireTtlHours.foreach { h =>
         val n = LakehouseIO.expire(a.table, h * 3600L * 1000L)
-        println(s"""{"event":"expire","removed":$n}""")
+        println(MetaJson.write(MetaJson.obj("event" -> "expire", "removed" -> n)))
       }
       val t0 = System.nanoTime()
       val (ledgers, rows) = runJob(spark, a)
-      val sec = (System.nanoTime() - t0) / 1e9
-      // run summary — the health-endpoint analog (SURVEY.md par 2.7 item 37)
-      println(
-        s"""{"event":"run_summary","run_id":${LakehouseIO.q(a.runId)},"buckets_committed":${ledgers.size},""" +
-          s""""rows":$rows,"wall_sec":$sec,"docs_per_sec":${if (sec > 0) rows / sec else 0.0}}""")
+      println(runSummary(a.runId, ledgers.size, rows, (System.nanoTime() - t0) / 1e9))
     } finally spark.stop()
   }
+
+  /** The run summary line — the health-endpoint analog (SURVEY.md par
+    * 2.7 item 37).
+    */
+  def runSummary(runId: String, bucketsCommitted: Int, rows: Long, sec: Double): String =
+    MetaJson.write(MetaJson.obj("event" -> "run_summary", "run_id" -> runId,
+      "buckets_committed" -> bucketsCommitted, "rows" -> rows, "wall_sec" -> sec,
+      "docs_per_sec" -> (if (sec > 0) rows / sec else 0.0)))
 }

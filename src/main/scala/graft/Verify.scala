@@ -35,13 +35,14 @@ object Verify {
       graft.spark.Caches.drain()
       spark.catalog.clearCache()
     }
-    // q escapes ALL control chars: a tab or CR in an oracle's SQL would
-    // otherwise make the oracle compare's json.load fail
-    import graft.spark.LakehouseIO.q
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => nameFilter.forall(_.findFirstIn(k).isDefined) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql.toSeq
+      .filter { case (k, _) => nameFilter.forall(_.findFirstIn(k).isDefined) }))
     spark.stop()
   }
+
+  /** `oracle_sql.json`: query name -> oracle SQL. The codec escapes every
+    * control character, so a tab or CR in an oracle's SQL still parses.
+    */
+  def oracleJson(oracles: Seq[(String, String)]): String =
+    graft.spark.MetaJson.write(graft.spark.MetaJson.obj(oracles: _*))
 }

@@ -4759,6 +4759,33 @@ object TrainingOps extends Serializable {
     -1
   }
 
+  private val warcUriRe = "(?m)^WARC-Target-URI: (.*)$".r
+  private val warcLenRe = "(?m)^Content-Length: (\\d+)$".r
+
+  /** The WARC record header `b(off until he)` (`he` = its blank line),
+    * parsed once for the three WARC walkers: (target URI or null,
+    * declared Content-Length, fault). The fault is null when the header
+    * names its version, URI and length and the payload plus `trailer`
+    * bytes fit after the blank line; `malformed` when one is missing;
+    * `truncated` when the declared length overruns the bytes. The length
+    * reads as a `Long` (one too long for a `Long` saturates) and is
+    * checked with [[ByteCursor.fits]], so no declaration can wrap; a
+    * truncated record's `content_length` column saturates at
+    * `Int.MaxValue`.
+    */
+  private def warcHeader(b: Array[Byte], off: Int, he: Int, trailer: Int): (String, Long, String) = {
+    val header = new String(b, off, he - off, "UTF-8")
+    val uri = warcUriRe.findFirstMatchIn(header).map(_.group(1)).orNull
+    val len = warcLenRe.findFirstMatchIn(header)
+      .fold(-1L)(_.group(1).toLongOption.getOrElse(Long.MaxValue))
+    val c = new ByteCursor(b)
+    val fault =
+      if (!header.startsWith("WARC/1.0") || uri == null || len < 0) "malformed"
+      else if (!c.fits(he + 4, len) || !c.fits(he + 4 + len, trailer)) "truncated"
+      else null
+    (uri, len, fault)
+  }
+
   def warcRecords(spark: SparkSession, segs: DataFrame): DataFrame = {
     import spark.implicits._
     val CRLF2 = Array[Byte]('\r', '\n', '\r', '\n')
@@ -4768,8 +4795,6 @@ object TrainingOps extends Serializable {
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         val digest = java.security.MessageDigest.getInstance("MD5")
-        val uriRe = "(?m)^WARC-Target-URI: (.*)$".r
-        val lenRe = "(?m)^Content-Length: (\\d+)$".r
         it.flatMap { case (sid, bytes) =>
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Long, Long, String, Int, String, String)]
@@ -4780,26 +4805,20 @@ object TrainingOps extends Serializable {
             if (he < 0) {
               out += ((sid, off.toLong, null, 0, null, "truncated")); halted = true
             } else {
-              val header = new String(bytes, off, he - off, "UTF-8")
-              val uri = uriRe.findFirstMatchIn(header).map(_.group(1)).orNull
-              val clOpt = lenRe.findFirstMatchIn(header).map(_.group(1).toInt)
-              if (!header.startsWith("WARC/1.0") || uri == null || clOpt.isEmpty) {
-                // malformed header: the record boundary is unknowable —
-                // surface it and stop this segment (resync heuristics are
-                // a policy choice, not parser ground truth)
-                out += ((sid, off.toLong, uri, 0, null, "malformed")); halted = true
+              // a malformed header leaves the record boundary unknowable —
+              // surface it and stop this segment (resync heuristics are a
+              // policy choice, not parser ground truth)
+              val (uri, len, fault) = warcHeader(bytes, off, he, 4)
+              if (fault != null) {
+                val cl = if (fault == "malformed") 0 else len.min(Int.MaxValue).toInt
+                out += ((sid, off.toLong, uri, cl, null, fault)); halted = true
               } else {
-                val cl = clOpt.get
-                val ps = he + 4
-                if (ps + cl + 4 > bytes.length) {
-                  out += ((sid, off.toLong, uri, cl, null, "truncated")); halted = true
-                } else {
-                  digest.reset()
-                  digest.update(bytes, ps, cl)
-                  val md = digest.digest().map("%02x".format(_)).mkString
-                  out += ((sid, off.toLong, uri, cl, md, "ok"))
-                  off = ps + cl + 4
-                }
+                val (ps, cl) = (he + 4, len.toInt)
+                digest.reset()
+                digest.update(bytes, ps, cl)
+                val md = digest.digest().map("%02x".format(_)).mkString
+                out += ((sid, off.toLong, uri, cl, md, "ok"))
+                off = ps + cl + 4
               }
             }
           }
@@ -5056,8 +5075,6 @@ object TrainingOps extends Serializable {
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         val digest = java.security.MessageDigest.getInstance("MD5")
-        val uriRe = "(?m)^WARC-Target-URI: (.*)$".r
-        val lenRe = "(?m)^Content-Length: (\\d+)$".r
         it.flatMap { case (sid, bytes) =>
           val out = scala.collection.mutable.ArrayBuffer
             .empty[(Long, Long, String, Int, Option[Int], Option[String], Option[String], String)]
@@ -5069,23 +5086,16 @@ object TrainingOps extends Serializable {
               out += ((sid, off.toLong, null, 0, None, None, None, "warc_truncated"))
               halted = true
             } else {
-              val header = new String(bytes, off, he - off, "UTF-8")
-              val uri = uriRe.findFirstMatchIn(header).map(_.group(1)).orNull
-              val clOpt = lenRe.findFirstMatchIn(header).map(_.group(1).toInt)
-              if (!header.startsWith("WARC/1.0") || uri == null || clOpt.isEmpty) {
-                out += ((sid, off.toLong, uri, 0, None, None, None, "warc_malformed"))
+              val (uri, len, fault) = warcHeader(bytes, off, he, 4)
+              if (fault != null) {
+                val cl = if (fault == "malformed") 0 else len.min(Int.MaxValue).toInt
+                out += ((sid, off.toLong, uri, cl, None, None, None, "warc_" + fault))
                 halted = true
               } else {
-                val cl = clOpt.get
-                val ps = he + 4
-                if (ps + cl + 4 > bytes.length) {
-                  out += ((sid, off.toLong, uri, cl, None, None, None, "warc_truncated"))
-                  halted = true
-                } else {
-                  val h = parseHttpRegion(digest, bytes, ps, ps + cl)
-                  out += ((sid, off.toLong, uri, cl, h.code, h.ctype, h.bodyMd5, h.status))
-                  off = ps + cl + 4
-                }
+                val (ps, cl) = (he + 4, len.toInt)
+                val h = parseHttpRegion(digest, bytes, ps, ps + cl)
+                out += ((sid, off.toLong, uri, cl, h.code, h.ctype, h.bodyMd5, h.status))
+                off = ps + cl + 4
               }
             }
           }
@@ -5292,8 +5302,6 @@ object TrainingOps extends Serializable {
       .as[(Long, Array[Byte])]
       .mapPartitions { it =>
         val digest = java.security.MessageDigest.getInstance("MD5")
-        val uriRe = "(?m)^WARC-Target-URI: (.*)$".r
-        val lenRe = "(?m)^Content-Length: (\\d+)$".r
         val CRLF2 = Array[Byte]('\r', '\n', '\r', '\n')
         it.flatMap { case (sid, raw) =>
           val c = new ByteCursor(raw)
@@ -5317,13 +5325,10 @@ object TrainingOps extends Serializable {
                 if (!new ByteCursor(rec).has(0, "WARC/1.0")) verdict(null, "warc_malformed")
                 else if (he < 0) verdict(null, "warc_truncated")
                 else {
-                  val header = new String(rec, 0, he, "UTF-8")
-                  val uri = uriRe.findFirstMatchIn(header).map(_.group(1)).orNull
-                  val clOpt = lenRe.findFirstMatchIn(header).map(_.group(1).toInt)
-                  if (uri == null || clOpt.isEmpty) verdict(uri, "warc_malformed")
-                  else if (he + 4 + clOpt.get > rec.length) verdict(uri, "warc_truncated")
+                  val (uri, len, fault) = warcHeader(rec, 0, he, 0)
+                  if (fault != null) verdict(uri, "warc_" + fault)
                   else {
-                    val h = parseHttpRegion(digest, rec, he + 4, he + 4 + clOpt.get)
+                    val h = parseHttpRegion(digest, rec, he + 4, he + 4 + len.toInt)
                     out += ((sid, out.length, uri, h.code, h.ctype, h.bodyMd5, h.status))
                   }
                 }

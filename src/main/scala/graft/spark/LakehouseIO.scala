@@ -2,10 +2,12 @@ package graft.spark
 
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.AccumulatorV2
 
 /** Iceberg-shaped table layer over Parquet + JSON metadata (SURVEY.md
@@ -58,14 +60,6 @@ object LakehouseIO {
     def okRows: Long = statusCounts.collect { case ((_, graft.core.Status.Ok), n) => n }.sum
   }
 
-  private val Json = new ObjectMapper()
-
-  /** JSON string literal, or `null`. Jackson escapes `\`, `"` and every
-    * control character U+0000-U+001F (RFC 8259 par 7), so any string
-    * reads back exactly.
-    */
-  private[graft] def q(s: String): String = Json.writeValueAsString(s)
-
   /** The charset the JVM maps local file names through (US-ASCII under a
     * POSIX locale, where a non-ASCII name cannot be created at all).
     */
@@ -86,7 +80,7 @@ object LakehouseIO {
       runId.getBytes(StandardCharsets.UTF_8).length <= 200
 
   private def requireRunId(runId: String): Unit =
-    require(validRunId(runId), s"run id ${q(runId)} cannot name a table file")
+    require(validRunId(runId), s"run id ${MetaJson.write(runId)} cannot name a table file")
 
   def ledgerDir(root: String): Path = new Path(root, "_ledger")
   def dataDir(root: String): Path = new Path(root, "data")
@@ -196,10 +190,23 @@ object LakehouseIO {
   private def ledgerJson(lg: BucketLedger): String = {
     val counts = lg.statusCounts.toSeq
       .sortBy { case ((engine, status), _) => (Option(engine), Option(status)) }
-      .map { case ((engine, status), n) => s"[${q(engine)},${q(status)},$n]" }
-    s"""{"bucket":${lg.bucket},"run_id":${q(lg.runId)},"rows":${lg.rows},""" +
-      s""""ok_rows":${lg.okRows},"committed_at_ms":${lg.committedAtMs},""" +
-      s""""status_counts":[${counts.mkString(",")}]}"""
+      .map { case ((engine, status), n) => Seq(engine, status, n) }
+    MetaJson.write(MetaJson.obj("bucket" -> lg.bucket, "run_id" -> lg.runId, "rows" -> lg.rows,
+      "ok_rows" -> lg.okRows, "committed_at_ms" -> lg.committedAtMs, "status_counts" -> counts))
+  }
+
+  /** The table layer's one staging write: `rows` as parquet under
+    * `staging`, partitioned by bucket, with each bucket's (engine,
+    * status) counts tallied in the same pass (request-counter parity,
+    * SURVEY.md par 2.4 item 18) — no second job over the staged rows.
+    */
+  private def stageTallied(rows: Dataset[ResultRow], staging: Path, runId: String)
+      (implicit spark: SparkSession): Map[Int, Map[(String, String), Long]] = {
+    import spark.implicits._
+    val acc = new BucketStatsAcc
+    spark.sparkContext.register(acc, s"bucketStats-$runId")
+    writeParquet(rows.map { r => acc.add(r); r }, staging, "overwrite", "bucket")
+    acc.value
   }
 
   /** Write results with per-bucket atomic commits; returns committed
@@ -213,7 +220,6 @@ object LakehouseIO {
       inputPath: String,
       failAfterBuckets: Option[Int] = None,
   )(implicit spark: SparkSession): Seq[BucketLedger] = {
-    import spark.implicits._
     requireRunId(runId)
     val t0 = System.currentTimeMillis()
     val staging = stagingDir(root, runId)
@@ -222,14 +228,7 @@ object LakehouseIO {
     fs.mkdirs(dataDir(root))
     fs.mkdirs(ledgerDir(root))
     fs.mkdirs(snapshotsDir(root))
-
-    // per-bucket stats for the ledger (request-counter parity, SURVEY.md
-    // par 2.4 item 18), tallied in the same pass that writes the parquet
-    val acc = new BucketStatsAcc
-    spark.sparkContext.register(acc, s"bucketStats-$runId")
-    val instrumented = results.map { r => acc.add(r); r }
-    writeParquet(instrumented, staging, "overwrite", "bucket")
-    val stats = acc.value
+    val stats = stageTallied(results, staging, runId)
 
     val bucketDirs =
       (if (fs.isDirectory(staging)) fs.listStatus(staging).toSeq else Seq.empty)
@@ -258,14 +257,27 @@ object LakehouseIO {
       }
     }
 
-    val wallMs = System.currentTimeMillis() - t0
     val ls = ledgers.result()
-    val totalRows = ls.map(_.rows).sum
+    commitSnapshot(root, runId, inputPath, t0, ls, results.schema, previouslyCommitted = Some(already))
+    ls
+  }
+
+  /** The one receipt writer, behind both commit paths: numbers the
+    * snapshot, writes its receipt `_snapshots/<runId>.json`, re-derives
+    * the Iceberg projection and deletes the run's staging. An append
+    * (`previouslyCommitted` given) records the Spark app id, the buckets
+    * committed before it and its rate; an overwrite records `op` instead.
+    */
+  private def commitSnapshot(root: String, runId: String, input: String, t0: Long,
+      ledgers: Seq[BucketLedger], schema: StructType, previouslyCommitted: Option[Set[Int]])
+      (implicit spark: SparkSession): Unit = {
+    val wallMs = System.currentTimeMillis() - t0
+    val rows = ledgers.map(_.rows).sum
     // data sequence number, PERSISTED in the receipt (not derived from
     // list position): snapshot expiry deletes old receipts, and Iceberg
     // semantics require the survivors to KEEP their sequence numbers —
     // a position-derived number would silently renumber history
-    val seqNum = (snapshotHistory(root).map(_.seq) :+ 0L).max + 1
+    val seq = (snapshotHistory(root).map(_.seq) :+ 0L).max + 1
     // post-commit whole-table row count, PERSISTED: overwrite snapshots
     // (applyChanges) report post-rewrite counts in `rows`, so the Iceberg
     // summary's total-records cannot be a cumulative sum of `rows` across
@@ -276,23 +288,22 @@ object LakehouseIO {
     // shortcut is sound); beyond ~10^5 buckets the `format("iceberg")`
     // swap's manifest lists are the intended path
     val tableRows = bucketLedgers(root).map(_.rows).sum
-    val snapshot =
-      s"""{"run_id":${q(runId)},"input":${q(inputPath)},"seq":$seqNum,""" +
-        s""""app_id":${q(spark.sparkContext.applicationId)},""" +
-        s""""committed_buckets":[${ls.map(_.bucket).mkString(",")}],""" +
-        s""""previously_committed":[${already.toSeq.sorted.mkString(",")}],""" +
-        s""""rows":$totalRows,"ok_rows":${ls.map(_.okRows).sum},""" +
-        s""""table_rows":$tableRows,""" +
-        s""""wall_ms":$wallMs,""" +
-        s""""docs_per_sec":${if (wallMs > 0) totalRows * 1000.0 / wallMs else 0.0},""" +
-        s""""committed_at_ms":${System.currentTimeMillis()}}"""
-    atomicWrite(new Path(snapshotsDir(root), s"$runId.json"), snapshot)
+    val receipt: Seq[(String, Any)] =
+      Seq("run_id" -> runId, "input" -> input, "seq" -> seq) ++
+        (if (previouslyCommitted.isDefined) Seq("app_id" -> spark.sparkContext.applicationId)
+        else Seq("op" -> "overwrite")) ++
+        Seq("committed_buckets" -> ledgers.map(_.bucket)) ++
+        previouslyCommitted.map(p => "previously_committed" -> p.toSeq.sorted) ++
+        Seq("rows" -> rows, "ok_rows" -> ledgers.map(_.okRows).sum, "table_rows" -> tableRows,
+          "wall_ms" -> wallMs,
+          "docs_per_sec" -> (if (previouslyCommitted.isDefined && wallMs > 0) rows * 1000.0 / wallMs else 0.0),
+          "committed_at_ms" -> System.currentTimeMillis())
+    atomicWrite(new Path(snapshotsDir(root), s"$runId.json"), MetaJson.write(MetaJson.obj(receipt: _*)))
     // project the (updated) commit history as Iceberg-v2 table metadata —
     // derivation-only, so a crash between the receipt above and here
     // costs nothing (the next commit re-derives the full history)
-    commitIcebergMetadata(root, results.schema)
-    fs.delete(staging, true)
-    ls
+    commitIcebergMetadata(root, schema)
+    fsOf(new Path(root)).delete(stagingDir(root, runId), true)
   }
 
   /** Committed results (data/ holds only committed buckets by construction). */
@@ -309,7 +320,7 @@ object LakehouseIO {
     if (!fs.isDirectory(dir)) return Seq.empty
     fs.listStatus(dir).toSeq.filter(st => keep(st.getPath.getName)).map { st =>
       val in = fs.open(st.getPath)
-      val j = try Json.readTree(in) finally in.close()
+      val j = try MetaJson.mapper.readTree(in) finally in.close()
       if (j == null || !j.isObject) throw new java.io.IOException(s"${st.getPath}: not a JSON object")
       st.getPath -> j
     }
@@ -406,13 +417,13 @@ object LakehouseIO {
     * Protocol: affected buckets = distinct buckets across both change
     * sets (bucket-cardinality, a driver scalar); ONE Spark job reads
     * exactly those bucket directories, anti-joins the change keys by
-    * url, unions the upsert rows, and stages the rewritten buckets;
-    * then per bucket the SAME move-aside two-rename swap as [[compact]]
-    * (old dir -> `_maintenance/trash-N`, staged dir in, delete trash)
-    * replaces the directory and the ledger record is rewritten under
-    * this `runId` (a bucket whose rows all died ends with no data dir
-    * and a rows=0 ledger; [[readBuckets]] skips the absent dir). A
-    * crash at ANY point is recoverable: before the move-aside the table
+    * url, unions the upsert rows, and stages the rewritten buckets,
+    * tallying their ledger counts in the same pass ([[stageTallied]]);
+    * then per bucket [[swapBucket]] (old dir -> `_maintenance/trash-N`,
+    * staged dir in, delete trash) replaces the directory and the ledger
+    * record is rewritten under this `runId` (a bucket whose rows all
+    * died ends with no data dir and a rows=0 ledger; [[readBuckets]]
+    * skips the absent dir). A crash at ANY point is recoverable: before the move-aside the table
     * is untouched; between the renames the committed data sits in
     * trash-N, which [[repairCompaction]] — run first thing here and in
     * [[compact]] — renames back; after the swap-in the bucket is the
@@ -441,6 +452,7 @@ object LakehouseIO {
       failDuringSwapOf: Option[Int] = None)
       (implicit spark: SparkSession): Seq[Int] = {
     import org.apache.spark.sql.functions.col
+    import spark.implicits._
     requireRunId(runId)
     val t0 = System.currentTimeMillis()
     val fs = fsOf(new Path(root))
@@ -462,50 +474,14 @@ object LakehouseIO {
       .union(deleteUrls.select(col("url"))).distinct()
     val next = current.join(changeKeys, Seq("url"), "left_anti")
       .unionByName(up.select(current.columns.map(col).toIndexedSeq: _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    writeParquet(next, staging, "overwrite", "bucket")
-    val stats: Map[Int, Map[(String, String), Long]] = next.groupBy("bucket", "engine", "status")
-      .count().collect().toSeq
-      .groupMap(_.getInt(0))(r => (r.getString(1), r.getString(2)) -> r.getLong(3))
-      .view.mapValues(_.toMap).toMap
-    next.unpersist(blocking = false)
+    val stats = stageTallied(next.as[ResultRow], staging, runId)
     val ledgers = affected.map { b =>
-      val src = new Path(staging, s"bucket=$b")
-      val dst = new Path(dataDir(root), s"bucket=$b")
-      val trash = new Path(maintenanceDir(root), s"trash-$b")
-      fs.mkdirs(maintenanceDir(root))
-      if (fs.exists(trash)) fs.delete(trash, true) // stale (repair already ran)
-      if (fs.exists(dst) && !fs.rename(dst, trash))
-        throw new java.io.IOException(s"rewrite move-aside failed for bucket $b")
-      failDuringSwapOf.foreach { fb =>
-        if (fb == b) throw new RuntimeException(
-          s"injected crash between the two renames of bucket $b")
-      }
-      if (fs.exists(src)) {
-        if (!fs.rename(src, dst)) {
-          if (fs.exists(trash) && !fs.rename(trash, dst)) // restore — unchanged
-            throw new java.io.IOException(
-              s"rewrite swap-in AND restore failed for bucket $b — data is in $trash; " +
-                "run repairCompaction")
-          throw new java.io.IOException(s"rewrite swap-in failed for bucket $b (restored)")
-        }
-      } // else: every row of the bucket died — directory stays absent
-      fs.delete(trash, true)
+      swapBucket(root, b, new Path(staging, s"bucket=$b"), crashBetween = failDuringSwapOf.contains(b))
       val lg = BucketLedger(b, runId, System.currentTimeMillis(), stats.getOrElse(b, Map.empty))
       atomicWrite(ledgerPath(root, b), ledgerJson(lg))
       lg
     }
-    val seqNum = (snapshotHistory(root).map(_.seq) :+ 0L).max + 1
-    val tableRows = bucketLedgers(root).map(_.rows).sum
-    atomicWrite(new Path(snapshotsDir(root), s"$runId.json"),
-      s"""{"run_id":${q(runId)},"input":${q("applyChanges")},"seq":$seqNum,"op":"overwrite",""" +
-        s""""committed_buckets":[${affected.mkString(",")}],""" +
-        s""""rows":${ledgers.map(_.rows).sum},"ok_rows":${ledgers.map(_.okRows).sum},""" +
-        s""""table_rows":$tableRows,""" +
-        s""""wall_ms":${System.currentTimeMillis() - t0},"docs_per_sec":0.0,""" +
-        s""""committed_at_ms":${System.currentTimeMillis()}}""")
-    commitIcebergMetadata(root, upserts.schema)
-    fs.delete(staging, true)
+    commitSnapshot(root, runId, "applyChanges", t0, ledgers, upserts.schema, previouslyCommitted = None)
     affected
   }
 
@@ -529,6 +505,35 @@ object LakehouseIO {
   }
 
   def maintenanceDir(root: String): Path = new Path(root, "_maintenance")
+
+  /** The one bucket swap, behind [[applyChanges]] and [[compact]] and
+    * undone by [[repairCompaction]]: move `data/bucket=b` aside to
+    * `_maintenance/trash-b`, rename `src` in, delete the trash. Either
+    * directory may be absent: with no committed directory nothing moves
+    * aside, and with no `src` (every row of the bucket died) the bucket
+    * stays absent. A failed swap-in renames the trash back.
+    * `crashBetween` throws between the two renames (the crash-repair
+    * tests' hook).
+    */
+  private def swapBucket(root: String, b: Int, src: Path, crashBetween: Boolean = false): Unit = {
+    val dst = new Path(dataDir(root), s"bucket=$b")
+    val trash = new Path(maintenanceDir(root), s"trash-$b")
+    val fs = fsOf(dst)
+    fs.mkdirs(maintenanceDir(root))
+    if (fs.exists(trash)) fs.delete(trash, true) // stale (repair already ran)
+    if (fs.exists(dst) && !fs.rename(dst, trash))
+      throw new java.io.IOException(s"bucket swap: move-aside failed for bucket $b")
+    if (crashBetween)
+      throw new RuntimeException(s"injected crash between the two renames of bucket $b")
+    if (fs.exists(src) && !fs.rename(src, dst)) {
+      if (fs.exists(trash) && !fs.rename(trash, dst)) // restore — table state unchanged
+        throw new java.io.IOException(
+          s"bucket swap: swap-in AND restore failed for bucket $b — data is in $trash; " +
+            "run repairCompaction")
+      throw new java.io.IOException(s"bucket swap: swap-in failed for bucket $b (restored)")
+    }
+    fs.delete(trash, true)
+  }
 
   /** Crash recovery for the move-aside two-rename swap shared by
     * [[compact]] and [[applyChanges]]: restore any bucket whose
@@ -576,11 +581,12 @@ object LakehouseIO {
     * (rows/lineage are unchanged — compaction is not a commit).
     *
     * Swap protocol per bucket: rewrite into `_maintenance/compact-N`,
-    * rename old dir to `_maintenance/trash-N`, rename new dir in, delete
-    * trash. Every failure mode is recoverable: a failed swap-in restores
-    * the old dir in-line (rename back, checked); a CRASH between the two
-    * renames leaves the data in trash-N, which [[repairCompaction]] —
-    * run first thing on every compact() — renames back. Readers racing
+    * then [[swapBucket]] (old dir to `_maintenance/trash-N`, new dir in,
+    * delete trash). Every failure mode is recoverable: a failed swap-in
+    * restores the old dir in-line (rename back, checked); a CRASH
+    * between the two renames leaves the data in trash-N, which
+    * [[repairCompaction]] — run first thing on every compact() —
+    * renames back. Readers racing
     * the two renames can observe the bucket absent (same caveat as any
     * Spark/Hive rename-based maintenance; the Iceberg swap makes it
     * snapshot-atomic). Returns the number of buckets rewritten.
@@ -596,22 +602,11 @@ object LakehouseIO {
       val dataFiles = fs.listStatus(st.getPath)
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       if (dataFiles.length > maxFilesPerBucket) {
-        val b = st.getPath.getName.stripPrefix("bucket=")
+        val b = st.getPath.getName.stripPrefix("bucket=").toInt
         val tmp = new Path(maintenanceDir(root), s"compact-$b")
-        val trash = new Path(maintenanceDir(root), s"trash-$b")
-        Seq(tmp, trash).foreach(p => if (fs.exists(p)) fs.delete(p, true))
         writeParquet(spark.read.parquet(st.getPath.toString).coalesce(maxFilesPerBucket),
           tmp, "overwrite")
-        if (!fs.rename(st.getPath, trash))
-          throw new java.io.IOException(s"compact: move-aside failed for bucket $b")
-        if (!fs.rename(tmp, st.getPath)) {
-          if (!fs.rename(trash, st.getPath)) // restore — table state unchanged
-            throw new java.io.IOException(
-              s"compact: swap-in AND restore failed for bucket $b — data is in $trash; " +
-                "run repairCompaction")
-          throw new java.io.IOException(s"compact: swap-in failed for bucket $b (restored)")
-        }
-        fs.delete(trash, true)
+        swapBucket(root, b, tmp)
         n += 1
       }
     }
@@ -681,43 +676,48 @@ object LakehouseIO {
     h & Long.MaxValue
   }
 
-  /** Iceberg JSON for a Spark type; assigns element/field ids via `next`
-    * in depth-first order (the spec's id-assignment convention).
+  /** The Iceberg schema of a Spark struct, in one walk that assigns
+    * field, element, key and value ids in pre-order (the spec's
+    * convention: an id is taken before anything nested in it): the
+    * schema-0 type tree, the last id assigned, and the id of the
+    * top-level `bucket` field.
     */
-  private def icebergTypeJson(dt: org.apache.spark.sql.types.DataType,
-      next: () => Int): String = {
+  private def icebergSchema(schema: StructType): (ObjectNode, Int, Int) = {
     import org.apache.spark.sql.types._
-    dt match {
-      case StringType => q("string")
-      case IntegerType => q("int")
-      case LongType => q("long")
-      case DoubleType => q("double")
-      case FloatType => q("float")
-      case BooleanType => q("boolean")
-      case BinaryType => q("binary")
-      case TimestampType => q("timestamptz")
-      case TimestampNTZType => q("timestamp")
-      case DateType => q("date")
+    var last = 0
+    var bucketId = -1
+    def next(): Int = { last += 1; last }
+    def typ(dt: DataType): Any = dt match {
+      case StringType => "string"
+      case IntegerType => "int"
+      case LongType => "long"
+      case DoubleType => "double"
+      case FloatType => "float"
+      case BooleanType => "boolean"
+      case BinaryType => "binary"
+      case TimestampType => "timestamptz"
+      case TimestampNTZType => "timestamp"
+      case DateType => "date"
       case s: StructType =>
-        val fields = s.fields.map { f =>
+        MetaJson.obj("type" -> "struct", "fields" -> s.fields.toSeq.map { f =>
           val id = next()
-          s"""{"id":$id,"name":${q(f.name)},"required":${!f.nullable},""" +
-            s""""type":${icebergTypeJson(f.dataType, next)}}"""
-        }
-        s"""{"type":"struct","fields":[${fields.mkString(",")}]}"""
+          if ((s eq schema) && f.name == "bucket" && bucketId < 0) bucketId = id
+          MetaJson.obj("id" -> id, "name" -> f.name, "required" -> !f.nullable, "type" -> typ(f.dataType))
+        })
       case a: ArrayType =>
         val eid = next()
-        s"""{"type":"list","element-id":$eid,""" +
-          s""""element-required":${!a.containsNull},""" +
-          s""""element":${icebergTypeJson(a.elementType, next)}}"""
+        MetaJson.obj("type" -> "list", "element-id" -> eid,
+          "element-required" -> !a.containsNull, "element" -> typ(a.elementType))
       case m: MapType =>
         val kid = next(); val vid = next()
-        s"""{"type":"map","key-id":$kid,"key":${icebergTypeJson(m.keyType, next)},""" +
-          s""""value-id":$vid,"value-required":${!m.valueContainsNull},""" +
-          s""""value":${icebergTypeJson(m.valueType, next)}}"""
+        MetaJson.obj("type" -> "map", "key-id" -> kid, "key" -> typ(m.keyType),
+          "value-id" -> vid, "value-required" -> !m.valueContainsNull, "value" -> typ(m.valueType))
       case other =>
         throw new IllegalArgumentException(s"no Iceberg mapping for $other")
     }
+    val tree = MetaJson.obj("schema-id" -> 0).setAll[ObjectNode](typ(schema).asInstanceOf[ObjectNode])
+    require(bucketId > 0, "results schema must carry a bucket column")
+    (tree, last, bucketId)
   }
 
   private final case class SnapRec(runId: String, rows: Long, okRows: Long,
@@ -756,8 +756,7 @@ object LakehouseIO {
     * ids and sequence numbers, and deleting `metadata/` loses nothing
     * (the ledger receipts remain the truth).
     */
-  def commitIcebergMetadata(root: String,
-      schema: org.apache.spark.sql.types.StructType): Path = {
+  def commitIcebergMetadata(root: String, schema: StructType): Path = {
     val history = snapshotHistory(root)
     require(history.nonEmpty, s"no committed snapshots under $root")
     val mdir = metadataDir(root)
@@ -767,45 +766,15 @@ object LakehouseIO {
     history.foreach { sn =>
       val sid = snapshotIdOf(sn.runId)
       val p = new Path(mdir, s"snap-$sid-manifest-list.json")
-      if (!fs.exists(p)) {
-        val entries = sn.buckets.map { b =>
-          s"""{"manifest_path":${q(new Path(ledgerDir(root), s"bucket-$b.json").toString)},""" +
-            s""""partition_spec_id":0,"content":0,"sequence_number":${sn.seq},""" +
-            s""""added_snapshot_id":$sid,""" +
-            s""""partitions":[{"contains_null":false,"lower_bound":$b,"upper_bound":$b}]}"""
-        }
-        atomicWrite(p, s"[${entries.mkString(",")}]")
-      }
+      if (!fs.exists(p))
+        atomicWrite(p, MetaJson.write(sn.buckets.map { b =>
+          MetaJson.obj("manifest_path" -> ledgerPath(root, b).toString,
+            "partition_spec_id" -> 0, "content" -> 0, "sequence_number" -> sn.seq,
+            "added_snapshot_id" -> sid,
+            "partitions" -> Seq(MetaJson.obj("contains_null" -> false, "lower_bound" -> b, "upper_bound" -> b)))
+        }))
     }
-    // schema with depth-first field ids (top-level fields first would
-    // renumber nested ids, so one pre-order pass assigns everything)
-    var idc = 0
-    val next = () => { idc += 1; idc }
-    val schemaJson = icebergTypeJson(schema, next) match {
-      case s0 => s0.patch(s0.indexOf("\"type\":\"struct\""), "\"schema-id\":0,", 0)
-    }
-    val lastColumnId = idc
-    val bucketSourceId = {
-      // pre-order id of the top-level `bucket` field: walk the same
-      // assignment to find it
-      var c = 0
-      var found = -1
-      def walk(dt: org.apache.spark.sql.types.DataType, name: String): Unit = dt match {
-        case s: org.apache.spark.sql.types.StructType =>
-          s.fields.foreach { f =>
-            c += 1
-            if (found < 0 && (dt eq schema) && f.name == "bucket") found = c
-            walk(f.dataType, f.name)
-          }
-        case a: org.apache.spark.sql.types.ArrayType => c += 1; walk(a.elementType, name)
-        case m: org.apache.spark.sql.types.MapType =>
-          c += 2; walk(m.keyType, name); walk(m.valueType, name)
-        case _ => ()
-      }
-      walk(schema, "")
-      require(found > 0, "results schema must carry a bucket column")
-      found
-    }
+    val (schemaTree, lastColumnId, bucketSourceId) = icebergSchema(schema)
     val uuid = java.util.UUID.nameUUIDFromBytes(
       ("graft-table:" + new Path(root).toUri.getPath)
         .getBytes(StandardCharsets.UTF_8)).toString
@@ -829,37 +798,36 @@ object LakehouseIO {
       val deleted = math.max(0L, prev + sn.rows - running)
       val emitDeleted = sn.op == "overwrite" && sn.tableRows >= 0 && havePrev
       havePrev = true
-      s"""{"snapshot-id":$sid,"sequence-number":${sn.seq},""" +
-        s""""timestamp-ms":${sn.tsMs},"schema-id":0,""" +
-        s""""manifest-list":${q(new Path(mdir, s"snap-$sid-manifest-list.json").toString)},""" +
-        s""""summary":{"operation":${q(sn.op)},""" +
-        s""""added-data-files":${q(sn.buckets.length.toString)},""" +
-        s""""added-records":${q(sn.rows.toString)},""" +
-        (if (emitDeleted) s""""deleted-records":${q(deleted.toString)},""" else "") +
-        s""""total-records":${q(running.toString)}}}"""
+      MetaJson.obj("snapshot-id" -> sid, "sequence-number" -> sn.seq,
+        "timestamp-ms" -> sn.tsMs, "schema-id" -> 0,
+        "manifest-list" -> new Path(mdir, s"snap-$sid-manifest-list.json").toString,
+        "summary" -> MetaJson.obj(Seq("operation" -> sn.op,
+          "added-data-files" -> sn.buckets.length.toString,
+          "added-records" -> sn.rows.toString) ++
+          Option.when(emitDeleted)("deleted-records" -> deleted.toString) :+
+          ("total-records" -> running.toString): _*))
     }
-    val logJson = history.map(sn =>
-      s"""{"timestamp-ms":${sn.tsMs},"snapshot-id":${snapshotIdOf(sn.runId)}}""")
-    val current = snapshotIdOf(history.last.runId)
-    val md =
-      s"""{"format-version":2,"table-uuid":${q(uuid)},""" +
-        s""""location":${q(root)},""" +
-        s""""last-sequence-number":${history.map(_.seq).max},""" +
-        s""""last-updated-ms":${history.last.tsMs},""" +
-        s""""last-column-id":$lastColumnId,""" +
-        s""""schemas":[$schemaJson],"current-schema-id":0,""" +
-        s""""partition-specs":[{"spec-id":0,"fields":[""" +
-        s"""{"name":"bucket","transform":"identity","source-id":$bucketSourceId,"field-id":1000}]}],""" +
-        s""""default-spec-id":0,"last-partition-id":1000,""" +
-        s""""sort-orders":[{"order-id":0,"fields":[]}],"default-sort-order-id":0,""" +
-        s""""properties":{"write.format.default":"parquet"},""" +
-        s""""current-snapshot-id":$current,""" +
-        s""""snapshots":[${snapsJson.mkString(",")}],""" +
-        s""""snapshot-log":[${logJson.mkString(",")}],""" +
-        s""""metadata-log":[]}"""
     val version = history.map(_.seq).max
+    val md = MetaJson.obj(
+      "format-version" -> 2, "table-uuid" -> uuid, "location" -> root,
+      "last-sequence-number" -> version,
+      "last-updated-ms" -> history.last.tsMs,
+      "last-column-id" -> lastColumnId,
+      "schemas" -> Seq(schemaTree), "current-schema-id" -> 0,
+      "partition-specs" -> Seq(MetaJson.obj("spec-id" -> 0, "fields" -> Seq(MetaJson.obj(
+        "name" -> "bucket", "transform" -> "identity", "source-id" -> bucketSourceId,
+        "field-id" -> 1000)))),
+      "default-spec-id" -> 0, "last-partition-id" -> 1000,
+      "sort-orders" -> Seq(MetaJson.obj("order-id" -> 0, "fields" -> Seq.empty)),
+      "default-sort-order-id" -> 0,
+      "properties" -> MetaJson.obj("write.format.default" -> "parquet"),
+      "current-snapshot-id" -> snapshotIdOf(history.last.runId),
+      "snapshots" -> snapsJson,
+      "snapshot-log" -> history.map(sn =>
+        MetaJson.obj("timestamp-ms" -> sn.tsMs, "snapshot-id" -> snapshotIdOf(sn.runId))),
+      "metadata-log" -> Seq.empty)
     val out = new Path(mdir, s"v$version.metadata.json")
-    atomicWrite(out, md)
+    atomicWrite(out, MetaJson.write(md))
     atomicWrite(new Path(mdir, "version-hint.text"), version.toString)
     out
   }

@@ -79,27 +79,31 @@ object StreamingCc {
     * (shared by [[StreamingExtract]] — same commit convention).
     */
   private[streaming] def requireCheckpointMatchesTable(tableRoot: String): Unit = {
-    val batches = new Path(tableRoot, "batches")
     val ckpt = new Path(tableRoot, "_stream_checkpoint")
-    val fs = LakehouseIO.fsOf(batches)
-    val haveBatches = fs.isDirectory(batches) &&
-      fs.listStatus(batches).exists(_.getPath.getName.startsWith("batch="))
-    require(!haveBatches || fs.isDirectory(ckpt),
+    require(batchDirs(tableRoot).isEmpty || LakehouseIO.fsOf(ckpt).isDirectory(ckpt),
       s"$tableRoot holds committed batches but no _stream_checkpoint — a " +
         "restart would renumber batches from 0 and silently skip new data " +
         "as 'replays'; restore the checkpoint or start a fresh tableRoot")
+  }
+
+  /** The committed batch directories `tableRoot/batches/batch=<id>`, by
+    * name, listed through the table layer's FileSystem, so any Hadoop
+    * root works (a `file://` URI included); none when nothing is
+    * committed. Shared with [[StreamingExtract]].
+    */
+  private[streaming] def batchDirs(tableRoot: String): Seq[Path] = {
+    val base = new Path(tableRoot, "batches")
+    val fs = LakehouseIO.fsOf(base)
+    if (!fs.isDirectory(base)) Seq.empty
+    else fs.listStatus(base).toSeq.map(_.getPath)
+      .filter(_.getName.startsWith("batch=")).sortBy(_.getName)
   }
 
   /** All committed records across micro-batches; an empty table yields
     * an empty frame of the walker's schema.
     */
   def readAll(spark: SparkSession, tableRoot: String): DataFrame = {
-    val base = new Path(tableRoot, "batches")
-    val fs = LakehouseIO.fsOf(base)
-    val dirs =
-      if (!fs.isDirectory(base)) Seq.empty
-      else fs.listStatus(base).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith("batch=")).sortBy(_.getName)
+    val dirs = batchDirs(tableRoot)
     if (dirs.isEmpty)
       graft.datapipe.TrainingOps.ccReader(spark,
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], segmentSchema))

@@ -36,18 +36,7 @@ object StreamingExtract {
     * [[readAllDeduped]] for the batch pipeline's one-row-per-url view.
     */
   def readAll(spark: SparkSession, tableRoot: String): org.apache.spark.sql.DataFrame = {
-    val base = java.nio.file.Paths.get(tableRoot, "batches")
-    val batchDirs =
-      if (!java.nio.file.Files.isDirectory(base)) Seq.empty
-      else {
-        val s = java.nio.file.Files.list(base)
-        try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-          .filter(p => p.getFileName.toString.startsWith("batch="))
-          .toSeq
-        finally s.close()
-      }
-    val dfs = batchDirs.sortBy(_.getFileName.toString)
-      .map(p => LakehouseIO.readResults(p.toString)(spark))
+    val dfs = StreamingCc.batchDirs(tableRoot).map(p => LakehouseIO.readResults(p.toString)(spark))
     if (dfs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.Encoders.product[ResultRow].schema)

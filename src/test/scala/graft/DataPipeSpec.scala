@@ -2663,6 +2663,26 @@ class DataPipeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows((2L, 2)) == ((null, "gzip_truncated"))) // cut trailer halts
   }
 
+  test("warc walkers: a Content-Length past the bytes is truncated, never a crash (m3, m7, m10)") {
+    val sp = spark; import sp.implicits._
+    // too long for an Int; Int.MaxValue, whose end offset wraps an Int;
+    // too long for a Long
+    for (len <- Seq("99999999999", "2147483647", "99999999999999999999999")) {
+      val rec = s"WARC/1.0\r\nWARC-Target-URI: u\r\nContent-Length: $len\r\n\r\npayload\r\n\r\n"
+        .getBytes("US-ASCII")
+      val plain = Seq((1L, rec)).toDF("segment_id", "warc")
+      assert(TrainingOps.warcRecords(sp, plain).collect()
+        .map(r => (r.getString(2), r.getInt(3), r.getString(5))).toSeq ==
+        Seq(("u", Int.MaxValue, "truncated")), len)
+      assert(TrainingOps.warcHttpRecords(sp, plain).collect()
+        .map(r => (r.getString(2), r.getInt(3), r.getString(7))).toSeq ==
+        Seq(("u", Int.MaxValue, "warc_truncated")), len)
+      val gz = Seq((1L, TrainingOps.gzipMember(rec))).toDF("segment_id", "gz")
+      assert(TrainingOps.ccReader(sp, gz).collect()
+        .map(r => (r.getString(2), r.getString(6))).toSeq == Seq(("u", "warc_truncated")), len)
+    }
+  }
+
   test("wav headers: chunk walk honors sizes + odd pad, order independence, error taxonomy") {
     val sp = spark; import sp.implicits._
     def run(rows: Seq[(Long, Array[Byte])]) =

@@ -286,41 +286,61 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("run ids round-trip through writeCommitted -> bucketLedgers (ScalaCheck)") {
     implicit val s: SparkSession = spark
+    val sq = spark; import sq.implicits._
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import com.fasterxml.jackson.databind.ObjectMapper
     val enc = org.apache.spark.sql.Encoders.product[ResultRow]
     val rows = results.take(6).toSeq
-    val ds = spark.createDataset(rows)(enc).cache()
-    // control characters, JSON metacharacters and non-ASCII, with a
-    // sprinkling of characters no file name may hold (those must be
-    // refused up front, never half-written)
+    // valid Unicode: control characters, JSON metacharacters, U+2028,
+    // non-BMP and any other code point, with a sprinkling of characters
+    // no file name may hold; run ids also get lone surrogates (a run id
+    // holding either must be refused up front, never half-written)
     val piece = Gen.frequency(
       20 -> Gen.choose('\u0000', '\u001f').map(_.toString),
       10 -> Gen.oneOf("\"", "\\", " ", ".", "\u007f"),
       10 -> Gen.alphaNumChar.map(_.toString),
-      1 -> Gen.oneOf("é", "中", "😀"), // refused where file names are ASCII
+      1 -> Gen.oneOf("é", "中", "\u2028", "😀"), // refused in run ids where file names are ASCII
       1 -> Gen.oneOf("/", ":"),
-      1 -> org.scalacheck.Arbitrary.arbChar.arbitrary.map(_.toString))
-    val runIds = Gen.choose(0, 16).flatMap(n => Gen.listOfN(n, piece)).map(_.mkString)
+      1 -> Gen.choose(0, Character.MAX_CODE_POINT)
+        .suchThat(cp => cp < Character.MIN_SURROGATE || cp > Character.MAX_SURROGATE)
+        .map(cp => new String(Character.toChars(cp))))
+    def strings(p: Gen[String]) = Gen.choose(0, 16).flatMap(n => Gen.listOfN(n, p)).map(_.mkString)
+    val text = strings(piece)
+    val runIds = strings(Gen.frequency(60 -> piece, 1 -> Gen.choose('\ud800', '\udfff').map(_.toString)))
     val m = new ObjectMapper()
+    def countsOf(rs: Seq[ResultRow]) =
+      rs.groupBy(_.bucket).view.mapValues(_.groupMapReduce(r => (r.engine, r.status))(_ => 1L)(_ + _)).toMap
     var accepted = 0
-    val prop = Prop.forAll(runIds) { runId =>
+    val prop = Prop.forAll(runIds, text, text, text) { (runId, engine, status, input) =>
+      // the codec's documents outside the table parse back exactly
+      val oracle = m.readTree(Verify.oracleJson(Seq(runId -> input)))
+      val summary = m.readTree(ExtractMain.runSummary(runId, 3, 7L, 0.5))
+      val docsOk = oracle.size == 1 && oracle.get(runId).textValue == input &&
+        summary.get("run_id").textValue == runId && summary.get("rows").asLong == 7L
       val root = tmpDir("runid")
-      val ok =
+      val written = rows.map(_.copy(engine = engine, status = status))
+      val tableOk =
         try {
-          LakehouseIO.writeCommitted(ds, root, runId, runId)
+          LakehouseIO.writeCommitted(spark.createDataset(written)(enc), root, runId, input)
           accepted += 1
           val md = m.readTree(Files.readString(Paths.get(root, "metadata", "v1.metadata.json")))
-          LakehouseIO.bucketLedgers(root).map(_.runId).toSet == Set(runId) &&
-            md.get("snapshots").size == 1
+          val receipt = m.readTree(Files.readString(Paths.get(root, "_snapshots", s"$runId.json")))
+          val appendOk = LakehouseIO.bucketLedgers(root).map(_.runId).toSet == Set(runId) &&
+            md.get("snapshots").size == 1 && receipt.get("input").textValue == input
+          // applyChanges re-ledgers the first row's bucket with engine
+          // and status swapped
+          val changed = written.head.copy(engine = status, status = engine)
+          LakehouseIO.applyChanges(root, spark.createDataset(Seq(changed))(enc),
+            Seq.empty[(String, Int)].toDF("url", "bucket"), runId + "+")
+          appendOk && LakehouseIO.bucketLedgers(root).map(l => l.bucket -> l.statusCounts).toMap ==
+            countsOf(changed +: written.tail)
         } catch {
           case _: IllegalArgumentException => !LakehouseIO.validRunId(runId)
         }
-      ok
+      docsOk && tableOk
     }
     val res = SCTest.check(SCTest.Parameters.default
       .withMinSuccessfulTests(60).withInitialSeed(org.scalacheck.rng.Seed(7L)), prop)
-    ds.unpersist()
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
     assert(accepted >= 15, s"only $accepted of the generated run ids were accepted")
   }
@@ -1102,6 +1122,63 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Paths.get(new org.apache.hadoop.fs.Path(mroot + "/metadata/v1.metadata.json").toUri.getPath)))
     assert(mmd.get("format-version").asInt == 2 &&
       mmd.get("location").asText.startsWith("mockfs://"))
+  }
+
+  // ------------------------------------------------- metadata bytes pinned
+
+  /** Values that depend on the clock or the Spark session, masked before
+    * the metadata files are compared.
+    */
+  private val volatileMeta =
+    """"(committed_at_ms|wall_ms|docs_per_sec|app_id|timestamp-ms|last-updated-ms)":("[^"]*"|[-0-9.E]+)""".r
+
+  /** Every ledger, receipt, manifest list, `vN.metadata.json` and
+    * `version-hint.text` under `root`, by relative path, masked.
+    */
+  private def metadataFiles(root: String): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    Seq("_ledger", "_snapshots", "metadata").flatMap { d =>
+      val s = Files.list(Paths.get(root, d))
+      try s.iterator.asScala.toSeq finally s.close()
+    }.filterNot(_.getFileName.toString.startsWith(".")).map { p =>
+      Paths.get(root).relativize(p).toString ->
+        volatileMeta.replaceAllIn(Files.readString(p), "\"$1\":_")
+    }.toMap
+  }
+
+  test("metadata bytes over a fixed history equal the recorded ones: two appends, applyChanges, compact, expire") {
+    implicit val s: SparkSession = spark
+    val sq = spark; import sq.implicits._
+    val enc = org.apache.spark.sql.Encoders.product[ResultRow]
+    // the root is part of the metadata (location, manifest paths, uuid)
+    val root = "/tmp/graft-metadata-pin"
+    val rootPath = new org.apache.hadoop.fs.Path(root)
+    LakehouseIO.fsOf(rootPath).delete(rootPath, true)
+    val rows = results.toSeq.sortBy(_.url)
+    LakehouseIO.writeCommitted(spark.createDataset(rows.filter(_.bucket % 2 == 0))(enc),
+      root, "pin-a", "in/a")
+    LakehouseIO.writeCommitted(spark.createDataset(rows)(enc).repartition(4), root, "pin-b", "in/b")
+    val Seq(flip, gone) = rows.filter(_.status == core.Status.Ok).take(2)
+    LakehouseIO.applyChanges(root,
+      spark.createDataset(Seq(flip.copy(status = core.Status.Error, error_code = "x")))(enc),
+      Seq((gone.url, gone.bucket)).toDF("url", "bucket"), "pin-chg")
+    assert(LakehouseIO.compact(root) > 0)
+    val recorded = {
+      val in = getClass.getResourceAsStream("/metadata-pin.tsv")
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .map { l => val Array(k, v) = l.split("\t", 2); k -> v }.toMap
+      finally in.close()
+    }
+    val before = metadataFiles(root)
+    assert(before.keySet == recorded.keySet)
+    before.foreach { case (k, v) => assert(v == recorded(k), k) }
+    // expire pin-a only: its receipt is backdated past the TTL
+    Files.setLastModifiedTime(Paths.get(root, "_snapshots", "pin-a.json"),
+      java.nio.file.attribute.FileTime.fromMillis(0L))
+    assert(LakehouseIO.expire(root, ttlMs = 3600L * 1000L) == 1)
+    assert(metadataFiles(root) == recorded - "_snapshots/pin-a.json" -
+      s"metadata/snap-${LakehouseIO.snapshotIdOf("pin-a")}-manifest-list.json")
+    LakehouseIO.fsOf(rootPath).delete(rootPath, true)
   }
 }
 

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -62,6 +63,21 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .sortBy(_._1)
     assert(streamed.length == batch.length)
     assert(streamed.sameElements(batch))
+  }
+
+  test("streaming: a file:// URI table root reads back every committed row") {
+    spark.sparkContext.setLogLevel("WARN")
+    val in = tmpDir("stream-uri-in")
+    val dir = tmpDir("stream-uri-table")
+    PagesGen.fromDocuments(spark, GoldenGen.CorpusDir).write.mode("append").parquet(in)
+    StreamingExtract.start(spark, in, "file://" + dir, SparkEntry.conf).awaitTermination()
+    val committed = {
+      val s = Files.list(java.nio.file.Paths.get(dir, "batches"))
+      try s.iterator.asScala.map(b => LakehouseIO.bucketLedgers(b.toString).map(_.rows).sum).sum
+      finally s.close()
+    }
+    assert(committed > 0)
+    assert(StreamingExtract.readAll(spark, "file://" + dir).count() == committed)
   }
 
   test("streaming: many small micro-batches (maxFilesPerTrigger=1) == batch output") {
