@@ -2370,8 +2370,9 @@ object SparkEntry {
       import s.implicits._
       val parsed = pagesOf(s, onlyKind(docs(s, dir), "html"))
         .map { p =>
-          val m = graft.core.Meta.metaOf(p.html)
-          val hrefs = graft.core.Links.outlinks(p.html).map(_.href)
+          val page = graft.core.Html.decode(p.html)
+          val m = graft.core.Meta.scan(page)
+          val hrefs = graft.core.Links.outlinksOf(page).map(_.href)
             .filter(_.startsWith("https://"))
           (p.url, m.title, hrefs)
         }

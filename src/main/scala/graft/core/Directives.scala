@@ -13,14 +13,14 @@ package graft.core
   * (`/root/reference/src/services/ocr/registry_v2.py:427-471`); a crawl
   * corpus reads the same kind of directive from the page itself.
   *
-  * Structural rules mirror [[Links.outlinksOf]] exactly: comments,
-  * CDATA, doctype and PIs are consumed silently (a commented-out
-  * directive is NOT a directive — pinned); script/style/textarea/
-  * noscript bodies never leak (a directive string inside JavaScript is
-  * data, not markup); `<` that opens no tag is literal text. Attribute
-  * parsing is the Links quote-aware state machine, generalized to
-  * capture a small set of named attributes per tag. `rel` is an
-  * HTML5 space-separated TOKEN LIST (`rel="alternate canonical"`
+  * A sink on [[Html.parse]] that asks for the attributes of `link`,
+  * `meta`, `time` and `script` only, so it sees exactly the markup the
+  * text kernel sees: comments, CDATA, doctype and PIs are consumed
+  * silently (a commented-out directive is NOT a directive — pinned);
+  * script/style/textarea/noscript bodies never leak (a directive string
+  * inside JavaScript is data, not markup); `<` that opens no tag is
+  * literal text. The first valued occurrence of each attribute wins.
+  * `rel` is an HTML5 space-separated TOKEN LIST (`rel="alternate canonical"`
   * matches), matched ASCII-case-insensitively; robots content parses as
   * comma-separated tokens with the `none` alias expanding to
   * noindex + nofollow. First occurrence wins for both directives
@@ -139,7 +139,6 @@ object Directives {
 
   def scan(s: String,
       deadline: Html.Deadline = Html.Deadline.unlimited): PageDirectives = {
-    val n = s.length
     var canonical: String = null
     var robots: String = null
     var published: String = null
@@ -148,159 +147,54 @@ object Directives {
     val og = scala.collection.mutable.HashMap.empty[String, String]
     val alternates = Vector.newBuilder[(String, String)]
     val jsonld = Vector.newBuilder[String]
-    var i = 0
-
-    def isNameStart(c: Char) = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-    def isNameChar(c: Char) =
-      isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == ':' || c == '_'
-
-    // Parse one start tag's attributes from j0 (just past the tag name),
-    // capturing first-occurrence values for `wanted` names. Returns the
-    // position after '>' and fills `captured`.
-    val captured = scala.collection.mutable.HashMap.empty[String, String]
-    var lastSelfClosing = false
-    def parseAttrs(j0: Int, wanted: Set[String]): Int = {
-      captured.clear()
-      lastSelfClosing = false
-      var j = j0
-      var done = false
-      while (!done) {
-        while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
-        if (j >= n) { done = true }
-        else {
-          val ch = s.charAt(j)
-          if (ch == '>') { j += 1; done = true }
-          else if (ch == '/' && j + 1 < n && s.charAt(j + 1) == '>') {
-            lastSelfClosing = true; j += 2; done = true
-          } else if (isNameStart(ch)) {
-            val aStart = j
-            while (j < n && isNameChar(s.charAt(j))) j += 1
-            val aName = s.substring(aStart, j).toLowerCase(java.util.Locale.ROOT)
-            var k = j
-            while (k < n && Character.isWhitespace(s.charAt(k))) k += 1
-            if (k < n && s.charAt(k) == '=') {
-              k += 1
-              while (k < n && Character.isWhitespace(s.charAt(k))) k += 1
-              var vStart = k
-              var vEnd = k
-              if (k < n && (s.charAt(k) == '"' || s.charAt(k) == '\'')) {
-                val q = s.charAt(k)
-                vStart = k + 1
-                val close = s.indexOf(q, k + 1)
-                vEnd = if (close < 0) n else close
-                k = if (close < 0) n else close + 1
-              } else {
-                while (k < n && !Character.isWhitespace(s.charAt(k)) && s.charAt(k) != '>') k += 1
-                vEnd = k
-              }
-              if (wanted.contains(aName) && !captured.contains(aName))
-                captured(aName) = Html.decodeEntities(s.substring(vStart, vEnd))
-              j = k
-            }
-          } else j += 1
-        }
-      }
-      j
-    }
+    // the scanned tag's attributes, first valued occurrence of each
+    val attrs = scala.collection.mutable.HashMap.empty[String, String]
+    var ldJson = false // the scanned tag opens a JSON-LD script body
 
     def relHas(rel: String, token: String): Boolean =
       rel.split("[ \t\n\r\f]+").exists(_.equalsIgnoreCase(token))
 
-    while (i < n) {
-      if (deadline.expired()) throw new Html.TimeoutException
-      if (s.charAt(i) == '<') {
-        var j = i + 1
-        if (j >= n) { i = n }
-        else {
-          val c = s.charAt(j)
-          if (c == '!') {
-            if (s.startsWith("<!--", i)) {
-              val end = s.indexOf("-->", i + 4)
-              i = if (end < 0) n else end + 3
-            } else if (s.regionMatches(true, i, "<![CDATA[", 0, 9)) {
-              val end = s.indexOf("]]>", i + 9)
-              i = if (end < 0) n else end + 3
-            } else {
-              val end = s.indexOf('>', i + 1)
-              i = if (end < 0) n else end + 1
-            }
-          } else if (c == '?') {
-            val end = s.indexOf('>', i + 1)
-            i = if (end < 0) n else end + 1
-          } else {
-            val closing = c == '/'
-            if (closing) j += 1
-            if (j >= n || !isNameStart(s.charAt(j))) {
-              i = i + 1 // literal '<'
-            } else {
-              val nameStart = j
-              while (j < n && isNameChar(s.charAt(j))) j += 1
-              val name = s.substring(nameStart, j).toLowerCase(java.util.Locale.ROOT)
-              if (closing) {
-                val end = s.indexOf('>', j)
-                i = if (end < 0) n else end + 1
-              } else {
-                val wanted = name match {
-                  case "link" => Set("rel", "href", "hreflang")
-                  case "meta" => Set("name", "property", "content", "http-equiv")
-                  case "time" => Set("datetime")
-                  case "script" => Set("type")
-                  case _ => Set.empty[String]
-                }
-                val after = parseAttrs(j, wanted)
-                i = after
-                if (name == "link") {
-                  val rel = captured.getOrElse("rel", "")
-                  val href = captured.getOrElse("href", "")
-                  if (canonical == null && relHas(rel, "canonical") && href.nonEmpty)
-                    canonical = href
-                  val hl = captured.getOrElse("hreflang", "")
-                  if (relHas(rel, "alternate") && hl.nonEmpty && href.nonEmpty)
-                    alternates += ((hl.toLowerCase(java.util.Locale.ROOT), href))
-                } else if (name == "meta") {
-                  if (robots == null &&
-                    captured.get("name").exists(_.equalsIgnoreCase("robots")))
-                    robots = captured.getOrElse("content", "")
-                  if (published == null &&
-                    captured.get("property").exists(_.equalsIgnoreCase("article:published_time")))
-                    published = captured.getOrElse("content", "")
-                  if (refresh == null &&
-                    captured.get("http-equiv").exists(_.equalsIgnoreCase("refresh")))
-                    refresh = captured.getOrElse("content", "")
-                  captured.get("property").foreach { pr =>
-                    val k = pr.toLowerCase(java.util.Locale.ROOT)
-                    if ((k == "og:title" || k == "og:description" ||
-                      k == "og:type" || k == "og:image") && !og.contains(k))
-                      og(k) = captured.getOrElse("content", "")
-                  }
-                } else if (name == "time") {
-                  if (timeDt == null && captured.get("datetime").exists(_.nonEmpty))
-                    timeDt = captured("datetime")
-                } else if (!lastSelfClosing &&
-                  (name == "script" || name == "style" || name == "textarea" || name == "noscript")) {
-                  val close = "</" + name
-                  val k = Html.indexOfIgnoreCase(s, close, i)
-                  val bodyEnd = if (k < 0) n else k
-                  if (name == "script" &&
-                    captured.get("type").exists(t =>
-                      t.split(";")(0).trim
-                        .equalsIgnoreCase("application/ld+json")))
-                    jsonld += s.substring(i, bodyEnd).trim
-                  if (k < 0) i = n
-                  else {
-                    val gt = s.indexOf('>', k + close.length)
-                    i = if (gt < 0) n else gt + 1
-                  }
-                }
-              }
-            }
+    Html.parse(s, new Html.Sink {
+      override def wantsAttributes(name: String): Boolean =
+        name == "link" || name == "meta" || name == "time" || name == "script"
+      override def attribute(name: String, s: String, from: Int, to: Int): Unit =
+        if (from >= 0 && !attrs.contains(name)) attrs(name) = Html.attributeValue(s, from, to)
+      def startTag(name: String, selfClosing: Boolean): Unit = {
+        if (name == "link") {
+          val rel = attrs.getOrElse("rel", "")
+          val href = attrs.getOrElse("href", "")
+          if (canonical == null && relHas(rel, "canonical") && href.nonEmpty)
+            canonical = href
+          val hl = attrs.getOrElse("hreflang", "")
+          if (relHas(rel, "alternate") && hl.nonEmpty && href.nonEmpty)
+            alternates += ((hl.toLowerCase(java.util.Locale.ROOT), href))
+        } else if (name == "meta") {
+          if (robots == null && attrs.get("name").exists(_.equalsIgnoreCase("robots")))
+            robots = attrs.getOrElse("content", "")
+          if (published == null &&
+            attrs.get("property").exists(_.equalsIgnoreCase("article:published_time")))
+            published = attrs.getOrElse("content", "")
+          if (refresh == null && attrs.get("http-equiv").exists(_.equalsIgnoreCase("refresh")))
+            refresh = attrs.getOrElse("content", "")
+          attrs.get("property").foreach { pr =>
+            val k = pr.toLowerCase(java.util.Locale.ROOT)
+            if ((k == "og:title" || k == "og:description" ||
+              k == "og:type" || k == "og:image") && !og.contains(k))
+              og(k) = attrs.getOrElse("content", "")
           }
+        } else if (name == "time") {
+          if (timeDt == null && attrs.get("datetime").exists(_.nonEmpty))
+            timeDt = attrs("datetime")
         }
-      } else {
-        val lt = s.indexOf('<', i)
-        i = if (lt < 0) n else lt
+        ldJson = name == "script" && attrs.get("type").exists(t =>
+          t.split(";")(0).trim.equalsIgnoreCase("application/ld+json"))
+        attrs.clear()
       }
-    }
+      def endTag(name: String): Unit = ()
+      def text(s: String, from: Int, to: Int): Unit = ()
+      override def rawText(s: String, from: Int, to: Int): Unit =
+        if (ldJson) jsonld += s.substring(from, to).trim
+    }, deadline)
 
     val toks: Set[String] =
       if (robots == null) Set.empty

@@ -15,7 +15,7 @@ package graft.core
   *     never `rel="self"`/`rel="edit"` (RFC 4287 §4.2.7.2 defaults
   *     `rel` to "alternate" when absent); the timestamp is `<updated>`.
   *
-  * Shared rules, mirroring [[Sitemaps]]: an entry without a link is
+  * Rules shared with [[Sitemaps]] (one walk, [[XmlEntries]]): an entry without a link is
   * skipped, not an error (the crawl use-case needs the URL); missing
   * title/timestamp stay null; element text may be CDATA-wrapped (taken
   * raw) or entity-escaped (decoded), as are attribute values; XML decl,
@@ -33,78 +33,21 @@ object Feeds {
   final case class Feed(kind: String, entries: Vector[Entry])
 
   def parse(s: String): Feed = {
-    val n = s.length
-    // root element name, skipping prolog noise (the Sitemaps rule)
-    var i = 0
-    var root: String = null
-    while (root == null && i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) i = n
-      else if (s.startsWith("<?", lt)) {
-        val e = s.indexOf("?>", lt); i = if (e < 0) n else e + 2
-      } else if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt); i = if (e < 0) n else e + 3
-      } else if (s.startsWith("<!", lt)) {
-        val e = s.indexOf('>', lt); i = if (e < 0) n else e + 1
-      } else {
-        var j = lt + 1
-        while (j < n && (Character.isLetter(s.charAt(j)) || s.charAt(j) == ':')) j += 1
-        if (j == lt + 1) i = lt + 1
-        else root = s.substring(lt + 1, j).toLowerCase(java.util.Locale.ROOT)
-      }
-    }
-    val kind = root match {
+    val kind = XmlEntries.rootName(s) match {
       case "rss" => "rss"
       case "feed" => "atom"
       case _ => "invalid"
     }
     if (kind == "invalid") Feed("invalid", Vector.empty)
     else {
-      val tag = if (kind == "rss") "item" else "entry"
       val stampTag = if (kind == "rss") "pubdate" else "updated"
-      val out = Vector.newBuilder[Entry]
-      var idx = 0
-      var p = 0
-      var go = true
-      while (go) {
-        val b0 = Html.indexOfIgnoreCase(s, "<" + tag + ">", p)
-        if (b0 < 0) go = false
-        else {
-          val b1 = Html.indexOfIgnoreCase(s, "</" + tag + ">", b0)
-          val end = if (b1 < 0) n else b1
-          val block = s.substring(b0, end)
-          val link =
-            if (kind == "rss") inner(block, "link")
-            else atomLink(block)
-          if (link != null && link.nonEmpty) {
-            out += Entry(idx, inner(block, "title"), link, inner(block, stampTag))
-            idx += 1
-          }
-          p = if (b1 < 0) n else b1 + tag.length + 3
+      val entries = XmlEntries.blocks(s, if (kind == "rss") "item" else "entry")
+        .map(block => (block, if (kind == "rss") XmlEntries.inner(block, "link") else atomLink(block)))
+        .filter { case (_, link) => link != null && link.nonEmpty }
+        .zipWithIndex.map { case ((block, link), idx) =>
+          Entry(idx, XmlEntries.inner(block, "title"), link, XmlEntries.inner(block, stampTag))
         }
-      }
-      Feed(kind, out.result())
-    }
-  }
-
-  /** Element text of the first bare `<t>...</t>` inside `block`, CDATA
-    * taken raw, entities decoded otherwise — the [[Sitemaps]] rule.
-    */
-  private def inner(block: String, t: String): String = {
-    val o = Html.indexOfIgnoreCase(block, "<" + t + ">", 0)
-    if (o < 0) null
-    else {
-      val st = o + t.length + 2
-      val c = Html.indexOfIgnoreCase(block, "</" + t + ">", st)
-      if (c < 0) null
-      else {
-        val raw = block.substring(st, c).trim
-        val v =
-          if (raw.startsWith("<![CDATA[") && raw.endsWith("]]>"))
-            raw.substring(9, raw.length - 3)
-          else Html.decodeEntities(raw)
-        v.trim
-      }
+      Feed(kind, entries)
     }
   }
 

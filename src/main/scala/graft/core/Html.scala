@@ -181,10 +181,10 @@ object Html {
     "agrave" -> "à", "ccedil" -> "ç", "ntilde" -> "ñ",
   )
 
-  /** Case-insensitive indexOf — raw-text close tags match ASCII
-    * case-insensitively in browsers (`</SCRIPT>` closes `<script>`);
-    * shared by all scanners (tokenizer, Links, Meta) so the rule can
-    * never diverge between them.
+  /** Case-insensitive indexOf — raw-text and RCDATA close tags match
+    * ASCII case-insensitively in browsers (`</SCRIPT>` closes `<script>`).
+    * The tokenizer's one close-tag search; the sitemap and feed walker
+    * ([[XmlEntries]]) finds its elements with it too.
     */
   private[core] def indexOfIgnoreCase(s: String, needle: String, from: Int): Int = {
     // no char case-folds to an ASCII non-letter (the '<' every needle
@@ -266,6 +266,7 @@ object Html {
     final val Content = 8  // explicit content container
     final val Anchor = 16  // <a>: words inside it are link words
     final val RawText = 32 // content skipped unparsed up to the matching close tag
+    final val RcData = 64  // content is one text run up to the matching close tag
   }
 
   private val roleNames: Seq[(Int, String)] = Seq(
@@ -277,6 +278,7 @@ object Html {
     Role.Content -> "article main",
     Role.Anchor -> "a",
     Role.RawText -> "script style textarea noscript",
+    Role.RcData -> "title",
     // roleless names: known only so that resolving them allocates nothing
     0 -> ("html span b i u s em strong small code sup sub abbr cite q time mark kbd samp var " +
       "dfn del ins iframe svg path canvas video audio picture object param caption colgroup " +
@@ -362,26 +364,62 @@ object Html {
       */
     def startTag(name: String, roles: Int, selfClosing: Boolean): Unit = startTag(name, selfClosing)
     def endTag(name: String, roles: Int): Unit = endTag(name)
+
+    /** Whether [[parse]] hands the attributes of a start tag named `name`
+      * to [[attribute]]. By default no tag's are, and none is materialized.
+      */
+    def wantsAttributes(name: String): Boolean = false
+
+    /** One attribute of a start tag [[wantsAttributes]] asked for, in
+      * source order, before the tag's `startTag`: the name lowercased and
+      * the value as the range s[from,to), entities not yet decoded (see
+      * [[attributeValue]]); `from` is -1 for an attribute without a value.
+      */
+    def attribute(name: String, s: String, from: Int, to: Int): Unit = ()
+
+    /** The unparsed body s[from,to) of a raw-text element (script, style,
+      * textarea, noscript), between its `startTag` and `endTag`.
+      */
+    def rawText(s: String, from: Int, to: Int): Unit = ()
   }
 
+  /** An [[Sink.attribute]] value entity-decoded; "" for one without a value. */
+  def attributeValue(s: String, from: Int, to: Int): String =
+    if (from < 0) "" else decodeEntities(s.substring(from, to))
+
   /** Tokenize decoded HTML into `sink` events: start tags, end tags and
-    * text runs; script, style, textarea and noscript content, comments,
-    * CDATA, doctypes and processing instructions never reach the sink as
-    * text, and a '<' that opens no tag is literal text. Attributes are
-    * scanned quote-aware for the tag's end but never materialized.
+    * text runs. This is the one HTML tag scanner; every HTML view of a
+    * page (text kernel, outlinks, images, title/h1, directives, tables,
+    * outline) is a sink on it, so all of them agree on what is markup:
     *
-    * Nothing is allocated per token: text is passed as index ranges, and a
-    * tag name is resolved against one static table of known lowercase
-    * names and handed over as the interned table string with its [[Role]]
-    * bits. While the name is scanned its chars are case folded (tag names
-    * are `[A-Za-z0-9:_-]`, so the ASCII fold is exactly
-    * `toLowerCase(Locale.ROOT)`) and packed six bits each into a Long key
-    * that is the name itself, so resolving it takes Long compares in one
-    * table probe sequence and no char compare. Only a name outside the table costs a `substring` +
+    *   - comments, CDATA, doctypes and processing instructions are
+    *     consumed silently, and a '<' that opens no tag is literal text;
+    *   - attribute values are quoted or unquoted, and an unquoted value
+    *     ends at whitespace or '>' (a '/' inside it, as in `href=/a/b`,
+    *     is part of the value); `/>` self-closes only where an attribute
+    *     could start;
+    *   - script, style, textarea and noscript are raw text: their body
+    *     is never markup and never text, and goes to [[Sink.rawText]];
+    *   - title is RCDATA: its body reaches `text` as one run;
+    *   - a raw-text or RCDATA body ends at the first case-insensitive
+    *     `</name`, and at EOF when there is none; a self-closing one has
+    *     no body.
+    *
+    * Attributes are materialized only for the start tags a sink asks for
+    * ([[Sink.wantsAttributes]]). Otherwise nothing is allocated per
+    * token: text is passed as index ranges, and a tag name is resolved
+    * against one static table of known lowercase names and handed over
+    * as the interned table string with its [[Role]] bits. While the name
+    * is scanned its chars are case folded (tag names are `[A-Za-z0-9:_-]`,
+    * so the ASCII fold is exactly `toLowerCase(Locale.ROOT)`) and packed
+    * six bits each into a Long key that is the name itself, so resolving
+    * it takes Long compares in one table probe sequence and no char
+    * compare. Only a name outside the table costs a `substring` +
     * `toLowerCase`.
     *
-    * One [[Deadline.expired]] step per scan-loop iteration (one tag or one
-    * text run); throws [[TimeoutException]] when the deadline expires.
+    * One [[Deadline.expired]] step per tag or text run (a raw-text element
+    * with its body is one; a title is its tag, its body run and its close
+    * tag); throws [[TimeoutException]] when the deadline expires.
     */
   def parse(html: String, sink: Sink, deadline: Deadline = Deadline.unlimited): Unit = {
     val s = html
@@ -391,6 +429,8 @@ object Html {
     var tagRoles = 0
     var tagClosing = false
     var tagSelfClosing = false
+
+    def step(): Unit = if (deadline.expired()) throw new TimeoutException
 
     // Scan one tag starting at '<'; set tagName/tagRoles/tagClosing/
     // tagSelfClosing; return the position after the tag.
@@ -441,6 +481,7 @@ object Html {
         tagClosing = true
         return if (end < 0) n else end + 1
       }
+      val want = sink.wantsAttributes(tagName)
       var selfClosing = false
       var done = false
       while (!done) {
@@ -451,7 +492,11 @@ object Html {
           if (ch == '>') { j += 1; done = true }
           else if (ch == '/' && j + 1 < n && s.charAt(j + 1) == '>') { selfClosing = true; j += 2; done = true }
           else if (isNameStart(ch)) {
+            val attrStart = j
             while (j < n && isNameChar(s.charAt(j))) j += 1
+            val attrEnd = j
+            var from = -1
+            var to = -1
             var k = j
             while (k < n && Character.isWhitespace(s.charAt(k))) k += 1
             if (k < n && s.charAt(k) == '=') {
@@ -460,12 +505,17 @@ object Html {
               if (k < n && (s.charAt(k) == '"' || s.charAt(k) == '\'')) {
                 val q = s.charAt(k)
                 val vend = s.indexOf(q, k + 1)
+                from = k + 1
+                to = if (vend < 0) n else vend
                 k = if (vend < 0) n else vend + 1
               } else {
-                while (k < n && !Character.isWhitespace(s.charAt(k)) && s.charAt(k) != '>' && s.charAt(k) != '/') k += 1
+                from = k
+                while (k < n && !Character.isWhitespace(s.charAt(k)) && s.charAt(k) != '>') k += 1
+                to = k
               }
               j = k
             }
+            if (want) sink.attribute(s.substring(attrStart, attrEnd).toLowerCase(Locale.ROOT), s, from, to)
           } else j += 1 // junk char inside tag; skip
         }
       }
@@ -474,32 +524,37 @@ object Html {
     }
 
     while (i < n) {
-      if (deadline.expired()) throw new TimeoutException
+      step()
       if (s.charAt(i) == '<') {
-        val next = parseTag(i)
+        val lt = i
+        i = parseTag(lt)
         if (tagName == null) {
-          if (next == i + 1) sink.text(s, i, i + 1) // literal '<'
+          if (i == lt + 1) sink.text(s, lt, i) // literal '<'
           // else: comment/doctype/PI — consumed silently
-          i = next
-        } else {
-          i = next
-          if (tagClosing) sink.endTag(tagName, tagRoles)
-          else if (!tagSelfClosing && (tagRoles & Role.RawText) != 0) {
-            // raw-text element: emit start, skip content up to the close
-            // tag (matched case-insensitively, as browsers do), emit end;
-            // a missing close tag consumes the rest of the document
-            val name = tagName
-            val roles = tagRoles
-            sink.startTag(name, roles, selfClosing = false)
-            val close = "</" + name
-            val k = Html.indexOfIgnoreCase(s, close, i)
-            if (k < 0) i = n
-            else {
-              val gt = s.indexOf('>', k + close.length)
-              i = if (gt < 0) n else gt + 1
-            }
-            sink.endTag(name, roles)
-          } else sink.startTag(tagName, tagRoles, tagSelfClosing)
+        } else if (tagClosing) sink.endTag(tagName, tagRoles)
+        else if (tagSelfClosing || (tagRoles & (Role.RawText | Role.RcData)) == 0)
+          sink.startTag(tagName, tagRoles, tagSelfClosing)
+        else {
+          // raw-text or RCDATA element: emit start, hand over the body up
+          // to the close tag (matched case-insensitively, as browsers do),
+          // emit end; a missing close tag ends the body at EOF
+          val name = tagName
+          val roles = tagRoles
+          sink.startTag(name, roles, selfClosing = false)
+          val close = "</" + name
+          val k = Html.indexOfIgnoreCase(s, close, i)
+          val end = if (k < 0) n else k
+          if ((roles & Role.RawText) != 0) sink.rawText(s, i, end)
+          else {
+            if (end > i) { step(); sink.text(s, i, end) }
+            if (k >= 0) step()
+          }
+          if (k < 0) i = n
+          else {
+            val gt = s.indexOf('>', k + close.length)
+            i = if (gt < 0) n else gt + 1
+          }
+          sink.endTag(name, roles)
         }
       } else {
         val lt = s.indexOf('<', i)

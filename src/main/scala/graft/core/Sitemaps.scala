@@ -15,7 +15,8 @@ package graft.core
   * Anything whose root element is neither kind is `invalid` — error as
   * data, the e3 taxonomy. XML decl, comments and doctype before the
   * root are consumed silently; tag matching is case-insensitive
-  * (the spec says lowercase; real sitemaps disagree).
+  * (the spec says lowercase; real sitemaps disagree). The walk is
+  * [[XmlEntries]], shared with [[Feeds]].
   */
 object Sitemaps {
 
@@ -23,71 +24,18 @@ object Sitemaps {
   final case class Sitemap(kind: String, entries: Vector[Entry])
 
   def parse(s: String): Sitemap = {
-    val n = s.length
-    // root element name, skipping prolog noise
-    var i = 0
-    var root: String = null
-    while (root == null && i < n) {
-      val lt = s.indexOf('<', i)
-      if (lt < 0) i = n
-      else if (s.startsWith("<?", lt)) {
-        val e = s.indexOf("?>", lt); i = if (e < 0) n else e + 2
-      } else if (s.startsWith("<!--", lt)) {
-        val e = s.indexOf("-->", lt); i = if (e < 0) n else e + 3
-      } else if (s.startsWith("<!", lt)) {
-        val e = s.indexOf('>', lt); i = if (e < 0) n else e + 1
-      } else {
-        var j = lt + 1
-        while (j < n && (Character.isLetter(s.charAt(j)) || s.charAt(j) == ':')) j += 1
-        if (j == lt + 1) i = lt + 1
-        else root = s.substring(lt + 1, j).toLowerCase(java.util.Locale.ROOT)
-      }
-    }
-    val kind = root match {
+    val kind = XmlEntries.rootName(s) match {
       case "urlset" => "urlset"
       case "sitemapindex" => "sitemapindex"
       case _ => "invalid"
     }
     if (kind == "invalid") Sitemap("invalid", Vector.empty)
     else {
-      val tag = if (kind == "urlset") "url" else "sitemap"
-      def inner(block: String, t: String): String = {
-        val o = Html.indexOfIgnoreCase(block, "<" + t + ">", 0)
-        if (o < 0) null
-        else {
-          val st = o + t.length + 2
-          val c = Html.indexOfIgnoreCase(block, "</" + t + ">", st)
-          if (c < 0) null
-          else {
-            val raw = block.substring(st, c).trim
-            val v =
-              if (raw.startsWith("<![CDATA[") && raw.endsWith("]]>"))
-                raw.substring(9, raw.length - 3) // CDATA: taken raw
-              else Html.decodeEntities(raw)
-            v.trim
-          }
-        }
-      }
-      val out = Vector.newBuilder[Entry]
-      var idx = 0
-      var p = 0
-      var go = true
-      while (go) {
-        val b0 = Html.indexOfIgnoreCase(s, "<" + tag + ">", p)
-        if (b0 < 0) go = false
-        else {
-          val b1 = Html.indexOfIgnoreCase(s, "</" + tag + ">", b0)
-          val end = if (b1 < 0) n else b1
-          val block = s.substring(b0, end)
-          val loc = inner(block, "loc")
-          if (loc != null && loc.nonEmpty) {
-            out += Entry(idx, loc, inner(block, "lastmod"))
-            idx += 1
-          }
-          p = if (b1 < 0) n else b1 + tag.length + 3
-        }
-      }
-      Sitemap(kind, out.result())
+      val entries = XmlEntries.blocks(s, if (kind == "urlset") "url" else "sitemap")
+        .map(block => (block, XmlEntries.inner(block, "loc")))
+        .filter { case (_, loc) => loc != null && loc.nonEmpty }
+        .zipWithIndex.map { case ((block, loc), idx) => Entry(idx, loc, XmlEntries.inner(block, "lastmod")) }
+      Sitemap(kind, entries)
     }
   }
 }

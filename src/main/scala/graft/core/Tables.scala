@@ -28,9 +28,8 @@ import scala.collection.mutable.ArrayBuffer
   * Cell text is entity-decoded ([[Html.appendDecoded]]) and whitespace-
   * normalized here (trim + collapse runs) so the cell value is the
   * rendered string, not the markup bytes. `colIdx` is the CELL ORDINAL
-  * within its row — colspan grid resolution would need attribute
-  * capture, which the shared tokenizer deliberately skips
-  * (see [[Html.parse]]); documented drop.
+  * within its row: colspan is not resolved, so this sink asks for no
+  * attributes ([[Html.Sink.wantsAttributes]]); documented drop.
   *
   * Reference analog: hOCR/layout structure recovery
   * (/root/reference/src/services/ocr/dynamic_routes.py:188-251 returns

@@ -63,8 +63,16 @@ class FuzzSpec extends AnyFunSuite {
   private val spaceFragment = Gen.oneOf("\u00a0", "\u3000", "\u2028", "&nbsp;",
     " \u00a0 ", "x\u3000y", "\u2028z\u2028", "a&nbsp;&nbsp;b", "&nbsp;\u00a0", "\u00a0w\u00a0")
 
+  /** Where the one rule set decides the tag boundaries: an unquoted value
+    * that ends in '/' before '>', a '/' followed by '=' and a quote inside
+    * an unquoted value, markup inside a title, and a title never closed.
+    */
+  private val ruleFragment = Gen.oneOf("<script src=a.js/>", "<div class=x/>",
+    "<a href=/x=\"a>b\">", "<title>a <b>c</title>", "<title>")
+
   private val builderFragment: Gen[String] = Gen.oneOf(
     fragment,
+    ruleFragment,
     mixedCaseTags.map(t => s"<$t>"),
     mixedCaseTags.map(t => s"</$t>"),
     mixedCaseTags.map(t => s"<$t/>"),
@@ -312,6 +320,7 @@ class FuzzSpec extends AnyFunSuite {
 
   private val attrFragment: Gen[String] = Gen.oneOf(
     fragment,
+    ruleFragment,
     Gen.oneOf("<a href='x'>", "<a href=\"/y z\">lnk</a>", "<a href=un>", "<a>",
       "</a>", "<A HREF='UP'>", "<a href='' rel=nofollow>", "<a href='#f'"),
     Gen.oneOf("<img src='i.png'>", "<img src=j alt='k'>", "<img alt=only>",

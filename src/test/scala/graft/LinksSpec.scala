@@ -92,6 +92,23 @@ class LinksSpec extends AnyFunSuite {
     assert(!r.text.contains("no") && !r.text.contains("var t"))
   }
 
+  test("one tokenizer: outlinks, images, meta, directives and the text kernel split a malformed page alike") {
+    import graft.core.{BlockBuilder, Directives, Html, Meta}
+    // each piece splits differently under a looser rule: a quote inside an
+    // unquoted value (`x=a"b`, `alt=a"b`), a '/' ending an unquoted value
+    // (`src=a.js/` would self-close the script and expose its anchor),
+    // markup inside a title read as tags
+    val html = """<h1 x=a"b>T</h1><script src=a.js/><a href="/hidden">no</a></script>""" +
+      """<a href=/x/>L</a><img src=/i.png alt=a"b><link rel=canonical href=/c/>""" +
+      """<title>a <b>c</b></title><p>body</p>"""
+    assert(Meta.scan(html) == Meta.DocMeta("a <b>c</b>", "T"))
+    assert(links(html) == Vector("/x/" -> "L"))
+    assert(Links.imagesOf(html) == Vector(Links.Img("/i.png", "a\"b", hasAlt = true)))
+    assert(Directives.scan(html).canonical == "/c/")
+    assert(BlockBuilder.buildStreaming(html, Html.Deadline.unlimited).map(_.text) ==
+      Vector("T", "L a <b>c</b>", "body"))
+  }
+
   test("meta: title RCDATA, h1 text runs, first-wins, implicit close") {
     import graft.core.Meta
     def m(s: String) = { val r = Meta.scan(s); (r.title, r.h1) }

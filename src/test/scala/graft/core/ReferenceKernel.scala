@@ -43,25 +43,29 @@ object ReferenceKernel {
   /** Explicit content containers. */
   val contentTags: Set[String] = Set("article", "main")
 
+  /** Elements whose content is skipped unparsed. */
+  val rawTextTags: Set[String] = Set("script", "style", "textarea", "noscript")
+
   private def isNameStart(c: Char) = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
   private def isNameChar(c: Char) =
     isNameStart(c) || (c >= '0' && c <= '9') || c == '-' || c == ':' || c == '_'
 
   /** Tokenize decoded HTML. Emits StartTag/EndTag/Text; script, style,
-    * comment, CDATA and doctype content never reach Text. Throws
-    * TimeoutException when the deadline expires.
+    * textarea, noscript, comment, CDATA and doctype content never reach
+    * Text; a title's content is one Text (RCDATA); an unquoted attribute
+    * value ends at whitespace or '>'. Throws TimeoutException when the
+    * deadline expires.
     */
   def tokenize(html: String, deadline: Html.Deadline = Html.Deadline.unlimited): Iterator[Tok] =
     new Iterator[Tok] {
       private val s = html
       private val n = s.length
       private var i = 0
-      private var pending: Tok = null
-      private var pendingEnd: Tok = null
+      private val pending = scala.collection.mutable.Queue.empty[Tok]
       advance()
 
-      def hasNext: Boolean = pending != null
-      def next(): Tok = { val t = pending; advance(); t }
+      def hasNext: Boolean = pending.nonEmpty
+      def next(): Tok = { val t = pending.dequeue(); if (pending.isEmpty) advance(); t }
 
       private def skipSpaceIn(j0: Int): Int = {
         var j = j0
@@ -129,7 +133,7 @@ object ReferenceKernel {
                   val vend = s.indexOf(q, k + 1)
                   k = if (vend < 0) n else vend + 1
                 } else {
-                  while (k < n && !Character.isWhitespace(s.charAt(k)) && s.charAt(k) != '>' && s.charAt(k) != '/') k += 1
+                  while (k < n && !Character.isWhitespace(s.charAt(k)) && s.charAt(k) != '>') k += 1
                 }
                 j = k
               }
@@ -141,9 +145,7 @@ object ReferenceKernel {
       }
 
       private def advance(): Unit = {
-        pending = null
-        if (pendingEnd != null) { pending = pendingEnd; pendingEnd = null; return }
-        while (pending == null && i < n) {
+        while (pending.isEmpty && i < n) {
           if (deadline.expired()) throw new Html.TimeoutException
           val c = s.charAt(i)
           if (c == '<') {
@@ -152,26 +154,30 @@ object ReferenceKernel {
             if (tok == null && next == i + 1) {
               // a '<' that opens no tag is literal text
               i = next
-              pending = Text("<")
+              pending += Text("<")
             } else {
               i = next
               tok match {
-                case st @ StartTag(nm, false) if nm == "script" || nm == "style" || nm == "textarea" || nm == "noscript" =>
-                  // raw-text element: skip to matching close tag
-                  // (case-insensitive — browsers close on </SCRIPT> too)
+                case st @ StartTag(nm, false) if rawTextTags(nm) || nm == "title" =>
+                  // raw-text or RCDATA element: its content runs to the
+                  // matching close tag (case-insensitive — browsers close
+                  // on </SCRIPT> too); a missing close runs to EOF
                   val close = "</" + nm
                   val k = Html.indexOfIgnoreCase(s, close, i)
-                  // tolerate missing close: consume to EOF
+                  val end = if (k < 0) n else k
+                  pending += st
+                  if (nm == "title") {
+                    val txt = Html.decodeEntities(s.substring(i, end))
+                    if (txt.nonEmpty) pending += Text(txt)
+                  }
+                  pending += EndTag(nm)
                   if (k < 0) { i = n }
                   else {
                     val gt = s.indexOf('>', k + close.length)
                     i = if (gt < 0) n else gt + 1
                   }
-                  // emit the start tag now; the raw content is skipped
-                  // and the close tag is re-emitted on the next pull
-                  pending = st
-                  pendingEnd = EndTag(nm)
-                case t => pending = t
+                case null => ()
+                case t => pending += t
               }
             }
           } else {
@@ -180,7 +186,7 @@ object ReferenceKernel {
             val raw = s.substring(i, end)
             i = end
             val txt = Html.decodeEntities(raw)
-            if (txt.nonEmpty) pending = Text(txt)
+            if (txt.nonEmpty) pending += Text(txt)
           }
         }
       }
